@@ -44,17 +44,25 @@ object SparkEntry {
       .coalesce(1)
       .write.mode("overwrite").partitionBy("__p").parquet(tmp.toString)
     ids.foreach { i =>
-      // Option-guard (ADVICE r18): partitionBy writes no __p=<i> dir for
-      // an id with no embeddings row — fail with a nameable message
-      // instead of an NPE from listFiles()
-      val part = Option(new java.io.File(s"$tmp/__p=$i").listFiles())
-        .getOrElse(throw new IllegalArgumentException(
-          s"query id $i has no row in embeddings — nothing staged"))
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, stage.resolve(s"q$i.parquet"))
+      java.nio.file.Files.move(stagedPart(tmp.toFile, i).toPath,
+        stage.resolve(s"q$i.parquet"))
     }
     stage.toString
   }
+
+  /** The one parquet part file that [[stageQueryFiles]]' partitioned
+    * write left under `__p=<i>`. partitionBy writes no directory for an
+    * id with no embeddings row (ADVICE r18), and a directory can hold no
+    * part file at all (a crashed or interrupted write): both fail with a
+    * named message instead of an NPE from `listFiles()` or a bare
+    * `NoSuchElementException` from `.head`. */
+  private[graft] def stagedPart(tmp: java.io.File, i: Int): java.io.File =
+    Option(new java.io.File(tmp, s"__p=$i").listFiles())
+      .getOrElse(throw new IllegalArgumentException(
+        s"query id $i has no row in embeddings — nothing staged"))
+      .find(_.getName.endsWith(".parquet"))
+      .getOrElse(throw new IllegalArgumentException(
+        s"query id $i: no parquet part file under __p=$i — nothing staged"))
 
   /** Shared DuckDB oracle prefix: the unrolled 2-iteration k-means fit of
     * [[Similarity.kmeansFit]] (salt "kmeans", sims rounded to 6,

@@ -327,9 +327,8 @@ object Lexical {
       stats: DataFrame)
 
   private def saveClustered(df: DataFrame, path: String, keys: Seq[String], buckets: Int): Unit =
-    df.repartition(buckets, keys.map(col): _*)
-      .sortWithinPartitions(keys.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
+    graft.sources.Store.writer(df.repartition(buckets, keys.map(col): _*)
+        .sortWithinPartitions(keys.map(col): _*))
       .option("compression", "zstd")
       .parquet(path)
 
@@ -395,7 +394,7 @@ object Lexical {
     deriveArtifacts(nDocs,
       (name, df, keys) => saveClustered(df, s"$dir/$name", keys, buckets),
       name => spark.read.parquet(s"$dir/$name"),
-      _.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/stats"),
+      st => graft.sources.Store.writer(st.coalesce(1)).parquet(s"$dir/stats"),
       post)
     readIndex(spark, dir)
   }
@@ -499,8 +498,9 @@ object Lexical {
     val p = spark.read.parquet(s"$dir/postings")
     saveClustered(p.groupBy(col("ch"), col("term")).agg(count(lit(1)).as("df")),
       s"$dir/docFreq", Seq("ch", "term"), buckets)
-    tagged.groupBy(col("ch")).agg(count(lit(1)).as("n"))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/stats")
+    graft.sources.Store.writer(tagged.groupBy(col("ch")).agg(count(lit(1)).as("n"))
+      .coalesce(1)).parquet(s"$dir/stats")
+    // read once: the derivation below and the returned index share frames
     val dfreq = spark.read.parquet(s"$dir/docFreq")
     val stats = spark.read.parquet(s"$dir/stats")
     val byDoc = Window.partitionBy(col("ch"), col("id"))
@@ -511,7 +511,8 @@ object Lexical {
         .withColumn("w", col("w") / sqrt(sum(col("w") * col("w")).over(byDoc)))
         .select(col("ch"), col("id"), col("term"), col("w")),
       s"$dir/vectors", Seq("ch", "term"), buckets)
-    readMultiIndex(spark, dir)
+    MultiSparseIndex(
+      vectors = spark.read.parquet(s"$dir/vectors"), docFreq = dfreq, stats = stats)
   }
 
   def readMultiIndex(spark: SparkSession, dir: String): MultiSparseIndex =
@@ -889,9 +890,8 @@ object Lexical {
   def writeBpe(
       spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
       numMerges: Int, dir: String): DataFrame = {
-    bpeFit(docs, idCol, textCol, numMerges)
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(s"$dir/bpe_merges")
+    graft.sources.Store.writeSingle(bpeFit(docs, idCol, textCol, numMerges),
+      s"$dir/bpe_merges")
     loadBpeMerges(spark, dir)
   }
 

@@ -65,19 +65,41 @@ object Mat {
     * the driver calls them sequentially). The threads only submit Spark
     * jobs; values are exactly what per-frame [[stageIfExpensive]]
     * returns. Callers must pass frames with NO dependency on each
-    * other's staged result. */
+    * other's staged result.
+    *
+    * Failure: the FIRST staging to fail is rethrown as itself (the
+    * `ExecutionException` wrapper is dropped, so callers see the same
+    * exception as a serial [[stageIfExpensive]]), and its siblings are
+    * stopped — their futures cancelled, the pool shut down, and their
+    * Spark jobs cancelled through a job tag private to this call (the
+    * caller's job group is left alone). */
   def stageAllIfExpensive(dfs: Seq[DataFrame]): Seq[DataFrame] =
     if (dfs.lengthCompare(2) < 0) dfs.map(stageIfExpensive)
     else {
+      val sc = dfs.head.sparkSession.sparkContext
+      val tag = s"graft-stage-${java.util.UUID.randomUUID()}"
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(dfs.size, 4))
+      val done = new java.util.concurrent.ExecutorCompletionService[DataFrame](pool)
       try {
         val futs = dfs.map { df =>
-          pool.submit(new java.util.concurrent.Callable[DataFrame] {
-            override def call(): DataFrame = stageIfExpensive(df)
-          })
+          done.submit { () =>
+            sc.addJobTag(tag) // a pool thread's own copy of the properties
+            stageIfExpensive(df)
+          }
+        }
+        // take in COMPLETION order, so the first failure surfaces while
+        // its siblings may still be running
+        futs.foreach { _ =>
+          try done.take().get()
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              futs.foreach(_.cancel(true))
+              sc.cancelJobsWithTag(tag)
+              throw e.getCause
+          }
         }
         futs.map(_.get())
-      } finally pool.shutdown()
+      } finally pool.shutdownNow()
     }
 }

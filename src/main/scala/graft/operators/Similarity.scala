@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorOps
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dense similarity search (the reference's J1: 1xd query vs Nxd corpus exact
@@ -172,270 +172,276 @@ object Similarity {
       trainSampleRows: Option[Long] = None,
       coarseHierarchyMinNlist: Int = HierarchyMinNlist,
       coarseGroups: Int = 0,
-      coarseLloydIters: Int = 4): DenseIndex = {
-    val spark = emb.sparkSession
-    var counted: Option[Long] = None
-    def nRows: Long = counted.getOrElse {
-      val c = emb.count(); counted = Some(c); c
-    }
-    val p = params.getOrElse {
-      val m = emb.select(count(lit(1)).as("n"), max(size(col(vecCol))).as("d")).head()
-      counted = Some(m.getLong(0))
-      IvfParams.auto(m.getLong(0), if (m.isNullAt(1)) 0 else m.getInt(1))
-    }
-    // FAISS-style BOUNDED TRAINING SAMPLE (faiss clamps k-means training
-    // at ~256 points/centroid and warns below ~39/centroid): the TRAINED
-    // artifacts — coarse centroids, OPQ rotation, PQ codebooks — are
-    // statistics of the corpus distribution, so fitting them on a
-    // deterministic hash sample of ~trainSampleRows rows loses nothing at
-    // scale while cutting every Lloyd pass from corpus-sized to
-    // sample-sized; the FULL corpus still flows through assignment,
-    // encode, int8 and radii (those are per-row artifacts, not
-    // statistics). The sample is a map-only hash-threshold filter — no
-    // sort, no shuffle, reproducible (same id space -> same sample), and
-    // a target >= N degenerates to the full corpus (SampledTrainSpec
-    // pins that the degenerate build is bit-identical to an unsampled
-    // one). The default target is [[IvfParams.autoTrainSample]] (r14);
-    // explicit callers should pass >= 39 x max(nlist, numCentroids) — the
-    // published FAISS floor.
-    // GRAFT_BUILD_TIMING=1 prints per-phase walls to stderr — the probe
-    // instrumentation that attributes the production build's wall to its
-    // legs (training vs corpus-bound assign/encode/int8/radii/writes)
-    // without touching the artifact outputs
-    var phaseT = System.nanoTime()
-    def phaseMark(name: String): Unit = {
-      val now = System.nanoTime()
-      if (sys.env.contains("GRAFT_BUILD_TIMING"))
-        System.err.println(
-          f"[buildDenseIndex] $name: ${(now - phaseT) / 1e9}%.1f s")
-      phaseT = now
-    }
-    // r14: the sample target defaults to [[IvfParams.autoTrainSample]] —
-    // callers stop hand-picking; pass Some(Long.MaxValue) to force an
-    // unsampled build. Small corpora (N <= 400k) always train unsampled.
-    val target = trainSampleRows.getOrElse(p.autoTrainSample)
-    require(target >= math.max(p.nlist, p.numCentroids),
-      s"training sample $target smaller than the largest codebook " +
-        s"(nlist=${p.nlist}, numCentroids=${p.numCentroids})")
-    val trainDf =
-      if (target >= nRows) emb
-      else {
-        val cut = (target.toDouble / nRows * (1L << 60)).toLong
-        val sampled = emb.filter(graft.operators.Dedup.hash60(
-          concat(lit("trainsample:"), col(idCol).cast("string"))) < lit(cut))
-        // the hash-threshold filter is BINOMIAL in what it admits: the
-        // REALIZED sample can undershoot the requested target, and on a
-        // corpus barely above the codebook floor it can fall below
-        // max(nlist, numCentroids) even when the request clears it —
-        // kmeansFit would then silently init fewer centroids than the
-        // configured geometry. Count the realized sample (one map-only
-        // pass, build-time only) and fall back to the full corpus when it
-        // is under the floor.
-        val realized = sampled.count()
-        if (realized < math.max(p.nlist, p.numCentroids)) emb else sampled
+      coarseLloydIters: Int = 4): DenseIndex =
+    withJobPhases(emb.sparkSession, "buildDenseIndex") { phase =>
+      val spark = emb.sparkSession
+      // every leg starts with `phase(...)`, which names its Spark jobs (job
+      // description "buildDenseIndex: <leg>"), so a listener attributes the
+      // build's wall to training vs the corpus-bound assign/encode/int8/
+      // radii/writes without touching the artifact outputs
+      phase("geometry + training sample")
+      var counted: Option[Long] = None
+      def nRows: Long = counted.getOrElse {
+        val c = emb.count(); counted = Some(c); c
       }
-    val cents = kmeansFit(trainDf, p.nlist, p.lloydIters, idCol, vecCol)
-    cents.coalesce(1).write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(s"$outDir/centroids")
-    cents.unpersist() // kmeansFit's contract: the caller owns the frame
-    phaseMark("coarse kmeans fit + centroid write")
-    val centArt = spark.read.parquet(s"$outDir/centroids")
-    // TWO-LEVEL coarse hierarchy (VERDICT r15 #1): past the nlist
-    // threshold the flat centroid collect stops being driver-safe, so the
-    // build emits the l1/l2 artifact ([[buildCoarseHierarchy]] — a
-    // kmeans over the nlist centroids, sqrt(nlist)-row L1 + gid-
-    // partitioned L2) and the facade serves through
-    // [[probeCellsTwoLevel]]. Below the threshold nothing is written and
-    // serving stays flat (exact, cheaper).
-    val hierArt =
-      if (p.nlist < coarseHierarchyMinNlist) None
-      else Some(buildCoarseHierarchy(centArt, outDir, coarseGroups,
-        coarseLloydIters))
-    if (hierArt.isDefined) phaseMark("coarse hierarchy fit + l1/l2 write")
-    // same dispatch as the kmeansFit iterations: packed only at coarse
-    // nlist — the packed HOF argmax is interpreted per row and at
-    // IVF-scale nlist it dominates the build (RecallScaleProbe r12).
-    // Past the hierarchy threshold the corpus assigns THROUGH the
-    // hierarchy ([[assignCellsHierarchical]], VERDICT r16 #3): the flat
-    // argmax at nlist≈10⁵ costs ~25x the IMI-style two-stage assign
-    // (BigNlistProbe), and calibration below measures recall over the
-    // cells as LANDED, so the IMI approximation is priced in.
-    val assigned = hierArt match {
-      case Some((l1a, l2a)) => assignCellsHierarchical(emb, l1a, l2a, vecCol)
-      case None =>
-        if (p.nlist <= 64) assignCells(emb, centArt, vecCol)
-        else if (p.nlist <= (1 << 16)) assignCellsBulk(emb, centArt, vecCol)
-        else assignCellsChunked(emb, centArt, vecCol)
-    }
-    // writeClustered, not writePartitioned: a direct dynamic-partition
-    // write of an nlist-cardinality column emits a file per (task, cell)
-    // pair — ~78k files at the flagship geometry, measured 8x slower to
-    // write and 24x slower for every downstream leg's scan (WriteProbe,
-    // BASELINE.md r14). One hash shuffle on the cell id buys ~1 file/cell.
-    graft.sources.Store.writeClustered(assigned, s"$outDir/cells", "cluster")
-    phaseMark("full-corpus assign + cells write")
-    // OPQ-STYLE rotation (FAISS OPQMatrix analog, Ge et al. 2013): fit the
-    // full-d principal basis ONCE ([[pcaTopComponents]] — its own doc
-    // comment calls this the OPQ rotation estimate), persist it as the
-    // `rotation` artifact, and train/encode PQ in the ROTATED coordinates.
-    // Rotation is orthogonal so inner products are unchanged (parity
-    // spec-pinned in OpqSpec); what changes is where the variance lands —
-    // PCA packs it into the leading coordinates instead of leaving
-    // correlated structure straddling subspace boundaries, so the same
-    // code budget quantizes tighter (measured distortion drop, OpqSpec /
-    // BASELINE.md). IVF geometry (centroids/cells) stays in the raw
-    // coordinates — only the PQ stage rotates; serving rotates the query
-    // through [[pqAdcScoreRotated]]. At d=768 the fit is a build-once
-    // driver cost over the d²-row Gram — run it on a hash sample like the
-    // PCA fit itself.
-    val rotArt = opqRotateIters.map { it =>
-      pcaTopComponents(trainDf, vecCol, m = p.numSub * p.subDim, iters = it)
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(s"$outDir/rotation")
-      spark.read.parquet(s"$outDir/rotation")
-    }
-    // collect the m×d component matrix ONCE; both rotate applications
-    // (PQ train sample + cell-store encode source) reuse it
-    val rotCoefs = rotArt.map(rot =>
-      rotationCoefs(rot, Some((p.numSub, p.subDim))))
-    val pqTrain = rotCoefs.fold(trainDf.select(col(idCol), col(vecCol)))(cs =>
-      rotateVectorsPrepared(trainDf.select(col(idCol), col(vecCol)), cs, vecCol))
-    val cbr = pqRefineCodebooks(
-      pqTrain, pqCodebooks(pqTrain, p.numSub, p.subDim, p.numCentroids, idCol, vecCol),
-      p.numSub, p.subDim, iters = p.pqIters, idCol = idCol, vecCol = vecCol)
-    cbr.coalesce(1).write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(s"$outDir/codebooks")
-    cbr.unpersist() // pqRefineCodebooks' contract: caller owns the frame
-    phaseMark("PQ codebook train (+ rotation fit)")
-    val encodeSrc = rotCoefs.fold(spark.read.parquet(s"$outDir/cells"))(cs =>
-      rotateVectorsPrepared(spark.read.parquet(s"$outDir/cells"), cs, vecCol))
-    // the codes/int8 writes below stay DIRECT (no repartition): they scan
-    // the now-CLUSTERED cells store (~1 file per cell), so each cell's
-    // rows arrive in one scan task and the dynamic-partition write emits
-    // ~nlist files total — the repartition would re-shuffle the corpus
-    // for a file count the upstream layout already guarantees
-    graft.sources.Store.writePartitioned(
-      pqEncode(encodeSrc,
-        spark.read.parquet(s"$outDir/codebooks"), p.numSub, p.subDim,
-        idCol, vecCol, carry = Seq("cluster")),
-      s"$outDir/codes", "cluster")
-    phaseMark("full-corpus PQ encode + codes write")
-    // per-(cell, attribute) admissible-count histogram: nlist x |attr| rows
-    // (coarse-quantizer scale), written once so adaptive probe PLANNING
-    // reads this instead of a per-request corpus pass
-    val statsArt = if (statsCols.isEmpty) None else {
-      cellStats(spark.read.parquet(s"$outDir/cells"), statsCols)
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(s"$outDir/cellstats")
-      Some(spark.read.parquet(s"$outDir/cellstats"))
-    }
-    // per-cell radii: nlist rows, one corpus pass — the exact cell-skip
-    // bound for range (radius) serving ([[ivfRangeSearchPruned]]).
-    // vecCol must thread through: a build over a non-default vector
-    // column ("clip") crashed here until the r13 serve-mix bench hit it
-    cellRadii(spark.read.parquet(s"$outDir/cells"),
-        spark.read.parquet(s"$outDir/centroids"), vecCol)
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(s"$outDir/radii")
-    phaseMark("cellstats + radii")
-    // SQ8 store: the byte-per-dim serving artifact for the scalar-
-    // quantized two-stage path ([[ivfInt8RefineSearch]]) — same cell
-    // partitioning, 4x less scan IO than the float cells
-    graft.sources.Store.writePartitioned(
-      int8EncodeCells(spark.read.parquet(s"$outDir/cells"), idCol, vecCol,
-        "cluster"),
-      s"$outDir/int8", "cluster")
-    phaseMark("int8 encode + write")
-    // binary signature store: 1 bit/dim packed into BIGINT words — the
-    // smallest coarse-scan artifact (32x under float, 8x under SQ8),
-    // served two-stage by [[ivfBinaryRefineSearch]]; same cell
-    // partitioning, so the scan prunes identically
-    graft.sources.Store.writePartitioned(
-      binaryEncodeCells(spark.read.parquet(s"$outDir/cells"), idCol, vecCol,
-        "cluster"),
-      s"$outDir/bin", "cluster")
-    phaseMark("binary encode + write")
-    // serving default: RECALL-CALIBRATED against the just-persisted
-    // artifacts when a target is given (the static nlist/16 rule is
-    // corpus-blind — on an unclusterable or tiny geometry it can ship a
-    // default that silently serves bad recall), else the static rule.
-    // Persisted with the geometry as the 1-row `params` artifact so the
-    // committed default is part of the index, not a caller-side constant.
-    val cellsArt = spark.read.parquet(s"$outDir/cells")
-    val centArt2 = spark.read.parquet(s"$outDir/centroids")
-    val binArt = spark.read.parquet(s"$outDir/bin")
-    val (np, kcBq, npL1) = calibrateRecall match {
-      case Some(target) =>
-        val sample = emb
-          .select(col(idCol), col(vecCol), graft.operators.Dedup.hash60(
-            concat(lit("cal:"), col(idCol).cast("string"))).as("__h"))
-          .orderBy(col("__h"), col(idCol)).limit(calibrateQueries)
-          .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"))
-        // the exact truth sets cost one full-corpus batch scan — compute
-        // once, share across all calibrations
-        val truth = calibrationTruth(cellsArt, sample, calibrateK,
-          idCol, vecCol)
-        // when the hierarchy exists, calibrate the (nprobeL1, nprobe)
-        // pair JOINTLY (VERDICT r16 #7): the two knobs trade off and the
-        // recall surface has non-monotone cross terms, so fixing nprobe
-        // at the flat optimum first and searching nprobeL1 second can
-        // land a costlier pair than the target needs — the joint sweep
-        // picks the min-serving-cost pair on the measured surface.
-        // Hierarchy-less builds keep the single-axis flat calibration.
-        val pair = hierArt.map { case (l1a, l2a) =>
-          calibrateNprobePair(cellsArt, l1a, l2a, sample, calibrateK,
-            target, nRows, idCol, vecCol, truth = Some(truth))
+      val p = params.getOrElse {
+        val m = emb.select(count(lit(1)).as("n"), max(size(col(vecCol))).as("d")).head()
+        counted = Some(m.getLong(0))
+        IvfParams.auto(m.getLong(0), if (m.isNullAt(1)) 0 else m.getInt(1))
+      }
+      // FAISS-style BOUNDED TRAINING SAMPLE (faiss clamps k-means training
+      // at ~256 points/centroid and warns below ~39/centroid): the TRAINED
+      // artifacts — coarse centroids, OPQ rotation, PQ codebooks — are
+      // statistics of the corpus distribution, so fitting them on a
+      // deterministic hash sample of ~trainSampleRows rows loses nothing at
+      // scale while cutting every Lloyd pass from corpus-sized to
+      // sample-sized; the FULL corpus still flows through assignment,
+      // encode, int8 and radii (those are per-row artifacts, not
+      // statistics). The sample is a map-only hash-threshold filter — no
+      // sort, no shuffle, reproducible (same id space -> same sample), and
+      // a target >= N degenerates to the full corpus (SampledTrainSpec
+      // pins that the degenerate build is bit-identical to an unsampled
+      // one). The default target is [[IvfParams.autoTrainSample]] (r14);
+      // explicit callers should pass >= 39 x max(nlist, numCentroids) — the
+      // published FAISS floor.
+      // r14: the sample target defaults to [[IvfParams.autoTrainSample]] —
+      // callers stop hand-picking; pass Some(Long.MaxValue) to force an
+      // unsampled build. Small corpora (N <= 400k) always train unsampled.
+      val target = trainSampleRows.getOrElse(p.autoTrainSample)
+      require(target >= math.max(p.nlist, p.numCentroids),
+        s"training sample $target smaller than the largest codebook " +
+          s"(nlist=${p.nlist}, numCentroids=${p.numCentroids})")
+      val trainDf =
+        if (target >= nRows) emb
+        else {
+          val cut = (target.toDouble / nRows * (1L << 60)).toLong
+          val sampled = emb.filter(graft.operators.Dedup.hash60(
+            concat(lit("trainsample:"), col(idCol).cast("string"))) < lit(cut))
+          // the hash-threshold filter is BINOMIAL in what it admits: the
+          // REALIZED sample can undershoot the requested target, and on a
+          // corpus barely above the codebook floor it can fall below
+          // max(nlist, numCentroids) even when the request clears it —
+          // kmeansFit would then silently init fewer centroids than the
+          // configured geometry. Count the realized sample (one map-only
+          // pass, build-time only) and fall back to the full corpus when it
+          // is under the floor.
+          val realized = sampled.count()
+          if (realized < math.max(p.nlist, p.numCentroids)) emb else sampled
         }
-        val npServe = pair.map(_._2).getOrElse(
-          calibrateNprobe(cellsArt, centArt2, sample, calibrateK,
-            target, idCol, vecCol, truth = Some(truth)))
-        // kCoarse for the 1-bit store is calibrated AT the probe shape
-        // that will actually serve — the (nprobeL1, nprobe) pair through
-        // the hierarchy when one exists (ADVICE r17: a flat-probe
-        // measurement certifies a different cell set than the partial-L1
-        // serving probe opens), flat nprobe otherwise — so the persisted
-        // (default_nprobe_l1, default_nprobe, default_kcoarse_bq) triple
-        // serves the target together, reachable by construction
-        // (see [[calibrateKCoarseBinary]])
-        val kc = calibrateKCoarseBinary(binArt, cellsArt, centArt2, sample,
-          npServe, calibrateK, target, nRows, idCol, vecCol,
-          truth = Some(truth), hierarchy = hierArt,
-          nprobeL1 = pair.map(_._1))
-        (npServe, Some(kc), pair.map(_._1))
-      case None =>
-        // uncalibrated hierarchy serves FULL level-1 probe (bit-parity
-        // with the flat probe) — safe by construction, no measured knob
-        (p.defaultNprobe, None, hierArt.map(_._1.count().toInt))
+      phase("coarse kmeans fit + centroids write")
+      val cents = kmeansFit(trainDf, p.nlist, p.lloydIters, idCol, vecCol)
+      graft.sources.Store.writeSingle(cents, s"$outDir/centroids")
+      cents.unpersist() // kmeansFit's contract: the caller owns the frame
+      // each persisted store is READ ONCE and the frame reused by every
+      // later leg and by the returned index: a read of a partitioned store
+      // lists its files (for a 179-cell store, a 179-task listing job of
+      // ~1 s at local[4]), and re-reading `cells` per leg paid that 5x
+      val centArt = spark.read.parquet(s"$outDir/centroids")
+      // TWO-LEVEL coarse hierarchy (VERDICT r15 #1): past the nlist
+      // threshold the flat centroid collect stops being driver-safe, so the
+      // build emits the l1/l2 artifact ([[buildCoarseHierarchy]] — a
+      // kmeans over the nlist centroids, sqrt(nlist)-row L1 + gid-
+      // partitioned L2) and the facade serves through
+      // [[probeCellsTwoLevel]]. Below the threshold nothing is written and
+      // serving stays flat (exact, cheaper).
+      val hierArt =
+        if (p.nlist < coarseHierarchyMinNlist) None
+        else {
+          phase("coarse hierarchy fit + l1/l2 write")
+          Some(buildCoarseHierarchy(centArt, outDir, coarseGroups,
+            coarseLloydIters))
+        }
+      phase("full-corpus assign + cells write")
+      // same dispatch as the kmeansFit iterations: packed only at coarse
+      // nlist — the packed HOF argmax is interpreted per row and at
+      // IVF-scale nlist it dominates the build (RecallScaleProbe r12).
+      // Past the hierarchy threshold the corpus assigns THROUGH the
+      // hierarchy ([[assignCellsHierarchical]], VERDICT r16 #3): the flat
+      // argmax at nlist≈10⁵ costs ~25x the IMI-style two-stage assign
+      // (BigNlistProbe), and calibration below measures recall over the
+      // cells as LANDED, so the IMI approximation is priced in.
+      val assigned = hierArt match {
+        case Some((l1a, l2a)) => assignCellsHierarchical(emb, l1a, l2a, vecCol)
+        case None =>
+          if (p.nlist <= 64) assignCells(emb, centArt, vecCol)
+          else if (p.nlist <= (1 << 16)) assignCellsBulk(emb, centArt, vecCol)
+          else assignCellsChunked(emb, centArt, vecCol)
+      }
+      // writeClustered, not writePartitioned: a direct dynamic-partition
+      // write of an nlist-cardinality column emits a file per (task, cell)
+      // pair — ~78k files at the flagship geometry, measured 8x slower to
+      // write and 24x slower for every downstream leg's scan (WriteProbe,
+      // BASELINE.md r14). One hash shuffle on the cell id buys ~1 file/cell.
+      graft.sources.Store.writeClustered(assigned, s"$outDir/cells", "cluster")
+      val cellsArt = spark.read.parquet(s"$outDir/cells")
+      phase("PQ codebook train (+ rotation fit)")
+      // OPQ-STYLE rotation (FAISS OPQMatrix analog, Ge et al. 2013): fit the
+      // full-d principal basis ONCE ([[pcaTopComponents]] — its own doc
+      // comment calls this the OPQ rotation estimate), persist it as the
+      // `rotation` artifact, and train/encode PQ in the ROTATED coordinates.
+      // Rotation is orthogonal so inner products are unchanged (parity
+      // spec-pinned in OpqSpec); what changes is where the variance lands —
+      // PCA packs it into the leading coordinates instead of leaving
+      // correlated structure straddling subspace boundaries, so the same
+      // code budget quantizes tighter (measured distortion drop, OpqSpec /
+      // BASELINE.md). IVF geometry (centroids/cells) stays in the raw
+      // coordinates — only the PQ stage rotates; serving rotates the query
+      // through [[pqAdcScoreRotated]]. At d=768 the fit is a build-once
+      // driver cost over the d²-row Gram — run it on a hash sample like the
+      // PCA fit itself.
+      val rotArt = opqRotateIters.map { it =>
+        graft.sources.Store.writeSingle(
+          pcaTopComponents(trainDf, vecCol, m = p.numSub * p.subDim, iters = it),
+          s"$outDir/rotation")
+        spark.read.parquet(s"$outDir/rotation")
+      }
+      // collect the m×d component matrix ONCE; both rotate applications
+      // (PQ train sample + cell-store encode source) reuse it
+      val rotCoefs = rotArt.map(rot =>
+        rotationCoefs(rot, Some((p.numSub, p.subDim))))
+      val pqTrain = rotCoefs.fold(trainDf.select(col(idCol), col(vecCol)))(cs =>
+        rotateVectorsPrepared(trainDf.select(col(idCol), col(vecCol)), cs, vecCol))
+      val cbr = pqRefineCodebooks(
+        pqTrain, pqCodebooks(pqTrain, p.numSub, p.subDim, p.numCentroids, idCol, vecCol),
+        p.numSub, p.subDim, iters = p.pqIters, idCol = idCol, vecCol = vecCol)
+      graft.sources.Store.writeSingle(cbr, s"$outDir/codebooks")
+      cbr.unpersist() // pqRefineCodebooks' contract: caller owns the frame
+      val cbArt = spark.read.parquet(s"$outDir/codebooks")
+      phase("full-corpus PQ encode + codes write")
+      val encodeSrc = rotCoefs.fold(cellsArt)(cs =>
+        rotateVectorsPrepared(cellsArt, cs, vecCol))
+      // the codes/int8 writes below stay DIRECT (no repartition): they scan
+      // the now-CLUSTERED cells store (~1 file per cell), so each cell's
+      // rows arrive in one scan task and the dynamic-partition write emits
+      // ~nlist files total — the repartition would re-shuffle the corpus
+      // for a file count the upstream layout already guarantees
+      graft.sources.Store.writePartitioned(
+        pqEncode(encodeSrc, cbArt, p.numSub, p.subDim,
+          idCol, vecCol, carry = Seq("cluster")),
+        s"$outDir/codes", "cluster")
+      phase("cellstats + radii")
+      // per-(cell, attribute) admissible-count histogram: nlist x |attr| rows
+      // (coarse-quantizer scale), written once so adaptive probe PLANNING
+      // reads this instead of a per-request corpus pass
+      val statsArt = if (statsCols.isEmpty) None else {
+        graft.sources.Store.writeSingle(cellStats(cellsArt, statsCols),
+          s"$outDir/cellstats")
+        Some(spark.read.parquet(s"$outDir/cellstats"))
+      }
+      // per-cell radii: nlist rows, one corpus pass — the exact cell-skip
+      // bound for range (radius) serving ([[ivfRangeSearchPruned]]).
+      // vecCol must thread through: a build over a non-default vector
+      // column ("clip") crashed here until the r13 serve-mix bench hit it
+      graft.sources.Store.writeSingle(cellRadii(cellsArt, centArt, vecCol),
+        s"$outDir/radii")
+      phase("int8 encode + write")
+      // SQ8 store: the byte-per-dim serving artifact for the scalar-
+      // quantized two-stage path ([[ivfInt8RefineSearch]]) — same cell
+      // partitioning, 4x less scan IO than the float cells
+      graft.sources.Store.writePartitioned(
+        int8EncodeCells(cellsArt, idCol, vecCol, "cluster"),
+        s"$outDir/int8", "cluster")
+      phase("binary encode + write")
+      // binary signature store: 1 bit/dim packed into BIGINT words — the
+      // smallest coarse-scan artifact (32x under float, 8x under SQ8),
+      // served two-stage by [[ivfBinaryRefineSearch]]; same cell
+      // partitioning, so the scan prunes identically
+      graft.sources.Store.writePartitioned(
+        binaryEncodeCells(cellsArt, idCol, vecCol, "cluster"),
+        s"$outDir/bin", "cluster")
+      phase("recall calibration")
+      // serving default: RECALL-CALIBRATED against the just-persisted
+      // artifacts when a target is given (the static nlist/16 rule is
+      // corpus-blind — on an unclusterable or tiny geometry it can ship a
+      // default that silently serves bad recall), else the static rule.
+      // Persisted with the geometry as the 1-row `params` artifact so the
+      // committed default is part of the index, not a caller-side constant.
+      val binArt = spark.read.parquet(s"$outDir/bin")
+      val (np, kcBq, npL1) = calibrateRecall match {
+        case Some(target) =>
+          val sample = emb
+            .select(col(idCol), col(vecCol), graft.operators.Dedup.hash60(
+              concat(lit("cal:"), col(idCol).cast("string"))).as("__h"))
+            .orderBy(col("__h"), col(idCol)).limit(calibrateQueries)
+            .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"))
+          // the exact truth sets cost one full-corpus batch scan — compute
+          // once, share across all calibrations
+          val truth = calibrationTruth(cellsArt, sample, calibrateK,
+            idCol, vecCol)
+          // when the hierarchy exists, calibrate the (nprobeL1, nprobe)
+          // pair JOINTLY (VERDICT r16 #7): the two knobs trade off and the
+          // recall surface has non-monotone cross terms, so fixing nprobe
+          // at the flat optimum first and searching nprobeL1 second can
+          // land a costlier pair than the target needs — the joint sweep
+          // picks the min-serving-cost pair on the measured surface.
+          // Hierarchy-less builds keep the single-axis flat calibration.
+          val pair = hierArt.map { case (l1a, l2a) =>
+            calibrateNprobePair(cellsArt, l1a, l2a, sample, calibrateK,
+              target, nRows, idCol, vecCol, truth = Some(truth))
+          }
+          val npServe = pair.map(_._2).getOrElse(
+            calibrateNprobe(cellsArt, centArt, sample, calibrateK,
+              target, idCol, vecCol, truth = Some(truth)))
+          // kCoarse for the 1-bit store is calibrated AT the probe shape
+          // that will actually serve — the (nprobeL1, nprobe) pair through
+          // the hierarchy when one exists (ADVICE r17: a flat-probe
+          // measurement certifies a different cell set than the partial-L1
+          // serving probe opens), flat nprobe otherwise — so the persisted
+          // (default_nprobe_l1, default_nprobe, default_kcoarse_bq) triple
+          // serves the target together, reachable by construction
+          // (see [[calibrateKCoarseBinary]])
+          val kc = calibrateKCoarseBinary(binArt, cellsArt, centArt, sample,
+            npServe, calibrateK, target, nRows, idCol, vecCol,
+            truth = Some(truth), hierarchy = hierArt,
+            nprobeL1 = pair.map(_._1))
+          (npServe, Some(kc), pair.map(_._1))
+        case None =>
+          // uncalibrated hierarchy serves FULL level-1 probe (bit-parity
+          // with the flat probe) — safe by construction, no measured knob
+          (p.defaultNprobe, None, hierArt.map(_._1.count().toInt))
+      }
+      phase("params write")
+      graft.sources.Store.writer(spark.range(1).select(
+        lit(p.nlist).as("nlist"), lit(p.numSub).as("num_sub"),
+        lit(p.subDim).as("sub_dim"), lit(p.numCentroids).as("num_centroids"),
+        lit(np).as("default_nprobe"),
+        kcBq.map(lit).getOrElse(lit(null).cast("int"))
+          .as("default_kcoarse_bq"),
+        npL1.map(lit).getOrElse(lit(null).cast("int"))
+          .as("default_nprobe_l1"),
+        calibrateRecall.map(lit).getOrElse(lit(null).cast("double"))
+          .as("target_recall")).coalesce(1))
+        .parquet(s"$outDir/params")
+      DenseIndex(
+        centroids = centArt,
+        cells = cellsArt,
+        codebooks = cbArt,
+        codes = spark.read.parquet(s"$outDir/codes"),
+        cellStats = statsArt,
+        defaultNprobe = Some(np),
+        radii = Some(spark.read.parquet(s"$outDir/radii")),
+        int8 = Some(spark.read.parquet(s"$outDir/int8")),
+        rotation = rotArt,
+        binary = Some(binArt),
+        defaultKCoarseBq = kcBq,
+        l1 = hierArt.map(_._1),
+        l2 = hierArt.map(_._2),
+        defaultNprobeL1 = npL1,
+        numSub = p.numSub,
+        subDim = p.subDim)
     }
-    phaseMark("recall calibration")
-    spark.range(1).select(
-      lit(p.nlist).as("nlist"), lit(p.numSub).as("num_sub"),
-      lit(p.subDim).as("sub_dim"), lit(p.numCentroids).as("num_centroids"),
-      lit(np).as("default_nprobe"),
-      kcBq.map(lit).getOrElse(lit(null).cast("int"))
-        .as("default_kcoarse_bq"),
-      npL1.map(lit).getOrElse(lit(null).cast("int"))
-        .as("default_nprobe_l1"),
-      calibrateRecall.map(lit).getOrElse(lit(null).cast("double"))
-        .as("target_recall"))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/params")
-    DenseIndex(
-      centroids = centArt2,
-      cells = cellsArt,
-      codebooks = spark.read.parquet(s"$outDir/codebooks"),
-      codes = spark.read.parquet(s"$outDir/codes"),
-      cellStats = statsArt,
-      defaultNprobe = Some(np),
-      radii = Some(spark.read.parquet(s"$outDir/radii")),
-      int8 = Some(spark.read.parquet(s"$outDir/int8")),
-      rotation = rotArt,
-      binary = Some(binArt),
-      defaultKCoarseBq = kcBq,
-      l1 = hierArt.map(_._1),
-      l2 = hierArt.map(_._2),
-      defaultNprobeL1 = npL1,
-      numSub = p.numSub,
-      subDim = p.subDim)
+
+  /** Runs `body` with a `phase` callback that names the Spark jobs started
+    * after it: `phase(leg)` sets the job description to `<what>: <leg>`,
+    * so a listener can tell which leg of a multi-job build every job
+    * belongs to. The caller's description is restored afterwards; the
+    * job group is never touched (callers and tracers own it). */
+  private def withJobPhases[A](spark: SparkSession, what: String)(
+      body: (String => Unit) => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    try body(leg => sc.setJobDescription(s"$what: $leg"))
+    finally sc.setLocalProperty("spark.job.description", prev)
   }
 
   /** BUILD-TIME nprobe calibration: the smallest nprobe whose measured
@@ -938,13 +944,15 @@ object Similarity {
       emb: DataFrame, init: DataFrame, numSub: Int, subDim: Int,
       iters: Int = 1,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      coordRound: Int = 8, maxJoinPairs: Int = 2048): DataFrame = {
+      coordRound: Int = 8, maxJoinPairs: Int = 1024): DataFrame = {
     var cb = init
     var toFree: Option[DataFrame] = None
     for (_ <- 1 to iters) {
       // same dispatch as [[pqEncode]]: past oracle geometry the join
-      // form's numSub x K rows per vector dominate each Lloyd pass, so
-      // the assignment routes through the bulk kernel (bit-identical
+      // form's numSub x K rows per vector dominate each Lloyd pass (the
+      // d=64 auto geometry's 8 x 256 makes 4.1M intermediate rows per
+      // pass over 2k vectors), so the assignment
+      // routes through the bulk kernel (bit-identical
       // (m, c, sv) stream — PqEncodeSpec pins refine parity). As in
       // pqEncode, the dispatch collect doubles as the join route's
       // broadcast side so iteration 1's (unpersisted) init plan is not
@@ -998,17 +1006,21 @@ object Similarity {
   def pqEncode(
       emb: DataFrame, codebooks: DataFrame, numSub: Int, subDim: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      carry: Seq[String] = Nil, maxJoinPairs: Int = 2048): DataFrame = {
+      carry: Seq[String] = Nil, maxJoinPairs: Int = 1024): DataFrame = {
     // dispatch on per-row argmin work (mirrors the kmeansFit assignment
     // dispatch): the join form materializes numSub x K intermediate rows
     // per vector before the partial min collapses them — fine at oracle
-    // geometry (8x16 = 128 pairs/row), ruinous at FAISS-production
-    // geometry (96 x 256 = 24,576 pairs/row). The codebook row count is
-    // probed with a bounded collect — it is the broadcast-small build
-    // artifact by contract (M x K rows), so this is centroid-sized. The
-    // collected rows feed BOTH routes (the join route rebuilds its
-    // broadcast side from them as a local relation), so a possibly
-    // unpersisted codebook plan is computed exactly once (ADVICE r12).
+    // geometry (8x16 = 128 pairs/row, and every oracle geometry stays at
+    // <= 128), ruinous at FAISS-production geometry (96 x 256 = 24,576
+    // pairs/row). The bound is 1,024 so that the d=64 auto geometry
+    // ([[IvfParams.auto]]: 8 x 256 = 2,048 rows) takes the bulk kernel;
+    // as a join it made 4.1M intermediate rows for 2k vectors. The
+    // codebook row count is probed with a bounded collect — it is the
+    // broadcast-small build artifact by contract (M x K rows), so this
+    // is centroid-sized. The collected rows feed BOTH routes (the join
+    // route rebuilds its broadcast side from them as a local relation),
+    // so a possibly unpersisted codebook plan is computed exactly once
+    // (ADVICE r12).
     val proj = codebooks.select(col("m"), col("c"), col("cbv"))
     val cbRows = proj.collect()
     if (cbRows.length <= maxJoinPairs)
@@ -2588,9 +2600,8 @@ object Similarity {
     val l1Fit = kmeansFit(
       centroids.select(col(clusterCol).as("__cid"), col("cv").as("__cv")),
       g, lloydIters, idCol = "__cid", vecCol = "__cv", salt = "coarse2")
-    l1Fit.select(col("cluster").as("gid"), col("cv").as("gv"))
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(s"$outDir/l1")
+    graft.sources.Store.writeSingle(
+      l1Fit.select(col("cluster").as("gid"), col("cv").as("gv")), s"$outDir/l1")
     l1Fit.unpersist()
     val l1 = spark.read.parquet(s"$outDir/l1")
     // tag every level-2 centroid with its nearest group — the same

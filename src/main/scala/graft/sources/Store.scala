@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Physical storage layout for the corpus tables — where the 100 TB design
@@ -18,10 +18,31 @@ import org.apache.spark.sql.functions._
   */
 object Store {
 
+  /** Hadoop options, scoped to ONE write, that route its `file:` paths
+    * through [[ForkFreeLocalFileSystem]] (no `chmod` fork per created file,
+    * `.crc` and directory). Disabling the `file:` cache for the write's
+    * conf is what makes the per-write `fs.file.impl` take effect: the
+    * cache is keyed by scheme and user, not by conf, and would hand back
+    * the stock instance. Other schemes ignore both keys. */
+  private val LocalWriteOptions = Map(
+    "fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** `df.write` in overwrite mode with [[LocalWriteOptions]]: the one
+    * writer every store write here goes through. Callers add the format
+    * options (compression, partitioning) and the sink. */
+  def writer(df: DataFrame): DataFrameWriter[Row] =
+    df.write.mode(SaveMode.Overwrite).options(LocalWriteOptions)
+
+  /** Single-file ZSTD parquet write of a small artifact (centroids,
+    * codebooks, radii, per-cell stats). */
+  def writeSingle(df: DataFrame, path: String): Unit =
+    writer(df.coalesce(1)).option("compression", "zstd").parquet(path)
+
   /** Partitioned parquet write (ZSTD). `partitionCols` should be the pruning
     * dimension(s): collection, cluster id. */
   def writePartitioned(df: DataFrame, path: String, partitionCols: String*): Unit =
-    df.write.mode(SaveMode.Overwrite)
+    writer(df)
       .option("compression", "zstd")
       .partitionBy(partitionCols: _*)
       .parquet(path)
@@ -38,9 +59,20 @@ object Store {
     * one-pass — an order of magnitude cheaper than the file-commit storm
     * it replaces. Skew note: one task per hot cell is the write-side
     * trade; build-time cell splitting ([[graft.operators.Similarity
-    * .splitOversizedCells]]) bounds it where cell populations are Zipfy. */
+    * .splitOversizedCells]]) bounds it where cell populations are Zipfy.
+    *
+    * The partition count is EXPLICIT (the session's
+    * `spark.sql.shuffle.partitions`, the count a bare `repartition(col)`
+    * starts from): AQE coalesces a column-only repartition of a small
+    * corpus to 1-2 tasks, which then write every cell file almost
+    * serially, and it never coalesces an explicit count. Same hash, same
+    * count, so each cell still lands in exactly one task and one file. */
   def writeClustered(df: DataFrame, path: String, partitionCol: String): Unit =
-    writePartitioned(df.repartition(col(partitionCol)), path, partitionCol)
+    writePartitioned(
+      df.repartition(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col(partitionCol)),
+      path, partitionCol)
 
   /** Bucketed+sorted managed table: join-key-co-located storage. */
   def writeBucketed(
@@ -85,11 +117,10 @@ object Store {
       df: DataFrame, path: String, colA: String, colB: String,
       partitions: Int = 8): Unit = {
     val keyed = df.withColumn("__z", mortonKey(col(colA), col(colB)))
-    keyed
-      .repartitionByRange(partitions, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite)
+    writer(keyed
+        .repartitionByRange(partitions, col("__z"))
+        .sortWithinPartitions(col("__z"))
+        .drop("__z"))
       .option("compression", "zstd")
       .parquet(path)
   }

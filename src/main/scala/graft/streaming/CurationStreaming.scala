@@ -24,18 +24,6 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object CurationStreaming {
 
-  /** A session CLONE with the state-store shuffle-partition override: the
-    * streaming query plans against the clone's conf, so concurrently
-    * planned queries on the caller's session (parallel suites, Verify
-    * tooling) never see the override — `spark.conf.set` on the shared
-    * session would leak it to every query planned during the stream. */
-  private def stateSession(spark: SparkSession, n: Int): SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    ScratchCheckpoints.install(s) // cloned session: no restore needed
-    s
-  }
-
   /** The pipeline over an existing landing directory; one file per
     * micro-batch so multi-batch statefulness is actually exercised. */
   def curateLanding(
@@ -45,7 +33,7 @@ object CurationStreaming {
       minTokens: Long = 20L,
       rateBp: Int = 6000,
       salt: String = "scur"): DataFrame = {
-    val s = stateSession(spark, 8)
+    val s = ScratchCheckpoints.stateSession(spark, 8)
     val schema = s.read.parquet(landingDir).schema
     val gated = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -109,7 +97,7 @@ object CurationStreaming {
       model: DataFrame,
       salt: String = "resample"): DataFrame = {
     import graft.operators.{Curation, Dedup, TextAnalysis}
-    val s = stateSession(spark, 8)
+    val s = ScratchCheckpoints.stateSession(spark, 8)
     val schema = s.read.parquet(landingDir).schema
     val docs = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -159,7 +147,7 @@ object CurationStreaming {
       landingDir: String,
       synth: DataFrame => DataFrame): DataFrame = {
     import graft.operators.{Dedup, TextAnalysis}
-    val s = stateSession(spark, 8)
+    val s = ScratchCheckpoints.stateSession(spark, 8)
     val schema = s.read.parquet(landingDir).schema
     val docs = synth(s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")

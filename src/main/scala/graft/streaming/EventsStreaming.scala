@@ -20,55 +20,40 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object EventsStreaming {
 
-  /** Run `body` with a reduced shuffle-partition count: streaming stateful
-    * operators create one (or for stream-stream joins, four) checkpointed
-    * state-store instance per shuffle partition, so state parallelism should
-    * track KEY cardinality, not the batch-side CPU count — 32 partitions
-    * means 128 store setups for a join whose state fits in a handful.
-    * Restored after the (blocking) streaming execution finishes. */
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    val restoreCkpt = ScratchCheckpoints.install(spark)
-    try body finally { spark.conf.set(key, prev); restoreCkpt() }
-  }
-
   /** Tumbling 1-hour windowed counts per event type, executed as a real
     * streaming query (file source -> AvailableNow -> memory sink) and
     * returned as the final result table. Deterministic: event-time windows,
     * complete output mode. */
   def windowedCounts(spark: SparkSession, dir: String): DataFrame = {
+    val s = ScratchCheckpoints.stateSession(spark, 8)
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = s.read.parquet(path).schema
     // the file stream source only accepts directories: stage the table file
     // into a scratch dir (stands in for the landing directory that a real
     // incremental pipeline would watch)
     val stage = Staging.stageTable(path, "graft_stream_src")
     val src = graft.Tables.normalizeTs(
-      spark.readStream.schema(schema).parquet(stage.toString))
+      s.readStream.schema(schema).parquet(stage.toString))
     val agg = src
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,6)")).as("value_sum"))
     val name = s"graft_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val out = spark.table(name)
+    agg.writeStream
+      .format("memory").queryName(name)
+      .outputMode("complete")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    val out = s.table(name)
       .select(unix_millis(col("window.start")).as("window_ms"),
         col("event_type"), col("n"),
         col("value_sum").cast("double").as("value_sum"))
     // materialize before dropping the memory sink table
     val rows = out.orderBy(col("window_ms"), col("event_type"))
     rows.cache().count()
-    spark.catalog.dropTempView(name)
+    s.catalog.dropTempView(name)
     rows
   }
 
@@ -80,24 +65,23 @@ object EventsStreaming {
     * distinct key; with a watermark on an event-time column it would evict —
     * unbounded keys are the knob to watch at scale. */
   def streamingDedup(spark: SparkSession, dir: String): DataFrame = {
+    val s = ScratchCheckpoints.stateSession(spark, 8)
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = s.read.parquet(path).schema
     val stage = Staging.stageTable(path, "graft_sdd_src")
-    val deduped = spark.readStream.schema(schema).parquet(stage.toString)
+    val deduped = s.readStream.schema(schema).parquet(stage.toString)
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
     val name = s"graft_sdd_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    withStatePartitions(spark, 8) {
-      val q = deduped.writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val rows = spark.table(name).orderBy(col("user_id"), col("event_type"))
+    deduped.writeStream
+      .format("memory").queryName(name)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    val rows = s.table(name).orderBy(col("user_id"), col("event_type"))
     rows.cache().count()
-    spark.catalog.dropTempView(name)
+    s.catalog.dropTempView(name)
     rows
   }
 
@@ -112,12 +96,13 @@ object EventsStreaming {
     * over a finite source the result equals the batch join, which is what
     * the oracle checks. */
   def clickPurchaseJoin(spark: SparkSession, dir: String): DataFrame = {
+    val s = ScratchCheckpoints.stateSession(spark, 8)
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = s.read.parquet(path).schema
     val stage = Staging.stageTable(path, "graft_ssj_src")
     def side(tpe: String, idAs: String, tsAs: String) =
       graft.Tables.normalizeTs(
-          spark.readStream.schema(schema).parquet(stage.toString))
+          s.readStream.schema(schema).parquet(stage.toString))
         .withColumn("__ts", col("ts"))
         .filter(col("event_type") === tpe)
         .select(col("user_id"), col("event_id").as(idAs), col("__ts").as(tsAs))
@@ -132,18 +117,16 @@ object EventsStreaming {
         unix_millis(col("click_ts")).as("click_ms"),
         unix_millis(col("purchase_ts")).as("purchase_ms"))
     val name = s"graft_ssj_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    withStatePartitions(spark, 8) {
-      val q = joined.writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val rows = spark.table(name)
+    joined.writeStream
+      .format("memory").queryName(name)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    val rows = s.table(name)
       .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
     rows.cache().count()
-    spark.catalog.dropTempView(name)
+    s.catalog.dropTempView(name)
     rows
   }
 }

@@ -20,22 +20,39 @@ import org.apache.spark.sql.SparkSession
   * Durable checkpoints (the incremental-index maintenance paths and any
   * cluster deployment) deliberately do NOT go through this: they keep
   * Spark's default manager and checksum protection.
+  *
+  * The settings live on a session CLONE, never on the caller's session:
+  * a set-and-restore on a shared session leaks them to every query
+  * planned on it meanwhile — a durable streaming query started
+  * concurrently on that session would checkpoint through the scratch
+  * manager with checksums off.
   */
 object ScratchCheckpoints {
   private val FmKey = "spark.sql.streaming.checkpointFileManagerClass"
   private val CkKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
 
-  /** Set the scratch-checkpoint conf on `spark`; returns a restore
-    * thunk for set/restore callers sharing the session. */
-  def install(spark: SparkSession): () => Unit = {
-    val prevFm = spark.conf.getOption(FmKey)
-    val prevCk = spark.conf.getOption(CkKey)
-    spark.conf.set(FmKey,
-      "org.apache.spark.sql.graftshim.NioCheckpointFileManager")
-    spark.conf.set(CkKey, "false")
-    () => {
-      prevFm.fold(spark.conf.unset(FmKey))(spark.conf.set(FmKey, _))
-      prevCk.fold(spark.conf.unset(CkKey))(spark.conf.set(CkKey, _))
-    }
+  /** A `spark.newSession()` clone with the scratch-checkpoint conf set;
+    * build the throwaway streaming query (its source and its memory
+    * sink's table) on the clone. The caller's session is untouched. */
+  def newSession(spark: SparkSession): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set(FmKey, "org.apache.spark.sql.graftshim.NioCheckpointFileManager")
+    s.conf.set(CkKey, "false")
+    s
+  }
+
+  /** [[newSession]] with a reduced shuffle-partition count for stateful
+    * streaming queries: stateful operators create one (or for
+    * stream-stream joins, four) checkpointed state-store instance per
+    * shuffle partition, so state parallelism should track KEY cardinality,
+    * not the batch-side CPU count — 32 partitions means 128 store setups
+    * for a join whose state fits in a handful. Build, run and read back
+    * the query on the clone, so queries planned concurrently on the
+    * caller's session (parallel suites, Verify tooling) never see the
+    * override. */
+  def stateSession(spark: SparkSession, partitions: Int): SparkSession = {
+    val s = newSession(spark)
+    s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    s
   }
 }

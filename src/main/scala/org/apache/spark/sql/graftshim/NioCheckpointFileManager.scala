@@ -31,6 +31,10 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * queries ([[graft.streaming]] session helpers); durable production
   * checkpoints on a cluster filesystem keep Spark's default manager and
   * its checksum protection.
+  *
+  * Batch store writes pay the same fork cost through the `chmod` in
+  * `RawLocalFileSystem.setPermission`; [[graft.sources.ForkFreeLocalFileSystem]]
+  * removes it there, per write, keeping checksums and modes.
   */
 class NioCheckpointFileManager(root: Path, hadoopConf: Configuration)
     extends CheckpointFileManager {

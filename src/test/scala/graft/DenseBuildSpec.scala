@@ -1,6 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.Similarity
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -47,10 +50,45 @@ class DenseBuildSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Similarity.IvfParams.auto(10L, 0))
   }
 
-  test("buildDenseIndex: auto-sized build lands all artifacts and serves exactly at full probe") {
+  private val BuildGroup = "dense-build-spec"
+
+  /** One auto-sized build (geometry = auto(500, 64)) under a caller job
+    * group and description, with the description of every job it ran and
+    * the caller's (group, description) as the build left them. */
+  private lazy val autoBuild = {
     val emb = Tables(spark, TestSpark.sfDir, "embeddings")
     val out = java.nio.file.Files.createTempDirectory("graft_densebuild").toString
-    val idx = Similarity.buildDenseIndex(emb, out) // geometry = auto(500, 64)
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == BuildGroup)
+          .foreach { p =>
+            val d = p.getProperty("spark.job.description")
+            if (d == "marker") marker.countDown() else descs.add(d)
+          }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(BuildGroup, "caller description")
+    try {
+      val idx = Similarity.buildDenseIndex(emb, out)
+      val after = (sc.getLocalProperty("spark.jobGroup.id"),
+        sc.getLocalProperty("spark.job.description"))
+      // listener events arrive in job order: once the marker job's start
+      // is seen, every build job's has been
+      sc.setJobDescription("marker")
+      spark.range(1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (emb, out, idx, descs.asScala.toSeq, after)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("buildDenseIndex: auto-sized build lands all artifacts and serves exactly at full probe") {
+    val (emb, out, idx, _, _) = autoBuild
 
     for (sub <- Seq("centroids", "cells", "codebooks", "codes"))
       assert(new java.io.File(s"$out/$sub").exists(), s"missing artifact $sub")
@@ -83,5 +121,31 @@ class DenseBuildSpec extends AnyFunSuite {
       .orderBy(col("score").desc, col("vec_id").asc)
       .limit(12))
     assert(got === want)
+  }
+
+  test("buildDenseIndex writes one parquet file per non-empty cell in every cell store") {
+    val (_, out, idx, _, _) = autoBuild
+    val nonEmpty = idx.cells.select("cluster").distinct().count()
+    for (store <- Seq("cells", "codes", "int8", "bin")) {
+      val cells = new java.io.File(s"$out/$store").listFiles()
+        .filter(_.getName.startsWith("cluster="))
+      assert(cells.length === nonEmpty, s"$store has ${cells.length} cell dirs")
+      cells.foreach { c =>
+        val n = c.listFiles().count(_.getName.endsWith(".parquet"))
+        assert(n === 1, s"$store/${c.getName} holds $n parquet files")
+      }
+    }
+  }
+
+  test("buildDenseIndex names each leg's jobs and restores the caller's description") {
+    val (_, _, _, descs, after) = autoBuild
+    assert(after === ((BuildGroup, "caller description")))
+    val legs = descs.filterNot(_.startsWith("Listing leaf files")) // Spark names its own
+    assert(legs.nonEmpty && legs.forall(_.startsWith("buildDenseIndex: ")),
+      s"unnamed build jobs: ${legs.filterNot(_.startsWith("buildDenseIndex: ")).distinct}")
+    for (leg <- Seq("coarse kmeans fit + centroids write", "full-corpus assign + cells write",
+        "PQ codebook train (+ rotation fit)", "full-corpus PQ encode + codes write",
+        "int8 encode + write", "binary encode + write"))
+      assert(legs.contains(s"buildDenseIndex: $leg"), s"no job named for leg '$leg'")
   }
 }

@@ -16,6 +16,25 @@ class EdgeCaseSpec extends AnyFunSuite {
     spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
     StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
 
+  test("staged query files: an id with no part file fails with a named error") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stage_parts").toFile
+    def put(rel: String): java.io.File = {
+      val f = new java.io.File(tmp, rel)
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, Array[Byte](0)).toFile
+    }
+    // a __p=<i> dir holding only a checksum sibling, no .parquet part file
+    put("__p=3/.part-00000.c000.zstd.parquet.crc")
+    val noPart = intercept[IllegalArgumentException](graft.SparkEntry.stagedPart(tmp, 3))
+    assert(noPart.getMessage.contains("query id 3"), noPart.getMessage)
+    // no __p=<i> dir at all (an id with no embeddings row)
+    val noDir = intercept[IllegalArgumentException](graft.SparkEntry.stagedPart(tmp, 4))
+    assert(noDir.getMessage.contains("query id 4"), noDir.getMessage)
+    val part = put("__p=5/part-00000.c000.zstd.parquet")
+    put("__p=5/.part-00000.c000.zstd.parquet.crc")
+    assert(graft.SparkEntry.stagedPart(tmp, 5) === part)
+  }
+
   test("dedup pipelines on an empty corpus return empty, not an error") {
     assert(Dedup.exact(emptyDocs, "doc_id", "text").count() === 0)
     assert(Dedup.minhashLshPairs(emptyDocs, "doc_id", "text").count() === 0)

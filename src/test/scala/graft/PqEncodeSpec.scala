@@ -47,6 +47,20 @@ class PqEncodeSpec extends AnyFunSuite {
     assert(viaBulk === viaJoin)
   }
 
+  test("bulk == join at the d=64 auto geometry (8x256), which pqEncode sends to bulk") {
+    val p = Similarity.IvfParams.auto(500L, 64)
+    assert((p.numSub, p.subDim, p.numCentroids) === ((8, 8, 256)))
+    val cb = Similarity.pqCodebooks(emb, p.numSub, p.subDim, p.numCentroids)
+    val cbRows = cb.select("m", "c", "cbv").collect()
+    assert(cbRows.length === 2048)
+    val viaJoin = canon(Similarity.pqEncodeJoin(emb, cb, 8, 8))
+    assert(canon(Similarity.pqEncodeBulk(emb, cbRows, 8, 8)) === viaJoin)
+    val viaDefault = Similarity.pqEncode(emb, cb, 8, 8)
+    assert(!viaDefault.queryExecution.executedPlan.toString.contains("Join"),
+      "2,048 codebook rows should take the bulk kernel")
+    assert(canon(viaDefault) === viaJoin)
+  }
+
   test("pqEncode dispatches by codebook size, both routes agree") {
     val cb = Similarity.pqCodebooks(emb, 8, 8, 16) // 128 rows
     val viaDefault = canon(Similarity.pqEncode(emb, cb, 8, 8)) // join route
@@ -100,15 +114,17 @@ class PqEncodeSpec extends AnyFunSuite {
   }
 
   test("Lloyd refine: bulk assignment == join assignment across iterations") {
-    val init = Similarity.pqCodebooks(emb, 8, 8, 16)
     def canonCb(df: DataFrame): Seq[(Int, Int, Seq[Float])] =
       df.collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2)))
         .toSeq.sortBy(t => (t._1, t._2))
-    for (iters <- Seq(1, 2)) {
-      val viaJoin = Similarity.pqRefineCodebooks(emb, init, 8, 8, iters = iters)
+    // the oracle geometry (8x16) and the d=64 auto geometry (8x256)
+    for (codes <- Seq(16, 256); iters <- Seq(1, 2)) {
+      val init = Similarity.pqCodebooks(emb, 8, 8, codes)
+      val viaJoin = Similarity.pqRefineCodebooks(emb, init, 8, 8, iters = iters,
+        maxJoinPairs = Int.MaxValue)
       val viaBulk = Similarity.pqRefineCodebooks(emb, init, 8, 8, iters = iters,
         maxJoinPairs = 0)
-      assert(canonCb(viaBulk) === canonCb(viaJoin), s"iters=$iters")
+      assert(canonCb(viaBulk) === canonCb(viaJoin), s"codes=$codes iters=$iters")
       viaJoin.unpersist(); viaBulk.unpersist()
     }
   }

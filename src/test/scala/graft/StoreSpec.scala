@@ -1,11 +1,72 @@
 package graft
 
-import graft.sources.Store
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import graft.sources.{ForkFreeLocalFileSystem, Store}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class StoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  private def mode(p: java.nio.file.Path): Int =
+    Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & Integer.parseInt("7777", 8)
+
+  /** Every file and directory under `root` -> its mode, keyed by the path
+    * relative to `root` with the per-write part-file UUID masked. */
+  private def layout(root: String): Map[String, Int] = {
+    val base = Paths.get(root)
+    val walk = Files.walk(base)
+    try walk.iterator().asScala.map { p =>
+      base.relativize(p).toString.replaceAll(
+        "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>") -> mode(p)
+    }.toMap
+    finally walk.close()
+  }
+
+  test("Store writes match a stock write: rows, file and directory modes, .crc files") {
+    val emb = Tables(spark, TestSpark.sfDir, "embeddings").select(col("vec_id"), col("label"))
+    val tmp = Files.createTempDirectory("graft_forkfree")
+    val (viaStore, stock) = (s"$tmp/store", s"$tmp/stock")
+    // the raw layer counts the bytes its streams write: a rise proves the
+    // write's tasks really went through the fork-free filesystem
+    @annotation.nowarn("cat=deprecation")
+    def forkFreeBytes = FileSystem.getStatistics("file",
+      classOf[ForkFreeLocalFileSystem.Raw]).getBytesWritten
+    val before = forkFreeBytes
+    Store.writePartitioned(emb, viaStore, "label")
+    assert(forkFreeBytes > before, "the Store write did not use ForkFreeLocalFileSystem")
+    emb.write.mode("overwrite").option("compression", "zstd")
+      .partitionBy("label").parquet(stock)
+    def rows(p: String) = spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
+    assert(rows(viaStore) === rows(stock))
+    val got = layout(viaStore)
+    assert(got === layout(stock))
+    assert(got.keys.exists(k => k.startsWith("label=") && k.endsWith(".parquet.crc")))
+    // the option is scoped to the write: the shared Hadoop conf still
+    // resolves file: paths to the stock filesystem
+    assert(!new Path(tmp.toUri).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .isInstanceOf[ForkFreeLocalFileSystem])
+  }
+
+  test("ForkFreeLocalFileSystem sets modes in-process; a sticky bit goes through Hadoop") {
+    val fs = new ForkFreeLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), new Configuration())
+    val dir = Files.createTempDirectory("graft_ffmode")
+    val f = Files.write(dir.resolve("f"), Array[Byte](1))
+    def perm(octal: String) = new FsPermission(Integer.parseInt(octal, 8).toShort)
+    for (m <- Seq("640", "600", "755", "444")) {
+      fs.setPermission(new Path(f.toUri), perm(m))
+      assert(mode(f) === Integer.parseInt(m, 8), s"mode $m")
+    }
+    fs.setPermission(new Path(dir.toUri), perm("1755"))
+    assert(mode(dir) === Integer.parseInt("1755", 8))
+  }
 
   test("partitioned write prunes non-matching clusters at scan time") {
     val emb = Tables(spark, TestSpark.sfDir, "embeddings")
