@@ -3,28 +3,18 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Build-once 1M x d=768 flagship probe corpus (r17 — extracted from
-  * [[IvfPqScaleProbe]] so the big-nlist probes can materialize `emb/`
-  * without paying the full index build): the sf embeddings replicated
-  * into genuinely new directions (RecallScaleProbe's permutation x
-  * wide-jitter — clone-structure replicas would measure the data
-  * artifact, not the index) and tiled 12x to d=768 (DimProbe's tiling).
+/** Build-once 1M x d=768 flagship probe corpus that [[IvfPqScaleProbe]]
+  * indexes: the sf embeddings replicated into genuinely new directions
+  * (a per-replica coordinate permutation x wide jitter — clone-structure
+  * replicas would measure the data artifact, not the index) and tiled
+  * 12x to d=768.
   * A row-count-stamped done marker makes re-runs serving-only and
   * invalidates on a target change (the ServeMixFlagshipBench marker
   * discipline). */
 object FlagshipCorpus {
 
-  /** Replica count the recipe needs for `targetRows` over this sf base. */
-  def replicasFor(spark: SparkSession, sfDir: String, targetRows: Long): Int = {
-    val baseN = spark.read.parquet(s"$sfDir/embeddings.parquet").count()
-    math.max(1, math.ceil(targetRows.toDouble / baseN).toInt)
-  }
-
-  /** The LAZY generator plan for replicas `[replicaLo, replicaHi)` — no
-    * write, no materialization (r18: the 10M probe assigns and lands the
-    * corpus in bounded replica chunks, the same no-100-TB-intermediate
-    * posture a production ingest has, so the full corpus never needs to
-    * exist on local disk at once). The replica dimension is an EXPLODE,
+  /** The LAZY generator plan for `replicas` replicas of the sf base — no
+    * write, no materialization. The replica dimension is an EXPLODE,
     * not a times-way union (a 10M target means 5000 replicas — a
     * 5000-leg union tree is a Catalyst plan explosion, while one
     * generator column keeps the plan constant-size at any target).
@@ -35,10 +25,8 @@ object FlagshipCorpus {
   def generate(
       spark: SparkSession,
       sfDir: String,
-      replicaLo: Int,
-      replicaHi: Int): DataFrame = {
-    require(replicaLo >= 0 && replicaHi > replicaLo,
-      s"replica range must be non-empty, got [$replicaLo, $replicaHi)")
+      replicas: Int): DataFrame = {
+    require(replicas >= 1, s"need at least one replica, got $replicas")
     val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     // PARALLELISM comes from the replica axis, not the base read: the sf
@@ -49,7 +37,7 @@ object FlagshipCorpus {
     // spreads replicas across the cluster with no shuffle of generated
     // rows (measured: the single-task form ran the 10M coarse-fit sample
     // pass >70 min without completing; this shape streams it wide).
-    val reps = spark.range(replicaLo, replicaHi)
+    val reps = spark.range(replicas)
       .select(col("id").cast("int").as("r"))
       .repartition(math.max(spark.sparkContext.defaultParallelism, 16))
     reps.crossJoin(broadcast(base))
@@ -89,7 +77,7 @@ object FlagshipCorpus {
       !txt.toLongOption.contains(expect)
     }
     if (stale) {
-      generate(spark, sfDir, 0, times)
+      generate(spark, sfDir, times)
         .write.mode("overwrite").parquet(s"$root/emb")
       val n = spark.read.parquet(s"$root/emb").count()
       val outS = fs.create(done, true)

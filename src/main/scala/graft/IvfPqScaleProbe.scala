@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end IVF-PQ at the reference's production regime (round 12):
@@ -10,10 +9,10 @@ import org.apache.spark.sql.functions._
   * the index a 100 TB deployment would actually run. Geometry from
   * [[Similarity.IvfParams.auto]]: nlist = 4*sqrt(N) = 4000, PQ 96x8
   * with 256 codes/subspace. The
-  * corpus replicates the sf embeddings into genuinely new directions
-  * (RecallScaleProbe's permutation x wide-jitter — clone-structure
-  * replicas measure the data artifact, not the index) and tiles 12x to
-  * d=768 (DimProbe's tiling).
+  * corpus is [[FlagshipCorpus]]: the sf embeddings replicated into
+  * genuinely new directions (permutation x wide jitter — clone-structure
+  * replicas measure the data artifact, not the index) and tiled 12x to
+  * d=768.
   *
   * Reports: the one-call [[Similarity.buildDenseIndex]] wall time (fit +
   * cell store + Lloyd-refined codebooks + codes + int8 + radii — the
@@ -29,18 +28,11 @@ object IvfPqScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val targetRows = args.lift(1).map(_.toLong).getOrElse(1000000L)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    // GRAFT_PROBE_ROOT pins the artifact root so serving-only probes
-    // (IvfPqServeProbe, ServeMixBench's flagship mode) can reuse the
-    // run-once build instead of re-training
+    // GRAFT_PROBE_ROOT pins the artifact root so the serving-only
+    // [[ServeMixFlagshipBench]] can reuse the run-once build instead of
+    // re-training
     val outDir = sys.env.getOrElse("GRAFT_PROBE_ROOT",
       java.nio.file.Files.createTempDirectory("graft_ivfpq_scale").toString)
     def time[A](f: => A): (A, Double) = {

@@ -115,14 +115,7 @@ object RecallProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "RECALL.md"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val total = Tables(spark, sfDir, "embeddings").count()
     val cv = curve(spark, sfDir)
@@ -166,119 +159,6 @@ object RecallProbe {
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       sb.toString.getBytes("UTF-8"))
     println(sb.toString)
-    spark.stop()
-  }
-}
-
-/** The nprobe/recall curve at REALISTIC cell population (VERDICT r11 #3):
-  * RECALL.md's committed curve is measured on the sf corpus (500-2000
-  * rows / 8 cells); a user sizing nprobe at web scale extrapolates. This
-  * probe replicates the sf embeddings to ~1M rows — each replica
-  * re-expressed as a per-replica coordinate PERMUTATION (odd stride,
-  * coprime to d) times a WIDE hash jitter (0.5-1.5x per coordinate), so
-  * replicas are genuinely new directions. Anything gentler is
-  * measured-degenerate: the first cut used a +-10% multiplicative
-  * perturbation and every replica stayed in its base vector's cell —
-  * recall@20 read 1.000 at nprobe=1, i.e. the probe measured the clone
-  * structure, not the index — fits
-  * the engine's own IVF build at nlist ~ sqrt(N) (hash-sampled init + 2
-  * Lloyd iterations, the kmeansFit the artifact store runs), persists
-  * cells cell-partitioned, and measures recall@20 over a 20-query batch
-  * at doubling nprobe plus what [[Similarity.calibrateNprobe]] picks for
-  * the 0.8 floor at this population.
-  *
-  * Run: `java -cp classes:spark-jars graft.RecallScaleProbe
-  * [sfDir] [targetRows] [nlist]`. */
-object RecallScaleProbe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val targetRows = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val nlist = args.lift(2).map(_.toInt).getOrElse(1024)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_recall_scale").toString
-
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val baseN = base.count()
-    val times = math.max(1, math.ceil(targetRows.toDouble / baseN).toInt)
-    val corpus = (0 until times).map { r =>
-      if (r == 0) base
-      else {
-        // odd stride (coprime to 64) permutes coordinates; the hash
-        // jitter spans 0.5-1.5x — together a genuinely new direction
-        val s = 2 * (r % 32) + 1
-        base.select((col("vec_id") + lit(r.toLong * 10000000L)).as("vec_id"),
-          expr(s"transform(sequence(0, 63), j -> cast(" +
-            s"element_at(embedding, cast((j * $s) % 64 + 1 as int)) * " +
-            s"(0.5d + pmod(${r}L * 2654435761L + j * 40503L, 1024) / 1024.0d)" +
-            s" as float))").as("embedding"))
-      }
-    }.reduce(_ unionByName _)
-    corpus.write.mode("overwrite").parquet(s"$outDir/emb")
-    val emb = spark.read.parquet(s"$outDir/emb")
-    val n = emb.count()
-
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-    val (cents, tFit) = time { Similarity.kmeansFit(emb, nlist, iters = 2) }
-    cents.coalesce(1).write.mode("overwrite").parquet(s"$outDir/centroids")
-    cents.unpersist()
-    val centArt = spark.read.parquet(s"$outDir/centroids")
-    val (_, tAssign) = time {
-      graft.sources.Store.writePartitioned(
-        Similarity.assignCellsBulk(emb, centArt).repartition(col("cluster")),
-        s"$outDir/cells", "cluster")
-    }
-    val cells = spark.read.parquet(s"$outDir/cells")
-    val sizes = cells.groupBy(col("cluster")).count()
-      .collect().map(r => r.getAs[Number]("cluster").intValue -> r.getLong(1)).toMap
-
-    val k = 20
-    val queries = emb.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val exact = Similarity.knnBatch(emb, queries, k)
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-
-    println(f"RecallScaleProbe: $n rows, nlist=$nlist " +
-      f"(mean cell ${n.toDouble / nlist}%.0f rows, max ${sizes.values.max}), " +
-      f"fit=${tFit}%.0fs assign+write=${tAssign}%.0fs")
-    println(f"${"nprobe"}%8s ${"recall@20"}%10s ${"rows/query"}%12s ${"corpus frac"}%12s")
-    val nprobes = Iterator.iterate(1)(_ * 2).takeWhile(_ < nlist).toSeq :+ nlist
-    var done = false
-    nprobes.foreach { np =>
-      if (!done) {
-        val ann = Similarity
-          .ivfSearchBatchPruned(cells, centArt, queries, np, k)
-          .collect().map(r => r.getLong(0) -> r.getLong(1))
-          .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-        val recall = exact.map { case (q, ids) =>
-          ids.intersect(ann.getOrElse(q, Set.empty)).size.toDouble / ids.size
-        }.sum / exact.size
-        val perQ = Similarity.probeCellsBatch(centArt, queries, np)
-          .groupBy(_._1).values
-          .map(_.map(p => sizes.getOrElse(p._2, 0L)).sum)
-        val rows = perQ.sum / perQ.size
-        println(f"$np%8d $recall%10.3f $rows%12d ${rows.toDouble / n}%12.4f")
-        // past 1.0 every further row is a full-scan rerun of the same answer
-        if (recall >= 1.0 - 1e-12) done = true
-      }
-    }
-    val (cal, tCal) = time {
-      Similarity.calibrateNprobe(cells, centArt, queries, k, targetRecall = 0.8)
-    }
-    println(f"calibrateNprobe(target 0.8) picks nprobe=$cal " +
-      f"(${tCal}%.0fs; ${cal.toDouble / nlist}%.4f of cells)")
     spark.stop()
   }
 }

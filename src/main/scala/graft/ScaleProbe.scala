@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling probe: replicate the sf tables KX-fold (id-offset union — same
@@ -14,14 +13,7 @@ object ScaleProbe {
     val factor = if (args.length > 1) args(1).toInt else 10
     val outDir = java.nio.file.Files.createTempDirectory("graft_scale").toString
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     // id-offset replication preserving value distributions and id
@@ -34,7 +26,7 @@ object ScaleProbe {
     // round 12 (they were plain clones before, and q39's 10x ratio was
     // partly the clone-group pair explosion): each replica is a
     // coordinate permutation (odd stride) x 0.5-1.5x hash jitter — a
-    // genuinely new direction, the RecallScaleProbe recipe.
+    // genuinely new direction, the [[FlagshipCorpus]] recipe.
     def replicate(table: String, idCols: Seq[String], offset: Long,
         saltText: Boolean = false, saltVec: Boolean = false): Unit = {
       val base = spark.read.parquet(s"$sfDir/$table.parquet")

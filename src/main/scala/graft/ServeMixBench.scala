@@ -2,7 +2,7 @@ package graft
 
 import graft.api.{Corpus, Filters, SearchEngine}
 import graft.operators.{Lexical, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ENDPOINT-MIX serving bench (VERDICT r12 next-round #6): the §3 facade
@@ -32,19 +32,11 @@ object ServeMixBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // FAIR job scheduling for the concurrent passes: per-thread pools
-      // (created on demand, default weight 1) time-share the executor
-      // instead of FIFO-convoying whole jobs behind each other. The serial
-      // pass is unaffected (one job stream = FIFO within its pool).
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // FAIR job scheduling for the concurrent passes: per-thread pools
+    // (created on demand, default weight 1) time-share the executor
+    // instead of FIFO-convoying whole jobs behind each other. The serial
+    // pass is unaffected (one job stream = FIFO within its pool).
+    val spark = Sessions.local(cpus, fair = true)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     def time[A](f: => A): (A, Double) = {

@@ -2,7 +2,7 @@ package graft
 
 import graft.api.{Corpus, Filters, SearchEngine}
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Endpoint-mix serving bench at FLAGSHIP geometry (VERDICT r14 #4):
@@ -33,14 +33,7 @@ object ServeMixFlagshipBench {
       args.headOption.getOrElse(
         sys.error("usage: GRAFT_PROBE_ROOT=<dir> ServeMixFlagshipBench")))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus, fair = true)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     def time[A](f: => A): (A, Double) = {

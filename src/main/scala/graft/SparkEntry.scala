@@ -5976,8 +5976,9 @@ object SparkEntry {
              |GROUP BY 1 ORDER BY score DESC, vec_id LIMIT 10""".stripMargin)),
 
     // REAL-DIMENSIONALITY serving oracle (VERDICT r10 #6): until now
-    // d=768 evidence was probe-only (DimProbe timings) while every
-    // hash-checked query ran at the synthetic d=64. This runs the REAL
+    // d=768 evidence was probe-only (DimProbe timings, BASELINE.md
+    // r6-r10) while every hash-checked query ran at the synthetic d=64.
+    // This runs the REAL
     // pruned-IVF serving path (hash-sampled centroid init, assignCells
     // round-6 argmax with ties to the lower cell, driver-side round-6
     // probe, round-4 exact scoring in the probed cells) at d=768 —

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * (PQ encode / Lloyd refinement / quantization-distortion drift gate),
   * where the higher-order `aggregate(zip_with(...))` form pays ~20× the
   * primitive loop's per-row cost (RotProbe measured the same gap for the
-  * rotation fold).
+  * rotation fold, BASELINE.md r11).
   *
   * Accumulates in double, sequential ascending fold of `(aᵢ−bᵢ)²` —
   * bit-identical to the SQL higher-order form kept as the reference in

@@ -56,7 +56,7 @@ object Similarity {
   /** Default nlist threshold above which [[buildDenseIndex]] emits the
     * two-level coarse hierarchy: past ~64k cells the flat centroid
     * collect ([[CentroidCache]]) starts to strain the driver (measured
-    * 307 MB at nlist=1e5 x d=768 — CoarseProbe), and the IMI-style
+    * 307 MB at nlist=1e5 x d=768 — CoarseProbe, BASELINE.md r16), and the IMI-style
     * hierarchy bounds it at sqrt(nlist). Below it, flat probing is both
     * exact and cheaper (no second ranking stage). */
   val HierarchyMinNlist: Int = 1 << 16
@@ -254,11 +254,12 @@ object Similarity {
       phase("full-corpus assign + cells write")
       // same dispatch as the kmeansFit iterations: packed only at coarse
       // nlist — the packed HOF argmax is interpreted per row and at
-      // IVF-scale nlist it dominates the build (RecallScaleProbe r12).
+      // IVF-scale nlist it dominates the build (RecallScaleProbe r12,
+      // BASELINE.md round-14 results).
       // Past the hierarchy threshold the corpus assigns THROUGH the
       // hierarchy ([[assignCellsHierarchical]], VERDICT r16 #3): the flat
       // argmax at nlist≈10⁵ costs ~25x the IMI-style two-stage assign
-      // (BigNlistProbe), and calibration below measures recall over the
+      // (BigNlistProbe, BASELINE.md r16), and calibration below measures recall over the
       // cells as LANDED, so the IMI approximation is priced in.
       val assigned = hierArt match {
         case Some((l1a, l2a)) => assignCellsHierarchical(emb, l1a, l2a, vecCol)
@@ -1352,7 +1353,7 @@ object Similarity {
   /** Literal-expression budget for the projection form of
     * [[rotateVectorsPrepared]]: past this many coefficient literals the
     * rotation switches to the primitive partition kernel. Two reasons,
-    * measured (RotProbe, 10k rows at d=768): the HOF fold per literal
+    * measured (RotProbe, BASELINE.md r11, 10k rows at d=768): the HOF fold per literal
     * array is ~20× slower than the primitive loop (m=16: 0.214 vs
     * 0.010 ms/row — even the FULL 589,824-coefficient d=768 rotation
     * runs 0.120 ms/row in the kernel, faster than the m=16 literal
@@ -1654,7 +1655,7 @@ object Similarity {
     val vecIdx = emb.schema.fieldIndex(vecCol)
     val outSchema = emb.schema.add(clusterCol,
       org.apache.spark.sql.types.IntegerType, nullable = true)
-    // ROW-BLOCKED kernel (r14, AssignProbe before/after in BASELINE.md):
+    // ROW-BLOCKED kernel (AssignProbe before/after in BASELINE.md r14):
     // process rows in blocks of 64 with the CENTROID loop outermost, so
     // each centroid vector (streamed from a k x d matrix that misses cache
     // when read per row — 12 MB at k=4000 x d=768) is reused across the
@@ -1876,7 +1877,8 @@ object Similarity {
       // mapPartitions BULK kernel (primitive-loop dots over a
       // driver-collected centroid matrix): the packed form's k-struct HOF
       // argmax is interpreted per row, and at IVF-scale k that dominated
-      // the fit (RecallScaleProbe r12, 1M rows x k=1024: ~110 s per
+      // the fit (RecallScaleProbe r12, BASELINE.md round-14 results,
+      // 1M rows x k=1024: ~110 s per
       // packed assignment pass; BASELINE.md records the bulk-routed
       // re-measurement); past driver-matrix scale (~10^5 x 768) the
       // bounded chunk fold, which never materializes the full set
@@ -1955,8 +1957,8 @@ object Similarity {
       else vecs
     // PRIMITIVE KERNEL (the assignCellsBulk precedent): the declarative
     // posexplode×posexplode form evaluates d² interpreted generator rows
-    // per input row — measured 74 ms/row at d=768 (DimProbe, r9 verdict
-    // #2). The Gram is a dense rank-k update and belongs in a tight
+    // per input row — measured 74 ms/row at d=768 (DimProbe, BASELINE.md
+    // r9; r9 verdict #2). The Gram is a dense rank-k update and belongs in a tight
     // loop: per partition, accumulate round₁₂(xᵢ·xⱼ) of the UPPER
     // TRIANGLE (the product is symmetric, so the rounded value is too —
     // half the multiplies) into a long array of 10⁻¹² units, spilling

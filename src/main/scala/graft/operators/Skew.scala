@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation utilities (SURVEY §4 physical notes: "skewed keys ->
@@ -30,11 +32,19 @@ object Skew {
     * cores before an expensive per-row pipeline (regex tokenization,
     * n-gram generation). At production scale the input is many
     * files/splits, the condition is false, and NO exchange enters the
-    * plan; the check itself is driver-side planning only (callers pass
-    * scan-shaped frames — no exchanges — so nothing executes). Streaming
-    * frames pass through untouched. */
+    * plan. The check is driver-side planning only: a frame whose plan
+    * already holds an exchange (its partitioning is the shuffle's, not the
+    * scan's) passes through untouched, because reading its partition count
+    * under AQE would run the upstream shuffle stages and discard them.
+    * Streaming frames pass through untouched too. */
   def fanOutNarrow(df: DataFrame): DataFrame = {
-    if (df.isStreaming) df
+    // AQE wraps exactly the plans that shuffle (or hold a subquery); a
+    // non-adaptive plan shows its exchanges directly
+    def shuffles = df.queryExecution.executedPlan.exists {
+      case _: AdaptiveSparkPlanExec | _: Exchange => true
+      case _ => false
+    }
+    if (df.isStreaming || shuffles) df
     else {
       // a QUARTER of the cores, not all of them: the generator pipelines
       // this feeds are allocation-heavy (token arrays, n-gram strings),

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Lexical
+import graft.sources.Store
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
@@ -31,11 +32,15 @@ object IncrementalIndex {
   /** Idempotent per-batch sink write: dynamic partition overwrite of this
     * batch's `batch_id=` partition only. */
   private def writeBatchPartition(df: DataFrame, batchId: Long, dir: String): Unit =
-    df.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-      .write.mode("overwrite")
+    Store.writer(df.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId)))
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(dir)
+
+  /** Appends one batch's delta rows (carrying their `batch_id` column)
+    * under `dir`, partitioned by `batch_id` and then `partCols`. */
+  private def appendBatch(df: DataFrame, dir: String, partCols: String*): Unit =
+    Store.writer(df).mode("append").partitionBy("batch_id" +: partCols: _*).parquet(dir)
 
   /** Filesystem-agnostic existence check (file:, hdfs:, s3a:, ...) — a
     * `java.io.File` test would silently report "absent" for any non-local
@@ -246,7 +251,7 @@ object IncrementalIndex {
         // ([[graft.operators.Similarity.assignCellsHierarchical]], at this
         // path's round-4 grain) — so maintenance never pays the flat
         // argmax the hierarchy exists to avoid (~25x at nlist≈10⁵,
-        // BigNlistProbe).
+        // BigNlistProbe, BASELINE.md r16).
         val assigned = (hierarchy match {
           case Some((l1, l2)) =>
             graft.operators.Similarity
@@ -287,26 +292,20 @@ object IncrementalIndex {
           // at nlist=4000) — hashing each cell to exactly one task bounds it
           // at one file per touched cell per batch, the layout compaction
           // folds further
-          batch.join(assigned, Seq(idCol))
+          appendBatch(batch.join(assigned, Seq(idCol))
             .withColumn("batch_id", lit(batchId))
-            .repartition(col(cc))
-            .write.mode("append")
-            .partitionBy("batch_id", cc)
-            .parquet(sinkDir)
+            .repartition(col(cc)), sinkDir, cc)
           for (cb <- codebooks; cd <- codesDir) {
             val codesBatchPath = new org.apache.hadoop.fs.Path(s"$cd/batch_id=$batchId")
             codesBatchPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
               .delete(codesBatchPath, true)
             val codesCol = ccCodes.getOrElse(cc)
-            graft.operators.Similarity
+            appendBatch(graft.operators.Similarity
               .pqEncode(pqBatch.join(assigned, Seq(idCol)),
                 cb, numSub, subDim, idCol, vecCol, carry = Seq(cc))
               .withColumnRenamed(cc, codesCol)
               .withColumn("batch_id", lit(batchId))
-              .repartition(col(codesCol))
-              .write.mode("append")
-              .partitionBy("batch_id", codesCol)
-              .parquet(cd)
+              .repartition(col(codesCol)), cd, codesCol)
           }
           // per-(cell, attribute) histogram DELTA for this batch — keeps the
           // adaptive probe planner's artifact in lockstep with the landed
@@ -321,12 +320,9 @@ object IncrementalIndex {
             val statsBatchPath = new org.apache.hadoop.fs.Path(s"$sd/batch_id=$batchId")
             statsBatchPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
               .delete(statsBatchPath, true)
-            graft.operators.Similarity
+            appendBatch(graft.operators.Similarity
               .cellStats(batch.join(assigned, Seq(idCol)), statsCols, cc)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("append")
-              .partitionBy("batch_id")
-              .parquet(sd)
+              .withColumn("batch_id", lit(batchId)), sd)
           }
           // per-cell RADIUS delta for this batch — a landed row can lie
           // FARTHER from its centroid than the build-time radius, and a
@@ -342,14 +338,11 @@ object IncrementalIndex {
             val radiiBatchPath = new org.apache.hadoop.fs.Path(s"$rd/batch_id=$batchId")
             radiiBatchPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
               .delete(radiiBatchPath, true)
-            graft.operators.Similarity
+            appendBatch(graft.operators.Similarity
               .cellRadii(batch.join(assigned, Seq(idCol)),
                 centroids.select(col(centroidIdCol).as(cc), col("cv")),
                 vecCol, cc)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("append")
-              .partitionBy("batch_id")
-              .parquet(rd)
+              .withColumn("batch_id", lit(batchId)), rd)
           }
           // SQ8 byte-store delta — the build persists an int8 artifact
           // beside the cells ([[graft.operators.Similarity.buildDenseIndex]])
@@ -364,13 +357,10 @@ object IncrementalIndex {
             val i8BatchPath = new org.apache.hadoop.fs.Path(s"$i8d/batch_id=$batchId")
             i8BatchPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
               .delete(i8BatchPath, true)
-            graft.operators.Similarity
+            appendBatch(graft.operators.Similarity
               .int8EncodeCells(batch.join(assigned, Seq(idCol)), idCol, vecCol, cc)
               .withColumn("batch_id", lit(batchId))
-              .repartition(col(cc))
-              .write.mode("append")
-              .partitionBy("batch_id", cc)
-              .parquet(i8d)
+              .repartition(col(cc)), i8d, cc)
           }
           // 1-bit SIGNATURE delta (VERDICT r15 #8) — the binary family's
           // coarse store goes stale exactly like int8's the moment a
@@ -383,13 +373,10 @@ object IncrementalIndex {
             val binBatchPath = new org.apache.hadoop.fs.Path(s"$bd/batch_id=$batchId")
             binBatchPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
               .delete(binBatchPath, true)
-            graft.operators.Similarity
+            appendBatch(graft.operators.Similarity
               .binaryEncodeCells(batch.join(assigned, Seq(idCol)), idCol, vecCol, cc)
               .withColumn("batch_id", lit(batchId))
-              .repartition(col(cc))
-              .write.mode("append")
-              .partitionBy("batch_id", cc)
-              .parquet(bd)
+              .repartition(col(cc)), bd, cc)
           }
         } finally assigned.unpersist()
         ()
@@ -568,9 +555,8 @@ object IncrementalIndex {
       math.min(sources.map(_.stripPrefix("batch_id=").toLong).min, 0L) - 1
     val staging = new org.apache.hadoop.fs.Path(root, "_compact_staging")
     fs.delete(staging, true)
-    fold(spark.read.parquet(dir).drop("batch_id"))
-      .withColumn("batch_id", lit(epoch))
-      .write.mode("overwrite")
+    Store.writer(fold(spark.read.parquet(dir).drop("batch_id"))
+        .withColumn("batch_id", lit(epoch)))
       .option("compression", "zstd")
       .partitionBy("batch_id" +: extraPartCols: _*)
       .parquet(staging.toString)
@@ -694,8 +680,7 @@ object IncrementalIndex {
       .foldLeft(store.join(broadcast(ids), Seq(idCol), "left_semi"))(
         (df, ts) => df.join(broadcast(ts), Seq(idCol), "left_anti"))
       .distinct()
-    affected.coalesce(1).write.mode("overwrite")
-      .option("compression", "zstd").parquet(staging.toString)
+    Store.writeSingle(affected, staging.toString)
     val n = spark.read.parquet(staging.toString).count()
     if (n == 0) { fs.delete(staging, true); return 0L }
     val next = tombstoneSubtrees(fs, tombRoot)
@@ -1048,10 +1033,8 @@ object IncrementalIndex {
     // the published version carries it so [[currentRotation]] readers and
     // the next [[updateDenseIndex]] encode in the matching coordinates
     val rotArt = opqRotateIters.map { it =>
-      Similarity.pcaTopComponents(trainCorpus, vecCol,
-          m = numSub * subDim, iters = it)
-        .coalesce(1).write.mode("overwrite")
-        .option("compression", "zstd").parquet(s"$staging/rotation")
+      Store.writeSingle(Similarity.pcaTopComponents(trainCorpus, vecCol,
+        m = numSub * subDim, iters = it), s"$staging/rotation")
       spark.read.parquet(s"$staging/rotation")
     }
     // rotateVectors carries every non-vector column through, so the store
@@ -1064,21 +1047,17 @@ object IncrementalIndex {
       emb, Similarity.pqCodebooks(emb, numSub, subDim, numCentroids, idCol, vecCol),
       numSub, subDim, iters = pqIters, idCol = idCol, vecCol = vecCol)
     val dist = Similarity.quantizationDistortion(emb, cb, numSub, subDim, idCol, vecCol)
-    cb.coalesce(1).write.mode("overwrite")
-      .option("compression", "zstd").parquet(s"$staging/codebooks")
+    Store.writeSingle(cb, s"$staging/codebooks")
     cb.unpersist() // pqRefineCodebooks' contract: the caller owns the frame
-    spark.range(1).select(lit(dist).as("train_distortion"))
-      .write.mode("overwrite").parquet(s"$staging/stats")
+    Store.writer(spark.range(1).select(lit(dist).as("train_distortion")))
+      .parquet(s"$staging/stats")
     // seed the version's codes with the landed rows re-encoded under the
     // NEW codebooks (one epoch subtree, the compactCells convention);
     // later batches append their own batch_id= subtrees via updateDenseIndex
     store.foreach { st =>
-      Similarity.pqEncode(rotated(st), spark.read.parquet(s"$staging/codebooks"),
+      appendBatch(Similarity.pqEncode(rotated(st), spark.read.parquet(s"$staging/codebooks"),
           numSub, subDim, idCol, vecCol, carry = Seq(cellCol))
-        .withColumn("batch_id", lit(-1L))
-        .write.mode("append")
-        .partitionBy("batch_id", cellCol)
-        .parquet(s"$staging/codes")
+        .withColumn("batch_id", lit(-1L)), s"$staging/codes", cellCol)
     }
     // TWO-LEVEL coarse hierarchy (VERDICT r15 #1/#8): when the caller's
     // index serves through the l1/l2 artifact, the retrained version must

@@ -1,0 +1,42 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Pins the one session shape the mains run in. The oracle compare of
+  * [[Verify]]'s dump is dtype-strict, so a drifted copy of this conf reads
+  * as wrong answers rather than as a config change. */
+class SessionsSpec extends AnyFunSuite {
+
+  test("Sessions.local conf: local[cpus], a shuffle partition per core, AQE, UTC, nanos as long, no UI") {
+    val plain = Sessions.conf("4").getAll.toMap
+    assert(plain === Map(
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false"))
+    assert(Sessions.conf("4", fair = true).getAll.toMap ===
+      plain + ("spark.scheduler.mode" -> "FAIR"))
+  }
+
+  test("no main builds its own session: only Sessions and Smoke call SparkSession.builder") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    def callsBuilder(p: java.nio.file.Path): Boolean =
+      Files.readAllLines(p).asScala.map(_.trim).exists { l =>
+        !l.startsWith("*") && !l.startsWith("/*") && !l.startsWith("//") &&
+          l.contains("SparkSession.builder")
+      }
+    val walk = Files.walk(root)
+    val builders = try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && callsBuilder(p))
+      .map(_.getFileName.toString).toSet
+    finally walk.close()
+    assert(builders === Set("Sessions.scala", "Smoke.scala"))
+  }
+}

@@ -30,6 +30,37 @@ class SkewSpec extends AnyFunSuite {
       .select("event_id", "c_name").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(salted === plain)
   }
+
+  test("fanOutNarrow launches no job for a frame that already shuffles, and returns it as is") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "marker"))
+          marker.countDown()
+        else started.incrementAndGet()
+    }
+    val agg = spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count()
+    sc.addSparkListener(listener)
+    val out = try {
+      val out = Skew.fanOutNarrow(agg)
+      // listener events arrive in job order: once the marker job's start
+      // is seen, every job fanOutNarrow launched has been counted
+      sc.setJobDescription("marker")
+      spark.range(1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      out
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    assert(started.get === 0, "fanOutNarrow ran the frame's upstream shuffle")
+    assert(out eq agg)
+    // a one-partition scan still fans out
+    assert(Skew.fanOutNarrow(spark.range(0, 1000, 1, 1).toDF()).rdd.getNumPartitions > 1)
+  }
 }
 
 class StatefulSessionsSpec extends AnyFunSuite {

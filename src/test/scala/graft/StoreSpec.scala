@@ -52,6 +52,44 @@ class StoreSpec extends AnyFunSuite {
     // resolves file: paths to the stock filesystem
     assert(!new Path(tmp.toUri).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .isInstanceOf[ForkFreeLocalFileSystem])
+
+    // IncrementalIndex's landing appends and its compaction go through the
+    // same writer, and leave what a stock write of the store's rows leaves
+    val all = Tables(spark, TestSpark.sfDir, "embeddings")
+    val (landing, sink) = (s"$tmp/landing", s"$tmp/sink")
+    def modesByKind(root: String): Map[String, Set[Int]] = layout(root).toSeq.collect {
+      case (k, m) if k.endsWith(".crc") => "crc" -> m
+      case (k, m) if k.endsWith(".parquet") => "parquet" -> m
+      case (k, m) if Files.isDirectory(Paths.get(root, k)) => "dir" -> m
+    }.groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    def dataFilesWithoutCrc(root: String): Seq[java.nio.file.Path] = {
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+        .filterNot(p => Files.exists(p.resolveSibling(s".${p.getFileName}.crc"))).toSeq
+      finally walk.close()
+    }
+    def matchesStock(step: String)(write: => Unit): Unit = {
+      val before = forkFreeBytes
+      write
+      assert(forkFreeBytes > before, s"$step did not use ForkFreeLocalFileSystem")
+      val copy = s"$tmp/stock_$step"
+      spark.read.parquet(sink).write.partitionBy("batch_id", "ivf_cell").parquet(copy)
+      assert(rows(sink) === rows(copy), step)
+      assert(modesByKind(sink) === modesByKind(copy), step)
+      assert(dataFilesWithoutCrc(sink).isEmpty, step)
+    }
+    for (b <- 0 until 2) {
+      all.filter(col("vec_id") % 2 === b).limit(20).write.mode("append").parquet(landing)
+      matchesStock(s"landing$b") {
+        graft.streaming.IncrementalIndex.updateDenseIndex(spark, landing, sink,
+          s"$tmp/ckpt", graft.operators.Similarity.centroids(all),
+          centroidIdCol = "label", cellCol = "ivf_cell")
+      }
+    }
+    matchesStock("compaction") {
+      graft.streaming.IncrementalIndex.compactCells(spark, sink, cellCol = "ivf_cell")
+    }
+    assert(rows(sink).size === 40)
   }
 
   test("ForkFreeLocalFileSystem sets modes in-process; a sticky bit goes through Hadoop") {
