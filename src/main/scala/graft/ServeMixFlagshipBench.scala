@@ -6,9 +6,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Endpoint-mix serving bench at FLAGSHIP geometry (VERDICT r14 #4):
-  * [[ServeMixBench]] measures the facade's composition on the sf-table
-  * corpus (~2k rows — where request latency is dominated by fixed
-  * planning cost); this one drives the SAME request mix against the
+  * perfbench's `serve_small` workload measures the facade's composition
+  * on a ~2k-row corpus (where request latency is dominated by fixed
+  * planning cost); this one drives the same kind of request mix against the
   * persisted 1M x d=768 store from [[IvfPqScaleProbe]] — serving-only,
   * no build — so the req/s and tail-latency numbers are at the geometry
   * where the CentroidCache and cell-store layout wins actually bind.

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * partition per core, AQE on, UTC session time, and TIMESTAMP(NANOS)
   * parquet columns read as longs — the dtype-strict shape the DuckDB
   * oracle compares against ([[Tables]] converts the longs back). `fair`
-  * turns on FAIR job scheduling, which the serving benches need so their
+  * turns on FAIR job scheduling, which the serving bench needs so its
   * concurrent client threads time-share the executor instead of queueing
   * whole jobs behind each other. */
 object Sessions {

@@ -2925,8 +2925,8 @@ object SparkEntry {
         val (l1, l2) = DenseArtifacts.hierarchy(s, dir)
         val emb = t(s, dir, "embeddings")
         val qv = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-        Similarity.ivfSearchPrunedTwoLevel(idx.cells, l1, l2, qv,
-          nprobeL1 = 2, nprobe = 2, k = 20)
+        Similarity.ivfSearchPruned(idx.cells, idx.centroids, qv,
+          nprobe = 2, k = 20, hierarchy = Some((l1, l2)), nprobeL1 = Some(2))
       },
       Some(s"""$ivfCellCtes,
              |$coarse2Ctes,

@@ -1266,24 +1266,30 @@ object Similarity {
       codes: DataFrame, codebooks: DataFrame, queryDf: DataFrame, k: Int,
       numSub: Int = 8, subDim: Int = 8,
       idCol: String = "vec_id"): DataFrame = {
-    val hasQid = queryDf.columns.contains("query_id")
-    val q = if (hasQid) queryDf else queryDf.withColumn("query_id", lit(0L))
-    val qsub = subvectors(q, "qv", "qsv", numSub, subDim, Seq("query_id"))
-    val qtab = codebooks.join(broadcast(qsub), Seq("m"))
-      .select(col("query_id"), col("m"), col("c"),
-        VectorOps.dot(col("cbv"), col("qsv")).as("p"))
-    val scored = codes
-      .join(broadcast(qtab),
-        codes("m") === qtab("m") && col("code") === col("c"))
-      .groupBy(col("query_id"), col(idCol))
-      .agg(sum(col("p").cast("decimal(18,12)")).cast("double").as("score"))
-      .select(col("query_id"), col(idCol), round(col("score"), 6).as("score"))
-    if (!hasQid)
-      scored.drop("query_id")
+    val pq = pqCodec(codes, codebooks, None, numSub, subDim)
+    if (queryDf.columns.contains("query_id"))
+      topKPerQuery(scoreRows(pq, codes, queryDf, Nil, Seq("query_id", idCol), "score"),
+        k, idCol, "score")
+    else
+      scoreRows(pq, codes, queryDf, Nil, Seq(idCol), "score")
         .orderBy(col("score").desc, col(idCol))
         .limit(k)
-    else topKPerQuery(scored, k, idCol, "score")
   }
+
+  /** The PQ ADC coarse codec over a persisted codes store. Its query side
+    * is the M x K lookup table of sub-vector dots, built here and nowhere
+    * else, from the query rotated into the codes' basis (a no-op without
+    * a `rotation`). A code row meets its M table entries on `(m, code)`. */
+  private def pqCodec(
+      codes: DataFrame, codebooks: DataFrame, rotation: Option[DataFrame],
+      numSub: Int, subDim: Int): Codec =
+    Codec(codes, q => {
+      val rq = rotateQueries(q, rotation, numSub, subDim)
+      val keep = rq.columns.toSeq.filter(_ == "query_id")
+      codebooks.join(broadcast(subvectors(rq, "qv", "qsv", numSub, subDim, keep)), Seq("m"))
+        .select(keep.map(col) ++ Seq(col("m"), col("c").as("code"),
+          VectorOps.dot(col("cbv"), col("qsv")).as("p")): _*)
+    }, col("p"), lookup = Seq("m", "code"))
 
   /** Re-express every vector in a FITTED orthonormal basis
     * ([[pcaTopComponents]] output — the OPQ-style rotation): coordinate c
@@ -1468,15 +1474,10 @@ object Similarity {
       codes: DataFrame, codebooks: DataFrame, rotation: DataFrame,
       queryDf: DataFrame, k: Int,
       numSub: Int = 8, subDim: Int = 8,
-      idCol: String = "vec_id"): DataFrame = {
-    val hasQid = queryDf.columns.contains("query_id")
-    val q = if (hasQid) queryDf else queryDf.withColumn("query_id", lit(0L))
-    val rq = rotateVectors(q.select(col("query_id"), col("qv")), rotation,
-      "query_id", "qv", allocate = Some((numSub, subDim)))
+      idCol: String = "vec_id"): DataFrame =
     pqAdcScore(codes, codebooks,
-      if (hasQid) rq else rq.drop("query_id"),
+      rotateQueries(queryDf, Some(rotation), numSub, subDim),
       k, numSub, subDim, idCol)
-  }
 
   /** Mean squared quantization error of a vector relation under a PQ
     * codebook: for every (row, subspace) subvector, the squared L2 distance
@@ -2694,15 +2695,6 @@ object Similarity {
     probeCellsL2(l2, gids, queryDf, nprobe, clusterCol)
   }
 
-  /** Coarse-probe DISPATCH shared by the quantized/refine serving paths
-    * (VERDICT r16 #4): with a two-level hierarchy the probe ranks the
-    * sqrt(nlist)-row L1 table and the opened groups' L2 partitions
-    * ([[probeCellsTwoLevel]]) — the flat centroid table is never
-    * materialized; without one it falls back to flat [[probeCells]].
-    * `nprobeL1` defaults to FULL level-1 probe, which reproduces the flat
-    * probe bit-for-bit (the [[probeCellsTwoLevel]] parity contract), so a
-    * caller without a calibrated pair loses no recall — only the
-    * calibrated partial probe trades recall for the sqrt driver bound. */
   /** Cached L1 group counts for the full-L1 default (ADVICE r17): with
     * `nprobeL1` unset the dispatch probes every group (flat-parity mode),
     * and resolving that default with `l1.count()` launched a Spark job
@@ -2726,6 +2718,15 @@ object Similarity {
     }
   }
 
+  /** Coarse-probe DISPATCH shared by every pruned serving path
+    * (VERDICT r16 #4): with a two-level hierarchy the probe ranks the
+    * sqrt(nlist)-row L1 table and the opened groups' L2 partitions
+    * ([[probeCellsTwoLevel]]) — the flat centroid table is never
+    * materialized; without one it falls back to flat [[probeCells]].
+    * `nprobeL1` defaults to FULL level-1 probe, which reproduces the flat
+    * probe bit-for-bit (the [[probeCellsTwoLevel]] parity contract), so a
+    * caller without a calibrated pair loses no recall — only the
+    * calibrated partial probe trades recall for the sqrt driver bound. */
   private[graft] def probeDispatch(
       centroids: DataFrame,
       hierarchy: Option[(DataFrame, DataFrame)],
@@ -2817,124 +2818,13 @@ object Similarity {
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
   }
 
-  /** [[ivfSearchPruned]] through the TWO-LEVEL coarse probe: identical
-    * serving tail (pruned cell scan, exact rescore, rounded top-k) with
-    * the probe list from [[probeCellsTwoLevel]] instead of the flat
-    * centroid ranking — the single-query serving form of the hierarchy.
-    * At full level-1 probe (nprobeL1 >= groups) the result is exactly
-    * [[ivfSearchPruned]] at the same nprobe. */
-  def ivfSearchPrunedTwoLevel(
-      cells: DataFrame,
-      l1: DataFrame,
-      l2: DataFrame,
-      queryDf: DataFrame,
-      nprobeL1: Int,
-      nprobe: Int,
-      k: Int,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      clusterCol: String = "cluster",
-      restrictIds: Option[DataFrame] = None,
-      excludeIds: Option[DataFrame] = None,
-      roundTo: Int = 4): DataFrame = {
-    val probed = probeCellsTwoLevel(l1, l2, queryDf, nprobeL1, nprobe, clusterCol)
-    scoreAll(
-      applyCandidateFilters(cells.filter(col(clusterCol).isin(probed: _*)),
-        idCol, restrictIds, excludeIds),
-      queryDf, idCol, vecCol)
-      .select(col(idCol), round(col("score"), roundTo).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** Batch [[ivfSearchBatchPruned]] through the two-level coarse probe —
-    * the serving shape [[calibrateNprobeL1]] measures recall against. */
-  def ivfSearchBatchPrunedTwoLevel(
-      cells: DataFrame,
-      l1: DataFrame,
-      l2: DataFrame,
-      queries: DataFrame,
-      nprobeL1: Int,
-      nprobe: Int,
-      k: Int,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      clusterCol: String = "cluster"): DataFrame = {
-    val spark = cells.sparkSession
-    import spark.implicits._
-    val probed = probeCellsTwoLevelBatch(l1, l2, queries, nprobeL1, nprobe,
-      clusterCol)
-    val probedDf = probed.toDF("query_id", clusterCol)
-    val cellUnion = probed.map(_._2).distinct
-    topKPerQuery(
-      cells.filter(col(clusterCol).isin(cellUnion: _*))
-        .join(broadcast(probedDf), Seq(clusterCol))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col(idCol),
-          round(VectorOps.dot(col(vecCol), col("qv")), 4).as("sim")),
-      k, idCol, "sim")
-  }
-
-  /** BUILD-TIME nprobeL1 calibration (the [[calibrateNprobe]] analog for
-    * the hierarchy's level-1 knob): the smallest nprobeL1 whose measured
-    * recall@k through [[ivfSearchBatchPrunedTwoLevel]] — at the index's
-    * already-calibrated `nprobe` — meets `targetRecall`. Recall is
-    * near-monotone in nprobeL1 (more opened groups widen the candidate
-    * centroid pool; the probed cell set is not a strict superset, so the
-    * exponential + binary search is the same pragmatic assumption FAISS
-    * IMI users sweep by hand), and REACHABLE by construction: at
-    * nprobeL1 >= groups the two-level probe IS the flat probe
-    * (CoarseHierarchySpec pins bit-parity), so any target the nprobe
-    * calibration met is met at the cap. Returning `groups` therefore
-    * means "serve full level-1 probe", never an unreachable knob. */
-  def calibrateNprobeL1(
-      cells: DataFrame,
-      l1: DataFrame,
-      l2: DataFrame,
-      queries: DataFrame,
-      nprobe: Int,
-      k: Int,
-      targetRecall: Double,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      clusterCol: String = "cluster",
-      truth: Option[Map[Long, Set[Long]]] = None): Int = {
-    require(targetRecall > 0 && targetRecall <= 1.0,
-      s"targetRecall must be in (0, 1], got $targetRecall")
-    val exact = truth.getOrElse(
-      calibrationTruth(cells, queries, k, idCol, vecCol))
-    require(exact.nonEmpty, "calibration query sample is empty")
-    val groups = l1.count().toInt
-    val memo = scala.collection.mutable.Map.empty[Int, Double]
-    def recallAt(npL1: Int): Double = memo.getOrElseUpdate(npL1, {
-      val ann = ivfSearchBatchPrunedTwoLevel(cells, l1, l2, queries, npL1,
-          nprobe, k, idCol, vecCol, clusterCol)
-        .collect().map(r => r.getLong(0) -> r.getLong(1))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      exact.map { case (q, ids) =>
-        ids.intersect(ann.getOrElse(q, Set.empty)).size.toDouble / ids.size
-      }.sum / exact.size
-    })
-    var lo = 1
-    var hi = 1
-    while (hi < groups && recallAt(hi) < targetRecall) {
-      lo = hi + 1
-      hi = math.min(groups, hi * 2)
-    }
-    while (lo < hi) {
-      val mid = (lo + hi) / 2
-      if (recallAt(mid) >= targetRecall) hi = mid else lo = mid + 1
-    }
-    lo
-  }
-
   /** JOINT (nprobeL1, nprobe) calibration (VERDICT r16 #7): the two
     * knobs TRADE OFF — opening more L1 groups widens the candidate
     * centroid pool while probing more cells deepens the corpus scan —
     * and the measured surface has non-monotone cross terms (RECALL.md
     * r16: 0.885@16/64 vs 0.870@32/64), so calibrating nprobe flat first
-    * and nprobeL1 second ([[calibrateNprobeL1]]) can land a costlier
-    * pair than the target needs. This sweeps the exponential nprobeL1
+    * and nprobeL1 second can land a costlier pair than the target needs.
+    * This sweeps the exponential nprobeL1
     * ladder 1, 2, 4, ..., groups; AT A FIXED rung recall is monotone in
     * nprobe (the opened-group set is fixed, so probing more cells scans
     * a superset) and the minimum feasible nprobe is found exactly. Among
@@ -2959,8 +2849,8 @@ object Similarity {
     * or above t, hence at or above the query's k-th exact score, so
     * collecting rows with `sim >= that threshold` (a request-bounded
     * set) makes recall at ANY np pure driver arithmetic, bit-identical
-    * to [[ivfSearchBatchPrunedTwoLevel]]'s result. The full-L1 ranking
-    * is computed once for the whole sweep (it is rung-independent).
+    * to the two-level [[ivfSearchBatchPruned]] result. The full-L1
+    * ranking is computed once for the whole sweep (it is rung-independent).
     * Total: ~2 full-corpus-equivalent scans across the ladder instead
     * of O(log groups · log nlist) serving runs. */
   def calibrateNprobePair(
@@ -3173,16 +3063,151 @@ object Similarity {
     excludeIds.fold(r)(ids => Candidates.exclude(r, ids, idCol))
   }
 
+  /** A family's coarse score, defined once for both query shapes — the
+    * stage FAISS's `IndexRefineFlat` puts in front of its exact re-rank.
+    *  - `store`: the cell-partitioned frame the stage scans, with the id
+    *    and cell columns.
+    *  - `query`: the query side, derived from the `(qv)` or
+    *    `(query_id, qv)` frame; it must keep `query_id` when present.
+    *  - `score`: one row's score as a double, higher ranks first. It is
+    *    integer-valued or rounded, so the shortlist boundary is
+    *    engine-portable.
+    *  - `lookup`: equi-join keys into the query side (PQ ADC's
+    *    `(m, code)`). With keys, a row meets one query-side entry per key
+    *    and scores the exact decimal sum of `score` over them, rounded
+    *    at 6. */
+  private final case class Codec(
+      store: DataFrame,
+      query: DataFrame => DataFrame,
+      score: Column,
+      lookup: Seq[String] = Nil)
+
+  /** The exact stage: the rounded inner product over the float cells. */
+  private def exactCodec(cells: DataFrame, vecCol: String, roundTo: Int): Codec =
+    Codec(cells, identity, round(VectorOps.dot(col(vecCol), col("qv")), roundTo))
+
+  /** What an IVF request scores once its cells are probed: an optional
+    * coarse stage that shortlists `kCoarse` rows per query, then the
+    * `last` stage's top-`k`, over the shortlist when there is one.
+    * `admit` filters the first stage's pruned rows (candidate sets, an
+    * attribute predicate), so a shortlist holds only admissible ids.
+    * `scoreName` names the output score column. Invalid sizes fail here,
+    * before any probe job runs. */
+  private final case class ServePlan(
+      coarse: Option[(Codec, Int)],
+      last: Codec,
+      k: Int,
+      idCol: String,
+      clusterCol: String,
+      admit: DataFrame => DataFrame = identity,
+      scoreName: String = "score") {
+    require(k > 0, s"k must be positive, got $k")
+    coarse.foreach { case (_, kCoarse) =>
+      require(kCoarse >= k, s"coarse shortlist kCoarse=$kCoarse must cover final k=$k")
+    }
+  }
+
+  /** The IVF serving core: probe → prune to the probed cells → optional
+    * coarse shortlist → top-k, written once per query shape. Every pruned
+    * and refine serving form below is one call into it. A single query is
+    * a batch of one, as in FAISS's `index.search(x, k)`; the two shapes
+    * differ in exactly four places:
+    *  - probe: [[probeDispatch]] vs [[probeDispatchBatch]] (flat
+    *    centroids, or the two-level `hierarchy`);
+    *  - meeting the query: a single query reaches the probed cells' rows
+    *    through a broadcast cross join; a batch joins them on the probed
+    *    `(query_id, cell)` pairs and then on `query_id`, so each row is
+    *    scored only for the queries probing its cell;
+    *  - shortlist hand-off: a left-semi join on the id vs a join on the
+    *    `(query_id, id)` shortlist;
+    *  - top-k: `orderBy` + `limit` (TakeOrderedAndProject, ties to the
+    *    lower id) vs the bounded [[topKPerQuery]] aggregator.
+    * Each stage scans its store pruned by a literal `IN` on the probed
+    * cells (the batch's union of them), so every scan keeps directory
+    * `PartitionFilters`. */
+  private def ivfServe(
+      queries: DataFrame,
+      batch: Boolean,
+      centroids: DataFrame,
+      hierarchy: Option[(DataFrame, DataFrame)],
+      nprobeL1: Option[Int],
+      nprobe: Int,
+      plan: ServePlan): DataFrame = {
+    require(nprobe > 0, s"nprobe must be positive, got $nprobe")
+    require(nprobeL1.forall(_ > 0), s"nprobeL1 must be positive, got ${nprobeL1.getOrElse(0)}")
+    if (batch)
+      serveBatch(queries, probeDispatchBatch(centroids, hierarchy, queries,
+        nprobeL1, nprobe, plan.clusterCol), plan)
+    else
+      serveOne(queries, probeDispatch(centroids, hierarchy, queries,
+        nprobeL1, nprobe, plan.clusterCol), plan)
+  }
+
+  /** The single-query tail of [[ivfServe]] over a probed cell list. */
+  private def serveOne(queryDf: DataFrame, probed: Seq[Int], plan: ServePlan): DataFrame = {
+    import plan._
+    def scan(c: Codec) = c.store.filter(col(clusterCol).isin(probed: _*))
+    def top(c: Codec, rows: DataFrame, n: Int) =
+      scoreRows(c, rows, queryDf, Nil, Seq(idCol), scoreName)
+        .orderBy(col(scoreName).desc, col(idCol).asc)
+        .limit(n)
+    coarse match {
+      case None => top(last, admit(scan(last)), k)
+      case Some((c, kCoarse)) =>
+        val shortlist = top(c, admit(scan(c)), kCoarse).select(col(idCol))
+        top(last, scan(last).join(broadcast(shortlist), Seq(idCol), "left_semi"), k)
+    }
+  }
+
+  /** The batch tail of [[ivfServe]] over probed `(query_id, cell)` pairs;
+    * `queries` is a small `(query_id LONG, qv)` frame. */
+  private def serveBatch(
+      queries: DataFrame, probed: Seq[(Long, Int)], plan: ServePlan): DataFrame = {
+    import plan._
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val probedDf = broadcast(probed.toDF("query_id", clusterCol))
+    val cellUnion = probed.map(_._2).distinct
+    def scan(c: Codec) = c.store.filter(col(clusterCol).isin(cellUnion: _*))
+    def top(c: Codec, rows: DataFrame, n: Int) = topKPerQuery(
+      scoreRows(c, rows, queries, Seq("query_id"), Seq("query_id", idCol), scoreName),
+      n, idCol, scoreName)
+    coarse match {
+      case None => top(last, admit(scan(last)).join(probedDf, Seq(clusterCol)), k)
+      case Some((c, kCoarse)) =>
+        val shortlist = top(c, admit(scan(c)).join(probedDf, Seq(clusterCol)), kCoarse)
+          .select(col("query_id"), col(idCol))
+        top(last, scan(last).join(broadcast(shortlist), Seq(idCol)), k)
+    }
+  }
+
+  /** Scores `rows` with codec `c` against the broadcast query side, joined
+    * on `on` plus the codec's lookup keys (a cross join when there are
+    * none); the output is the `by` columns and the score as `name`. */
+  private def scoreRows(
+      c: Codec, rows: DataFrame, queries: DataFrame,
+      on: Seq[String], by: Seq[String], name: String): DataFrame = {
+    val side = broadcast(c.query(queries))
+    val keys = on ++ c.lookup
+    val met = if (keys.isEmpty) rows.crossJoin(side) else rows.join(side, keys)
+    if (c.lookup.isEmpty) met.select(by.map(col) :+ c.score.as(name): _*)
+    else met.groupBy(by.map(col): _*)
+      .agg(round(sum(c.score.cast("decimal(18,12)")).cast("double"), 6).as(name))
+  }
+
   /** IVF serving against a cell-PARTITIONED corpus table (the persisted
-    * [[assignCells]] output): probe driver-side ([[probeCells]]), prune the
-    * scan to the probed cells' partitions with a literal `IN`, exact-rescore
-    * only those rows. The serving-time plan touches ~nprobe/k of the data
-    * and NEVER trains — centroids come from the fitted artifact
-    * ([[kmeansFit]] at build time). `restrictIds`/`excludeIds` push a
-    * per-request candidate filter into the pruned scan
+    * [[assignCells]] output): probe driver-side ([[probeCells]], or the
+    * two-level [[probeCellsTwoLevel]] when a `hierarchy` is given), prune
+    * the scan to the probed cells' partitions with a literal `IN`,
+    * exact-rescore only those rows. The serving-time plan touches
+    * ~nprobe/k of the data and NEVER trains — centroids come from the
+    * fitted artifact ([[kmeansFit]] at build time). `restrictIds`/
+    * `excludeIds` push a per-request candidate filter into the pruned scan
     * ([[applyCandidateFilters]] — the `IDSelectorArray` analog). The k
     * boundary ranks on the ROUNDED score (ties to the lower id) — the
-    * engine-portable boundary every oracle-checked serving path uses. */
+    * engine-portable boundary every oracle-checked serving path uses.
+    * `nprobeL1` defaults to full level-1 probe, which equals the flat
+    * probe. */
   def ivfSearchPruned(
       cells: DataFrame,
       centroids: DataFrame,
@@ -3194,16 +3219,12 @@ object Similarity {
       clusterCol: String = "cluster",
       restrictIds: Option[DataFrame] = None,
       excludeIds: Option[DataFrame] = None,
-      roundTo: Int = 4): DataFrame = {
-    val probed = probeCells(centroids, queryDf, nprobe, clusterCol)
-    scoreAll(
-      applyCandidateFilters(cells.filter(col(clusterCol).isin(probed: _*)),
-        idCol, restrictIds, excludeIds),
-      queryDf, idCol, vecCol)
-      .select(col(idCol), round(col("score"), roundTo).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
+      roundTo: Int = 4,
+      hierarchy: Option[(DataFrame, DataFrame)] = None,
+      nprobeL1: Option[Int] = None): DataFrame =
+    ivfServe(queryDf, batch = false, centroids, hierarchy, nprobeL1, nprobe,
+      ServePlan(None, exactCodec(cells, vecCol, roundTo), k, idCol, clusterCol,
+        applyCandidateFilters(_, idCol, restrictIds, excludeIds)))
 
   /** Per-cell RADIUS artifact for range-search pruning: `r_c = max over
     * the cell's rows of ||x - centroid_c||` — one corpus pass at build
@@ -3344,40 +3365,12 @@ object Similarity {
       clusterCol: String = "cluster",
       roundTo: Int = 4,
       hierarchy: Option[(DataFrame, DataFrame)] = None,
-      nprobeL1: Option[Int] = None): DataFrame = {
-    require(kCoarse >= k, s"coarse shortlist $kCoarse must cover final k=$k")
-    require(dPrime > 0, s"truncation dimension must be positive, got $dPrime")
-    // hierarchy dispatch (VERDICT r17 #3): a big-nlist index probes the
-    // sqrt-bounded (l1, l2) pair instead of ranking the flat centroid
-    // table; full-L1 default keeps bit parity with the flat probe
-    val probed = probeDispatch(centroids, hierarchy, queryDf, nprobeL1, nprobe, clusterCol)
-    val qTrunc = broadcast(queryDf.select(slice(col("qv"), 1, dPrime).as("qtv")))
-    val shortlist = cells.filter(col(clusterCol).isin(probed: _*))
-      .crossJoin(qTrunc)
-      .select(col(idCol),
-        round(VectorOps.dot(slice(col(vecCol), 1, dPrime), col("qtv")), 6)
-          .as("cscore"))
-      .orderBy(col("cscore").desc, col(idCol).asc)
-      .limit(kCoarse)
-    // rank on the ROUNDED exact full-dim score (engine-portable at k)
-    scoreAll(
-      cells.filter(col(clusterCol).isin(probed: _*))
-        .join(broadcast(shortlist.select(col(idCol))), Seq(idCol), "left_semi"),
-      queryDf, idCol, vecCol)
-      .select(col(idCol), round(col("score"), roundTo).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
+      nprobeL1: Option[Int] = None): DataFrame =
+    ivfServe(queryDf, batch = false, centroids, hierarchy, nprobeL1, nprobe,
+      ServePlan(Some((matryoshkaCodec(cells, dPrime, vecCol), kCoarse)),
+        exactCodec(cells, vecCol, roundTo), k, idCol, clusterCol))
 
-  /** Batch form of [[matryoshkaRefineSearch]] — the two-pruned-pass shape
-    * of [[ivfInt8RefineSearchBatch]] over the truncated-prefix coarse
-    * rank (r19): one scan of the probed cells scores each row's FIRST
-    * `dPrime` coordinates against the queries probing its cell (rounded
-    * at 6 like the single form, ties to the lower id), per-query
-    * `kCoarse` shortlists, then one scan of the same cells re-scores only
-    * the broadcast shortlist pairs at full dimension for the final
-    * per-query top-k. Single-form parity is spec-pinned
-    * (CoarseHierarchySpec). */
+  /** Batch form of [[matryoshkaRefineSearch]]. */
   def matryoshkaRefineSearchBatch(
       cells: DataFrame,
       centroids: DataFrame,
@@ -3391,31 +3384,17 @@ object Similarity {
       clusterCol: String = "cluster",
       roundTo: Int = 4,
       hierarchy: Option[(DataFrame, DataFrame)] = None,
-      nprobeL1: Option[Int] = None): DataFrame = {
-    require(kCoarse >= k, s"coarse shortlist $kCoarse must cover final k=$k")
+      nprobeL1: Option[Int] = None): DataFrame =
+    ivfServe(queries, batch = true, centroids, hierarchy, nprobeL1, nprobe,
+      ServePlan(Some((matryoshkaCodec(cells, dPrime, vecCol), kCoarse)),
+        exactCodec(cells, vecCol, roundTo), k, idCol, clusterCol))
+
+  /** The matryoshka coarse codec: the dot over the first `dPrime`
+    * coordinates of the float cells, rounded at 6. */
+  private def matryoshkaCodec(cells: DataFrame, dPrime: Int, vecCol: String): Codec = {
     require(dPrime > 0, s"truncation dimension must be positive, got $dPrime")
-    val spark = cells.sparkSession
-    import spark.implicits._
-    val probed = probeDispatchBatch(centroids, hierarchy, queries, nprobeL1, nprobe, clusterCol)
-    val probedDf = probed.toDF("query_id", clusterCol)
-    val cellUnion = probed.map(_._2).distinct
-    val qTrunc = queries.select(col("query_id"), slice(col("qv"), 1, dPrime).as("qtv"))
-    val shortlist = topKPerQuery(
-      cells.filter(col(clusterCol).isin(cellUnion: _*))
-        .join(broadcast(probedDf), Seq(clusterCol))
-        .join(broadcast(qTrunc), Seq("query_id"))
-        .select(col("query_id"), col(idCol),
-          round(VectorOps.dot(slice(col(vecCol), 1, dPrime), col("qtv")), 6)
-            .as("score")),
-      kCoarse, idCol, "score")
-      .select(col("query_id"), col(idCol))
-    topKPerQuery(
-      cells.filter(col(clusterCol).isin(cellUnion: _*))
-        .join(broadcast(shortlist), Seq(idCol))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col(idCol),
-          round(VectorOps.dot(col(vecCol), col("qv")), roundTo).as("score")),
-      k, idCol, "score")
+    Codec(cells, _.withColumn("qtv", slice(col("qv"), 1, dPrime)),
+      round(VectorOps.dot(slice(col(vecCol), 1, dPrime), col("qtv")), 6))
   }
 
   /** Filtered-ANN probe PLANNING: a fixed nprobe under a selective
@@ -3465,23 +3444,17 @@ object Similarity {
       admissible: Option[Column] = None,
       hierarchy: Option[(DataFrame, DataFrame)] = None,
       nprobeL1: Option[Int] = None): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
+    val plan = ServePlan(None, exactCodec(cells, vecCol, roundTo), k, idCol, clusterCol,
+      rows => applyCandidateFilters(admissible.fold(rows)(rows.filter),
+        idCol, restrictIds, excludeIds))
     require(admissible.isEmpty || cellStats.isDefined,
       "an admissible predicate plans from the cellStats histogram — build " +
         "it (buildDenseIndex statsCols) or express the filter as restrictIds")
     val counts = cellStatsCounts(cells, cellStats, admissible,
       restrictIds, excludeIds, idCol, clusterCol)
-    // the minimal score-ordered prefix of a cell ranking whose cumulative
-    // admissible count reaches k (every ranked cell when the whole
-    // ranking holds fewer)
-    def prefixFor(ranked: Seq[Int]): Seq[Int] = {
-      val cum = ranked.scanLeft(0L)((acc, c) => acc + counts.getOrElse(c, 0L)).tail
-      val reachK = cum.indexWhere(_ >= k)
-      ranked.take(math.max(if (reachK >= 0) reachK + 1 else ranked.length, 1))
-    }
     val probed = hierarchy match {
       case None =>
-        prefixFor(probeCells(centroids, queryDf, Int.MaxValue, clusterCol))
+        admissiblePrefix(probeCells(centroids, queryDf, Int.MaxValue, clusterCol), counts, k)
       case Some((l1, l2)) =>
         // TWO-LEVEL ADAPTIVE PLANNING (VERDICT r17 #3): the flat form
         // ranks ALL cells per request — at nlist ~ 1e5 that materializes
@@ -3507,19 +3480,21 @@ object Similarity {
           val ranked = probeCellsL2(l2, gidsRanked.take(g), queryDf,
             Int.MaxValue, clusterCol)
           val total = ranked.foldLeft(0L)((acc, c) => acc + counts.getOrElse(c, 0L))
-          if (total >= k || g >= groups) result = Some(prefixFor(ranked))
+          if (total >= k || g >= groups) result = Some(admissiblePrefix(ranked, counts, k))
           else g = math.min(groups, g * 2)
         }
         result.get
     }
-    val pruned = cells.filter(col(clusterCol).isin(probed: _*))
-    scoreAll(
-      applyCandidateFilters(admissible.fold(pruned)(pruned.filter),
-        idCol, restrictIds, excludeIds),
-      queryDf, idCol, vecCol)
-      .select(col(idCol), round(col("score"), roundTo).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    serveOne(queryDf, probed, plan)
+  }
+
+  /** The minimal score-ordered prefix of a cell ranking whose cumulative
+    * admissible count reaches k (every ranked cell when the whole ranking
+    * holds fewer; at least one cell). */
+  private def admissiblePrefix(ranked: Seq[Int], counts: Map[Int, Long], k: Int): Seq[Int] = {
+    val cum = ranked.scanLeft(0L)((acc, c) => acc + counts.getOrElse(c, 0L)).tail
+    val reachK = cum.indexWhere(_ >= k)
+    ranked.take(math.max(if (reachK >= 0) reachK + 1 else ranked.length, 1))
   }
 
   /** Per-cell admissible counts for adaptive probe planning — the
@@ -3588,12 +3563,9 @@ object Similarity {
     // ADC stage sees the rotated query. Pass `DenseIndex.rotation` here
     // whenever the index was built with `opqRotateIters` — feeding a
     // rotated codes store a raw query silently scores in mismatched bases.
-    val probed = probeDispatch(centroids, hierarchy, queryDf, nprobeL1, nprobe, clusterCol)
-    pqAdcScore(
-      applyCandidateFilters(codes.filter(col(clusterCol).isin(probed: _*)),
-        idCol, restrictIds, excludeIds),
-      codebooks, rotateQueries(queryDf, rotation, numSub, subDim),
-      k, numSub, subDim, idCol)
+    ivfServe(queryDf, batch = false, centroids, hierarchy, nprobeL1, nprobe,
+      ServePlan(None, pqCodec(codes, codebooks, rotation, numSub, subDim),
+        k, idCol, clusterCol, applyCandidateFilters(_, idCol, restrictIds, excludeIds)))
   }
 
   /** Rotate a `(qv)` / `(query_id, qv)` query frame into an OPQ index's
@@ -3642,37 +3614,16 @@ object Similarity {
       excludeIds: Option[DataFrame] = None,
       rotation: Option[DataFrame] = None,
       hierarchy: Option[(DataFrame, DataFrame)] = None,
-      nprobeL1: Option[Int] = None): DataFrame = {
-    require(kCoarse >= k, s"coarse shortlist $kCoarse must cover final k=$k")
+      nprobeL1: Option[Int] = None): DataFrame =
     // OPQ basis discipline (see [[ivfPqSearchPruned]]): probe raw, ADC
     // rotated, exact refine raw — the refine stage re-scores ORIGINAL
     // vectors, so the raw query is already the right operand there.
-    val probed = probeDispatch(centroids, hierarchy, queryDf, nprobeL1, nprobe, clusterCol)
-    val shortlist = pqAdcScore(
-      applyCandidateFilters(codes.filter(col(clusterCol).isin(probed: _*)),
-        idCol, restrictIds, excludeIds),
-      codebooks, rotateQueries(queryDf, rotation, numSub, subDim),
-      kCoarse, numSub, subDim, idCol)
-    // rank on the ROUNDED exact score (engine-portable boundary at k)
-    scoreAll(
-      cells.filter(col(clusterCol).isin(probed: _*))
-        .join(broadcast(shortlist.select(col(idCol))), Seq(idCol), "left_semi"),
-      queryDf, idCol, vecCol)
-      .select(col(idCol), round(col("score"), roundTo).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
+    ivfServe(queryDf, batch = false, centroids, hierarchy, nprobeL1, nprobe,
+      ServePlan(Some((pqCodec(codes, codebooks, rotation, numSub, subDim), kCoarse)),
+        exactCodec(cells, vecCol, roundTo), k, idCol, clusterCol,
+        applyCandidateFilters(_, idCol, restrictIds, excludeIds)))
 
-  /** Batch form of [[ivfPqRefineSearch]] — the production batch-ANN
-    * request shape as TWO pruned passes instead of 2 x Q jobs: the batch
-    * ADC stage ([[ivfPqSearchBatchPruned]] — one scan of the probed
-    * cells' CODE partitions, per-query `kCoarse` shortlists through the
-    * bounded aggregator), then ONE scan of the same probed cells'
-    * ORIGINAL vectors, inner-joined to the broadcast
-    * (query_id, id) shortlist (Q x kCoarse rows — request-sized) and
-    * exactly re-scored per shortlisting query for the final per-query
-    * top-k. Same OPQ basis discipline as the single-query form: probe
-    * raw, ADC rotated, exact refine raw. */
+  /** Batch form of [[ivfPqRefineSearch]]. */
   def ivfPqRefineSearchBatch(
       cells: DataFrame,
       codes: DataFrame,
@@ -3690,25 +3641,10 @@ object Similarity {
       roundTo: Int = 4,
       rotation: Option[DataFrame] = None,
       hierarchy: Option[(DataFrame, DataFrame)] = None,
-      nprobeL1: Option[Int] = None): DataFrame = {
-    require(kCoarse >= k, s"coarse shortlist $kCoarse must cover final k=$k")
-    // ONE probe pass shared by both stages (mirrors
-    // [[ivfInt8RefineSearchBatch]]'s shared probed list — ADVICE r12):
-    // the ADC stage and the exact stage prune to the same cell union.
-    val probed = probeDispatchBatch(centroids, hierarchy, queries, nprobeL1, nprobe, clusterCol)
-    val shortlist = ivfPqSearchBatchProbed(
-      codes, codebooks, queries, probed, kCoarse,
-      numSub, subDim, idCol, clusterCol, rotation)
-      .select(col("query_id"), col(idCol))
-    val cellUnion = probed.map(_._2).distinct
-    topKPerQuery(
-      cells.filter(col(clusterCol).isin(cellUnion: _*))
-        .join(broadcast(shortlist), Seq(idCol))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col(idCol),
-          round(VectorOps.dot(col(vecCol), col("qv")), roundTo).as("score")),
-      k, idCol, "score")
-  }
+      nprobeL1: Option[Int] = None): DataFrame =
+    ivfServe(queries, batch = true, centroids, hierarchy, nprobeL1, nprobe,
+      ServePlan(Some((pqCodec(codes, codebooks, rotation, numSub, subDim), kCoarse)),
+        exactCodec(cells, vecCol, roundTo), k, idCol, clusterCol))
 
   /** Scalar int8 encoding of the cell-partitioned corpus — the storage
     * shape of FAISS `IndexIVFScalarQuantizer` (SQ8): symmetric
@@ -3765,17 +3701,19 @@ object Similarity {
       ranges: DataFrame,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-      clusterCol: String = "cluster"): DataFrame = {
-    val packed = ranges
-      .agg(array_sort(collect_list(struct(col("dim"), col("maxabs")))).as("__r"))
-      .select(transform(col("__r"), s => s.getField("maxabs")).as("__ma"))
-    cells.crossJoin(broadcast(packed))
+      clusterCol: String = "cluster"): DataFrame =
+    cells.crossJoin(broadcast(packRanges(ranges)))
       .select(col(idCol) +: col(clusterCol) +: Seq(
         zip_with(col(vecCol), col("__ma"), (x, ma) =>
           when(ma === 0d, lit(0d)).otherwise(
             greatest(lit(-127d), least(lit(127d),
               round(x.cast("double") / ma * 127)))).cast("tinyint")).as("q8")): _*)
-  }
+
+  /** The trained ranges as one dim-ordered `__ma` array row. */
+  private def packRanges(ranges: DataFrame): DataFrame =
+    ranges
+      .agg(array_sort(collect_list(struct(col("dim"), col("maxabs")))).as("__r"))
+      .select(transform(col("__r"), s => s.getField("maxabs")).as("__ma"))
 
   /** Two-stage IVF-SQ8 serving over a TRAINED-range byte store (the
     * [[ivfInt8RefineSearch]] sibling for non-normalized families): the
@@ -3803,31 +3741,19 @@ object Similarity {
       roundTo: Int = 4,
       hierarchy: Option[(DataFrame, DataFrame)] = None,
       nprobeL1: Option[Int] = None): DataFrame = {
-    require(kCoarse >= k, s"coarse shortlist $kCoarse must cover final k=$k")
-    val probed = probeDispatch(centroids, hierarchy, queryDf, nprobeL1, nprobe, clusterCol)
-    val packed = ranges
-      .agg(array_sort(collect_list(struct(col("dim"), col("maxabs")))).as("__r"))
-      .select(transform(col("__r"), s => s.getField("maxabs")).as("__ma"))
-    val shortlist = int8Store.filter(col(clusterCol).isin(probed: _*))
-      .crossJoin(broadcast(queryDf.select(col("qv"))))
-      .crossJoin(broadcast(packed))
-      .select(col(idCol),
-        round(
-          aggregate(
-            zip_with(
-              zip_with(col("q8"), col("qv"),
-                (a, b) => a.cast("double") * b.cast("double")),
-              col("__ma"), (p, ma) => p * ma),
-            lit(0d), (acc, v) => acc + v) / 127d, 6).as("score_c"))
-      .orderBy(col("score_c").desc, col(idCol).asc)
-      .limit(kCoarse)
-    scoreAll(
-      cells.filter(col(clusterCol).isin(probed: _*))
-        .join(broadcast(shortlist.select(col(idCol))), Seq(idCol), "left_semi"),
-      queryDf, idCol, vecCol)
-      .select(col(idCol), round(col("score"), roundTo).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    // the query side carries the packed per-dim scales
+    val scales = broadcast(packRanges(ranges))
+    val trained = Codec(int8Store, _.crossJoin(scales),
+      round(
+        aggregate(
+          zip_with(
+            zip_with(col("q8"), col("qv"),
+              (a, b) => a.cast("double") * b.cast("double")),
+            col("__ma"), (p, ma) => p * ma),
+          lit(0d), (acc, v) => acc + v) / 127d, 6))
+    ivfServe(queryDf, batch = false, centroids, hierarchy, nprobeL1, nprobe,
+      ServePlan(Some((trained, kCoarse)), exactCodec(cells, vecCol, roundTo),
+        k, idCol, clusterCol))
   }
 
   /** Two-stage IVF-SQ8 + exact-refine serving (the scalar-quantizer
@@ -3853,43 +3779,12 @@ object Similarity {
       clusterCol: String = "cluster",
       roundTo: Int = 4,
       hierarchy: Option[(DataFrame, DataFrame)] = None,
-      nprobeL1: Option[Int] = None): DataFrame = {
-    require(kCoarse >= k, s"coarse shortlist $kCoarse must cover final k=$k")
-    val probed = probeDispatch(centroids, hierarchy, queryDf, nprobeL1, nprobe, clusterCol)
-    // SAME saturation clamp as the corpus store ([[int8EncodeCells]]):
-    // an out-of-range query coordinate must quantize symmetrically with
-    // the corpus side or the integer score diverges from a
-    // symmetric-clamped engine (ADVICE r12)
-    val q8 = broadcast(queryDf.select(
-      transform(col("qv"), x => greatest(lit(-127d), least(lit(127d),
-        round(x.cast("double") * 127))).cast("long"))
-        .as("q8v")))
-    val shortlist = int8Store.filter(col(clusterCol).isin(probed: _*))
-      .crossJoin(q8)
-      .select(col(idCol),
-        aggregate(zip_with(col("q8"), col("q8v"), (a, b) => a.cast("long") * b),
-          lit(0L), (acc, v) => acc + v).as("score_i"))
-      .orderBy(col("score_i").desc, col(idCol).asc)
-      .limit(kCoarse)
-    // rank on the ROUNDED exact score (engine-portable boundary at k)
-    scoreAll(
-      cells.filter(col(clusterCol).isin(probed: _*))
-        .join(broadcast(shortlist.select(col(idCol))), Seq(idCol), "left_semi"),
-      queryDf, idCol, vecCol)
-      .select(col(idCol), round(col("score"), roundTo).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
+      nprobeL1: Option[Int] = None): DataFrame =
+    ivfServe(queryDf, batch = false, centroids, hierarchy, nprobeL1, nprobe,
+      ServePlan(Some((int8Codec(int8Store), kCoarse)),
+        exactCodec(cells, vecCol, roundTo), k, idCol, clusterCol))
 
-  /** Batch form of [[ivfInt8RefineSearch]] — same two-pruned-pass shape
-    * as [[ivfPqRefineSearchBatch]] over the BYTE-per-dim store: one scan
-    * of the probed cells' int8 partitions scores each row in pure integer
-    * arithmetic against the queries probing its cell (the long dot is
-    * < 2^53 below d ~ 2^38, so the double hand-off to the bounded
-    * aggregator is exact and the integer (score desc, id asc) order is
-    * preserved), per-query `kCoarse` shortlists, then one scan of the
-    * same cells' original vectors re-scores only the broadcast shortlist
-    * pairs for the final per-query top-k. */
+  /** Batch form of [[ivfInt8RefineSearch]]. */
   def ivfInt8RefineSearchBatch(
       int8Store: DataFrame,
       cells: DataFrame,
@@ -3903,35 +3798,24 @@ object Similarity {
       clusterCol: String = "cluster",
       roundTo: Int = 4,
       hierarchy: Option[(DataFrame, DataFrame)] = None,
-      nprobeL1: Option[Int] = None): DataFrame = {
-    require(kCoarse >= k, s"coarse shortlist $kCoarse must cover final k=$k")
-    val spark = int8Store.sparkSession
-    import spark.implicits._
-    val probed = probeDispatchBatch(centroids, hierarchy, queries, nprobeL1, nprobe, clusterCol)
-    val probedDf = probed.toDF("query_id", clusterCol)
-    val cellUnion = probed.map(_._2).distinct
-    // query-side saturation clamp mirrors [[int8EncodeCells]] (ADVICE r12)
-    val q8 = queries.select(col("query_id"),
-      transform(col("qv"), x => greatest(lit(-127d), least(lit(127d),
-        round(x.cast("double") * 127))).cast("long"))
-        .as("q8v"))
-    val shortlist = topKPerQuery(
-      int8Store.filter(col(clusterCol).isin(cellUnion: _*))
-        .join(broadcast(probedDf), Seq(clusterCol))
-        .join(broadcast(q8), Seq("query_id"))
-        .select(col("query_id"), col(idCol),
-          aggregate(zip_with(col("q8"), col("q8v"), (a, b) => a.cast("long") * b),
-            lit(0L), (acc, v) => acc + v).cast("double").as("score")),
-      kCoarse, idCol, "score")
-      .select(col("query_id"), col(idCol))
-    topKPerQuery(
-      cells.filter(col(clusterCol).isin(cellUnion: _*))
-        .join(broadcast(shortlist), Seq(idCol))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col(idCol),
-          round(VectorOps.dot(col(vecCol), col("qv")), roundTo).as("score")),
-      k, idCol, "score")
-  }
+      nprobeL1: Option[Int] = None): DataFrame =
+    ivfServe(queries, batch = true, centroids, hierarchy, nprobeL1, nprobe,
+      ServePlan(Some((int8Codec(int8Store), kCoarse)),
+        exactCodec(cells, vecCol, roundTo), k, idCol, clusterCol))
+
+  /** The SQ8 coarse codec: the integer dot of the stored bytes and the
+    * int8-quantized query, handed on as a double. The dot is below 2^53
+    * for d < 2^38, so the double keeps the integer (score desc, id asc)
+    * order exactly. The query quantizes with the SAME saturation clamp
+    * as the corpus store ([[int8EncodeCells]]): an out-of-range
+    * coordinate must quantize symmetrically on both sides, or the integer
+    * score diverges from a symmetric-clamped engine (ADVICE r12). */
+  private def int8Codec(int8Store: DataFrame): Codec =
+    Codec(int8Store,
+      _.withColumn("q8v", transform(col("qv"), x => greatest(lit(-127d),
+        least(lit(127d), round(x.cast("double") * 127))).cast("long"))),
+      aggregate(zip_with(col("q8"), col("q8v"), (a, b) => a.cast("long") * b),
+        lit(0L), (acc, v) => acc + v).cast("double"))
 
   /** SIGN-bit binarization of a vector column, packed 64 dims per BIGINT
     * word (FAISS `IndexBinaryFlat` / SimHash sign convention; the
@@ -4018,35 +3902,12 @@ object Similarity {
       clusterCol: String = "cluster",
       roundTo: Int = 4,
       hierarchy: Option[(DataFrame, DataFrame)] = None,
-      nprobeL1: Option[Int] = None): DataFrame = {
-    require(kCoarse >= k, s"coarse shortlist $kCoarse must cover final k=$k")
-    val probed = probeDispatch(centroids, hierarchy, queryDf, nprobeL1, nprobe, clusterCol)
-    // query packs through the SAME [[binarySig]] convention as the store
-    val qsig = broadcast(queryDf.select(binarySig(col("qv")).as("qsig")))
-    val shortlist = binStore.filter(col(clusterCol).isin(probed: _*))
-      .crossJoin(qsig)
-      .select(col(idCol), hammingSig(col("sig"), col("qsig")).as("ham"))
-      .orderBy(col("ham").asc, col(idCol).asc)
-      .limit(kCoarse)
-    scoreAll(
-      cells.filter(col(clusterCol).isin(probed: _*))
-        .join(broadcast(shortlist.select(col(idCol))), Seq(idCol), "left_semi"),
-      queryDf, idCol, vecCol)
-      .select(col(idCol), round(col("score"), roundTo).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
+      nprobeL1: Option[Int] = None): DataFrame =
+    ivfServe(queryDf, batch = false, centroids, hierarchy, nprobeL1, nprobe,
+      ServePlan(Some((binaryCodec(binStore), kCoarse)),
+        exactCodec(cells, vecCol, roundTo), k, idCol, clusterCol))
 
-  /** Batch form of [[ivfBinaryRefineSearch]] — the two-pruned-pass shape
-    * of [[ivfInt8RefineSearchBatch]] over the BIT-per-dim store: one scan
-    * of the probed cells' signature partitions Hamming-ranks each row
-    * against the queries probing its cell (XOR-popcount as a LONG — the
-    * aggregator ranks by score DESC, so the NEGATED Hamming feeds it and
-    * the integer (ham asc, id asc) order is preserved exactly),
-    * per-query `kCoarse` shortlists, then one scan of the same cells'
-    * original vectors re-scores only the broadcast shortlist pairs for
-    * the final per-query top-k. Parity with the single-query form is
-    * spec-pinned (BinarySpec). */
+  /** Batch form of [[ivfBinaryRefineSearch]]. */
   def ivfBinaryRefineSearchBatch(
       binStore: DataFrame,
       cells: DataFrame,
@@ -4060,42 +3921,19 @@ object Similarity {
       clusterCol: String = "cluster",
       roundTo: Int = 4,
       hierarchy: Option[(DataFrame, DataFrame)] = None,
-      nprobeL1: Option[Int] = None): DataFrame = {
-    require(kCoarse >= k, s"coarse shortlist $kCoarse must cover final k=$k")
-    val spark = binStore.sparkSession
-    import spark.implicits._
-    val probed = probeDispatchBatch(centroids, hierarchy, queries, nprobeL1, nprobe, clusterCol)
-    val probedDf = probed.toDF("query_id", clusterCol)
-    val cellUnion = probed.map(_._2).distinct
-    val qsig = queries.select(col("query_id"), binarySig(col("qv")).as("qsig"))
-    val shortlist = topKPerQuery(
-      binStore.filter(col(clusterCol).isin(cellUnion: _*))
-        .join(broadcast(probedDf), Seq(clusterCol))
-        .join(broadcast(qsig), Seq("query_id"))
-        .select(col("query_id"), col(idCol),
-          (lit(0L) - hammingSig(col("sig"), col("qsig")))
-            .cast("double").as("score")),
-      kCoarse, idCol, "score")
-      .select(col("query_id"), col(idCol))
-    topKPerQuery(
-      cells.filter(col(clusterCol).isin(cellUnion: _*))
-        .join(broadcast(shortlist), Seq(idCol))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col(idCol),
-          round(VectorOps.dot(col(vecCol), col("qv")), roundTo).as("score")),
-      k, idCol, "score")
-  }
+      nprobeL1: Option[Int] = None): DataFrame =
+    ivfServe(queries, batch = true, centroids, hierarchy, nprobeL1, nprobe,
+      ServePlan(Some((binaryCodec(binStore), kCoarse)),
+        exactCodec(cells, vecCol, roundTo), k, idCol, clusterCol))
 
-  /** Batch IVF-PQ serving against the persisted codes: per-query probing on
-    * the centroid artifact (driver-scale, [[probeCellsBatch]]), ONE scan of
-    * the UNION of probed cells' code partitions (literal PartitionFilters),
-    * each code row ADC-scored only against the queries PROBING ITS CELL
-    * (broadcast (query, cluster) pairs — scored volume is bounded by
-    * nprobe/k of codes x queries, exactly [[ivfSearchBatchPruned]]'s shape
-    * over M-byte code rows instead of d-float vectors), per-query top-k
-    * through the bounded [[graft.functions.TopKAggregator]]. The batch
-    * form of [[ivfPqSearchPruned]]; `queries` = small broadcast
-    * `(query_id LONG, qv)`. */
+  /** The 1-bit coarse codec: score = −Hamming between the stored signature
+    * and the query packed through the SAME [[binarySig]] convention, so
+    * descending score is the integer (Hamming asc, id asc) order. */
+  private def binaryCodec(binStore: DataFrame): Codec =
+    Codec(binStore, _.withColumn("qsig", binarySig(col("qv"))),
+      (lit(0L) - hammingSig(col("sig"), col("qsig"))).cast("double"))
+
+  /** Batch form of [[ivfPqSearchPruned]]. */
   def ivfPqSearchBatchPruned(
       codes: DataFrame,
       codebooks: DataFrame,
@@ -4110,57 +3948,11 @@ object Similarity {
       rotation: Option[DataFrame] = None,
       hierarchy: Option[(DataFrame, DataFrame)] = None,
       nprobeL1: Option[Int] = None): DataFrame =
-    // OPQ basis discipline (see [[ivfPqSearchPruned]]): the probe ranks
-    // raw centroids against the raw batch; the ADC lookup table builds
-    // from the ROTATED queries when the codes store is rotated.
-    ivfPqSearchBatchProbed(codes, codebooks, queries,
-      probeDispatchBatch(centroids, hierarchy, queries, nprobeL1, nprobe, clusterCol), k,
-      numSub, subDim, idCol, clusterCol, rotation)
+    ivfServe(queries, batch = true, centroids, hierarchy, nprobeL1, nprobe,
+      ServePlan(None, pqCodec(codes, codebooks, rotation, numSub, subDim),
+        k, idCol, clusterCol))
 
-  /** [[ivfPqSearchBatchPruned]] body over a PRECOMPUTED per-query probe
-    * list — so a two-stage caller ([[ivfPqRefineSearchBatch]]) computes
-    * the centroid ranking once and threads the identical (query_id,
-    * cluster) pairs into both stages. */
-  private[graft] def ivfPqSearchBatchProbed(
-      codes: DataFrame,
-      codebooks: DataFrame,
-      queries: DataFrame,
-      probed: Seq[(Long, Int)],
-      k: Int,
-      numSub: Int,
-      subDim: Int,
-      idCol: String,
-      clusterCol: String,
-      rotation: Option[DataFrame]): DataFrame = {
-    val spark = codes.sparkSession
-    import spark.implicits._
-    val probedDf = probed.toDF("query_id", clusterCol)
-    val cellUnion = probed.map(_._2).distinct
-    val qsub = subvectors(rotateQueries(queries, rotation, numSub, subDim),
-      "qv", "qsv", numSub, subDim, Seq("query_id"))
-    val qtab = codebooks.join(broadcast(qsub), Seq("m"))
-      .select(col("query_id"), col("m"), col("c"),
-        VectorOps.dot(col("cbv"), col("qsv")).as("p"))
-    topKPerQuery(
-      codes.filter(col(clusterCol).isin(cellUnion: _*))
-        .join(broadcast(probedDf), Seq(clusterCol))
-        // three-key equi join: the ADC lookup must be ONE hash probe per
-        // code row, not a (query_id, m) join fanning out K codebook
-        // entries and filtering — at production K=256 that filter form
-        // linearly scans the hash bucket 256x per row
-        .join(broadcast(qtab.withColumnRenamed("c", "code")),
-          Seq("query_id", "m", "code"))
-        .groupBy(col("query_id"), col(idCol))
-        .agg(sum(col("p").cast("decimal(18,12)")).cast("double").as("score"))
-        .select(col("query_id"), col(idCol), round(col("score"), 6).as("score")),
-      k, idCol, "score")
-  }
-
-  /** Batch IVF serving against the cell-partitioned corpus: one scan of the
-    * UNION of all probed cells (literal partition pruning), each row scored
-    * only against the queries probing its cell, per-query top-k through the
-    * bounded [[graft.functions.TopKAggregator]]. The artifact-fed form of
-    * [[ivfSearchBatch]]. */
+  /** Batch form of [[ivfSearchPruned]], output `(query_id, id, sim)`. */
   def ivfSearchBatchPruned(
       cells: DataFrame,
       centroids: DataFrame,
@@ -4169,35 +3961,16 @@ object Similarity {
       k: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-      clusterCol: String = "cluster"): DataFrame = {
-    val spark = cells.sparkSession
-    import spark.implicits._
-    val probed = probeCellsBatch(centroids, queries, nprobe, clusterCol)
-    val probedDf = probed.toDF("query_id", clusterCol)
-    val cellUnion = probed.map(_._2).distinct
-    topKPerQuery(
-      cells.filter(col(clusterCol).isin(cellUnion: _*))
-        .join(broadcast(probedDf), Seq(clusterCol))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col(idCol),
-          round(VectorOps.dot(col(vecCol), col("qv")), 4).as("sim")),
-      k, idCol, "sim")
-  }
+      clusterCol: String = "cluster",
+      hierarchy: Option[(DataFrame, DataFrame)] = None,
+      nprobeL1: Option[Int] = None): DataFrame =
+    ivfServe(queries, batch = true, centroids, hierarchy, nprobeL1, nprobe,
+      ServePlan(None, exactCodec(cells, vecCol, 4), k, idCol, clusterCol,
+        scoreName = "sim"))
 
-  /** Batch form of ARTIFACT-FED adaptive serving: each query of a small
-    * `(query_id LONG, qv)` batch gets its own minimal probe prefix — the
-    * score-ordered cells whose cumulative admissible count (from the
-    * persisted [[cellStats]] histogram filtered by the request's attribute
-    * predicate) reaches k — and the whole batch runs as ONE scan of the
-    * UNION of probed partitions (literal `PartitionFilters` + the pushed
-    * `admissible` predicate), each row scored only against the queries
-    * probing its cell, per-query top-k through the bounded
-    * [[graft.functions.TopKAggregator]]. Fixes the batch half of the
-    * fixed-nprobe under-fill: [[ivfSearchBatchPruned]] with a selective
-    * filter returns fewer than k rows per query for exactly the reason the
-    * single-query form did. Planning cost: one histogram collect (shared
-    * across the batch) + k_cells x batch driver-side rows; ZERO corpus
-    * bytes are read before the pruned serving scan. */
+  /** Batch form of [[ivfSearchAdaptivePruned]], artifact-fed only (the
+    * `cellStats` histogram is required); each query gets its own minimal
+    * probe prefix. Output `(query_id, id, sim)`. */
   def ivfSearchBatchAdaptive(
       cells: DataFrame,
       centroids: DataFrame,
@@ -4208,9 +3981,8 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       clusterCol: String = "cluster"): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    val spark = cells.sparkSession
-    import spark.implicits._
+    val plan = ServePlan(None, exactCodec(cells, vecCol, 4), k, idCol, clusterCol,
+      rows => admissible.fold(rows)(rows.filter), scoreName = "sim")
     // through cellStatsCounts: cell ids are INT in build-time artifacts
     // but LONG in incremental/liveCellStats stores — a getInt here would
     // ClassCastException the moment the planner is fed a delta histogram
@@ -4219,21 +3991,9 @@ object Similarity {
         idCol, clusterCol)
     val probed = probeCellsRankedBatch(centroids, queries, clusterCol)
       .toSeq.flatMap { case (qid, ranked) =>
-        val cum = ranked.scanLeft(0L)((acc, c) => acc + counts.getOrElse(c, 0L)).tail
-        val reachK = cum.indexWhere(_ >= k)
-        ranked.take(math.max(if (reachK >= 0) reachK + 1 else ranked.length, 1))
-          .map(c => (qid, c))
+        admissiblePrefix(ranked, counts, k).map(c => (qid, c))
       }
-    val probedDf = probed.toDF("query_id", clusterCol)
-    val cellUnion = probed.map(_._2).distinct
-    val prunedAll = cells.filter(col(clusterCol).isin(cellUnion: _*))
-    topKPerQuery(
-      admissible.fold(prunedAll)(prunedAll.filter)
-        .join(broadcast(probedDf), Seq(clusterCol))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col(idCol),
-          round(VectorOps.dot(col(vecCol), col("qv")), 4).as("sim")),
-      k, idCol, "sim")
+    serveBatch(queries, probed, plan)
   }
 
   /** CELL-SKEW mitigation: IVF cells over real embeddings are Zipf-ish —

@@ -1520,18 +1520,9 @@ object IncrementalIndex {
     // keeps bit parity with the flat probe
     val q = src.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val res = (hierarchy match {
-          case Some((l1, l2)) =>
-            // full-L1 default resolves from the cached group count
-            // (ADVICE r17) — not a count job per micro-batch
-            graft.operators.Similarity.ivfSearchBatchPrunedTwoLevel(
-              cells, l1, l2, batch,
-              nprobeL1.getOrElse(
-                graft.operators.Similarity.l1GroupCount(l1)), nprobe, k)
-          case None =>
-            graft.operators.Similarity
-              .ivfSearchBatchPruned(cells, centroids, batch, nprobe, k)
-        }).collect()
+        val res = graft.operators.Similarity.ivfSearchBatchPruned(cells,
+          centroids, batch, nprobe, k, hierarchy = hierarchy, nprobeL1 = nprobeL1)
+          .collect()
         buf.synchronized {
           buf ++= res.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         }

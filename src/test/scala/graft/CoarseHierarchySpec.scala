@@ -96,8 +96,9 @@ class CoarseHierarchySpec extends AnyFunSuite {
     val sample = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val truth = Similarity.calibrationTruth(idx.cells, sample, 20)
-    val ann = Similarity.ivfSearchBatchPrunedTwoLevel(idx.cells,
-        idx.l1.get, idx.l2.get, sample, npL1, idx.defaultNprobe.get, 20)
+    val ann = Similarity.ivfSearchBatchPruned(idx.cells, idx.centroids,
+        sample, idx.defaultNprobe.get, 20,
+        hierarchy = Some((idx.l1.get, idx.l2.get)), nprobeL1 = Some(npL1))
       .collect().map(r => r.getLong(0) -> r.getLong(1))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val recall = truth.map { case (q, ids) =>
@@ -138,8 +139,8 @@ class CoarseHierarchySpec extends AnyFunSuite {
     val nlist = centArt.count().toInt
     assert(npL1 >= 1 && npL1 <= groups && np >= 1 && np <= nlist)
     // the pair's MEASURED recall through the serving path meets target
-    val ann = Similarity.ivfSearchBatchPrunedTwoLevel(cells, l1, l2,
-        queries, npL1, np, 10)
+    val ann = Similarity.ivfSearchBatchPruned(cells, centArt, queries, np, 10,
+        hierarchy = Some((l1, l2)), nprobeL1 = Some(npL1))
       .collect().map(r => r.getLong(0) -> r.getLong(1))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val recall = truth.map { case (q, ids) =>
@@ -160,7 +161,7 @@ class CoarseHierarchySpec extends AnyFunSuite {
     // the r18 calibrator resolves the per-rung nprobe search driver-side
     // from ONE thresholded candidate scan; this pins its chosen pair to
     // the answer the serving path itself gives — min feasible np per
-    // ladder rung by LINEAR scan of ivfSearchBatchPrunedTwoLevel recall,
+    // ladder rung by LINEAR scan of two-level ivfSearchBatchPruned recall,
     // then the same cost argmin over feasible rungs
     val (emb, centArt, l1, l2) = fixture()
     val cells = Similarity.assignCellsBulk(emb, centArt)
@@ -173,8 +174,8 @@ class CoarseHierarchySpec extends AnyFunSuite {
     val groups = l1.count().toInt
     val nlist = centArt.count().toInt
     def recallAt(npL1: Int, np: Int): Double = {
-      val ann = Similarity.ivfSearchBatchPrunedTwoLevel(cells, l1, l2,
-          queries, npL1, np, k)
+      val ann = Similarity.ivfSearchBatchPruned(cells, centArt, queries, np, k,
+          hierarchy = Some((l1, l2)), nprobeL1 = Some(npL1))
         .collect().map(r => r.getLong(0) -> r.getLong(1))
         .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
       truth.map { case (q, ids) =>

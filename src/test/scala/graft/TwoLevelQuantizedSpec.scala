@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Similarity
 import graft.streaming.IncrementalIndex
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * forms and the streaming serving loop. This is the operator-level
   * counterpart of the facade's partial-L1 parity pin: a big-nlist
   * quantized store can serve without ever materializing the flat
-  * centroid table, losing nothing when uncalibrated. */
+  * centroid table, losing nothing when uncalibrated. The fixture also
+  * pins batch == single-query parity for the families no other spec
+  * pins, and the request sizes every serving form rejects. */
 class TwoLevelQuantizedSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -115,6 +118,61 @@ class TwoLevelQuantizedSpec extends AnyFunSuite {
         hierarchy = hier, nprobeL1 = Some(groups))) ===
       rowsOf(Similarity.ivfBinaryRefineSearchBatch(bin, cells, cents,
         queries, nprobe = 3, kCoarse = 30, k = 10)), "binary batch refine")
+  }
+
+  test("batch == single-query form, per query: flat, SQ8 refine, PQ ADC and PQ refine") {
+    val (emb, cents, _, _, cells, cbk, codes, int8, _, _) = fx
+    val ids = Seq(0L, 7L, 42L)
+    val queries = emb.filter(col("vec_id").isin(ids: _*))
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val forms: Seq[(String, DataFrame => DataFrame, DataFrame)] = Seq(
+      ("flat",
+        qv => Similarity.ivfSearchPruned(cells, cents, qv, nprobe = 3, k = 10),
+        Similarity.ivfSearchBatchPruned(cells, cents, queries, nprobe = 3, k = 10)),
+      ("int8 refine",
+        qv => Similarity.ivfInt8RefineSearch(int8, cells, cents, qv,
+          nprobe = 3, kCoarse = 30, k = 10),
+        Similarity.ivfInt8RefineSearchBatch(int8, cells, cents, queries,
+          nprobe = 3, kCoarse = 30, k = 10)),
+      ("pq adc",
+        qv => Similarity.ivfPqSearchPruned(codes, cbk, cents, qv, nprobe = 3, k = 10),
+        Similarity.ivfPqSearchBatchPruned(codes, cbk, cents, queries,
+          nprobe = 3, k = 10)),
+      ("pq refine",
+        qv => Similarity.ivfPqRefineSearch(cells, codes, cbk, cents, qv,
+          nprobe = 3, kCoarse = 30, k = 10),
+        Similarity.ivfPqRefineSearchBatch(cells, codes, cbk, cents, queries,
+          nprobe = 3, kCoarse = 30, k = 10)))
+    for ((name, single, batch) <- forms) {
+      val perQuery = batch.collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
+        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+      for (q <- ids) {
+        val qv = emb.filter(col("vec_id") === q).select(col("embedding").as("qv"))
+        val one = single(qv).collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
+        assert(one.size === 10, s"$name single form at q=$q")
+        assert(perQuery.getOrElse(q, Set.empty) === one, s"$name batch != single at q=$q")
+      }
+    }
+  }
+
+  test("nprobe = 0, nprobeL1 = 0 and k = 0 are named errors, not empty results") {
+    val (emb, cents, l1, l2, cells, cbk, codes, int8, _, _) = fx
+    val qv = emb.filter(col("vec_id") === 0L).select(col("embedding").as("qv"))
+    val queries = emb.filter(col("vec_id").isin(0L, 7L))
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    def named(param: String)(call: => DataFrame): Unit = {
+      val e = intercept[IllegalArgumentException](call.collect())
+      assert(e.getMessage.contains(s"$param must be positive"), e.getMessage)
+    }
+    named("nprobe")(Similarity.ivfSearchPruned(cells, cents, qv, nprobe = 0, k = 10))
+    named("nprobe")(Similarity.ivfInt8RefineSearchBatch(int8, cells, cents, queries,
+      nprobe = 0, kCoarse = 30, k = 10))
+    named("k")(Similarity.ivfInt8RefineSearch(int8, cells, cents, qv,
+      nprobe = 3, kCoarse = 30, k = 0))
+    named("k")(Similarity.ivfSearchBatchPruned(cells, cents, queries, nprobe = 3, k = 0))
+    named("nprobeL1")(Similarity.ivfPqSearchPruned(codes, cbk, cents, qv, nprobe = 3,
+      k = 10, hierarchy = Some((l1, l2)), nprobeL1 = Some(0)))
   }
 
   test("partial-L1 quantized refine draws only from the probed groups' cells") {
