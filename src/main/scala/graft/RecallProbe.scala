@@ -33,6 +33,7 @@ object RecallProbe {
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val cellSizes = idx.cells.groupBy(col("cluster")).count()
       .collect().map(r => r.getAs[Number]("cluster").intValue -> r.getLong(1)).toMap
+    val probeQueries = Similarity.batchQueries(queries)
     // full probe = every CENTROID probed (an empty cell's centroid still
     // ranks; the loop bound must cover all of them, not just non-empty cells)
     (1 to idx.centroids.count().toInt).map { nprobe =>
@@ -43,9 +44,8 @@ object RecallProbe {
       val recall = exact.map { case (q, ids) =>
         ids.intersect(ann.getOrElse(q, Set.empty)).size.toDouble / ids.size
       }.sum / exact.size
-      val perQuery = Similarity.probeCellsBatch(idx.centroids, queries, nprobe)
-        .groupBy(_._1).values
-        .map(_.map(p => cellSizes.getOrElse(p._2, 0L)).sum)
+      val perQuery = Similarity.probe(idx.centroids, None, probeQueries, None, nprobe)
+        .map(_._2.map(cellSizes.getOrElse(_, 0L)).sum)
       val rows = perQuery.sum / perQuery.size
       (nprobe, recall, rows)
     }
@@ -75,8 +75,9 @@ object RecallProbe {
         cents: org.apache.spark.sql.DataFrame) = {
       val sizes = cells.groupBy(col("cluster")).count()
         .collect().map(r => r.getAs[Number]("cluster").intValue -> r.getLong(1)).toMap
-      val probed = Similarity.probeCellsBatch(cents, hotQ, nprobe = 1)
-      val meanRows = probed.map(p => sizes.getOrElse(p._2, 0L).toDouble).sum / probed.size
+      val probed = Similarity.probe(cents, None, Similarity.batchQueries(hotQ), None, nprobe = 1)
+        .flatMap(_._2)
+      val meanRows = probed.map(sizes.getOrElse(_, 0L).toDouble).sum / probed.size
       (name, sizes.size.toLong, sizes.values.max, meanRows)
     }
     Seq(

@@ -2,7 +2,8 @@ package graft
 
 import graft.functions.VectorOps
 import graft.operators._
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import graft.sources.Store
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -38,11 +39,11 @@ object SparkEntry {
       emb: DataFrame, ids: Seq[Int], prefix: String): String = {
     val stage = java.nio.file.Files.createTempDirectory(s"${prefix}_src")
     val tmp = java.nio.file.Files.createTempDirectory(s"${prefix}_tmp")
-    emb.filter(col("vec_id").isin(ids: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("vec_id").as("__p"))
-      .coalesce(1)
-      .write.mode("overwrite").partitionBy("__p").parquet(tmp.toString)
+    Store.writer(emb.filter(col("vec_id").isin(ids: _*))
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
+          col("vec_id").as("__p"))
+        .coalesce(1))
+      .partitionBy("__p").parquet(tmp.toString)
     ids.foreach { i =>
       java.nio.file.Files.move(stagedPart(tmp.toFile, i).toPath,
         stage.resolve(s"q$i.parquet"))
@@ -631,16 +632,16 @@ object SparkEntry {
         uniCounts = s.read.parquet(s"$p/uniCounts"),
         vocab = s.read.parquet(s"$p/vocab"))
       def clustered(df: DataFrame, key: String, path: String): Unit =
-        df.repartition(8, col(key)).sortWithinPartitions(key)
-          .write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(path)
+        Store.writer(df.repartition(8, col(key)).sortWithinPartitions(key))
+          .option("compression", "zstd").parquet(path)
       ArtifactMemo(s, p) {
         clustered(bigram(s, dir).postings
           .groupBy(col("term")).agg(sum(col("tf")).as("c_bg"))
           .select(col("term").as("ngram"), col("c_bg")), "ngram", s"$p/bgCounts")
         clustered(unigram(s, dir).postings
           .groupBy(col("term")).agg(sum(col("tf")).as("c_uni")), "term", s"$p/uniCounts")
-        s.read.parquet(s"$p/uniCounts").agg(count(lit(1)).as("v"))
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$p/vocab")
+        Store.writer(s.read.parquet(s"$p/uniCounts").agg(count(lit(1)).as("v"))
+          .coalesce(1)).parquet(s"$p/vocab")
         read
       }(read)
     }
@@ -663,7 +664,7 @@ object SparkEntry {
     * ([[Similarity.kmeansFit]], k=8, 2 Lloyd iterations), persists the
     * centroid table, assigns every corpus row to its cell (map-only
     * [[Similarity.assignCells]]) and writes the corpus CELL-PARTITIONED
-    * ([[graft.sources.Store.writePartitioned]] — the directory layout
+    * ([[Store.writePartitioned]] — the directory layout
     * [[graft.streaming.IncrementalIndex.updateDenseIndex]] maintains
     * incrementally as new embeddings land). Every later ANN query reads the
     * artifacts: the centroid probe is driver-scale (k rows) and the corpus
@@ -734,8 +735,7 @@ object SparkEntry {
       def read = s.read.parquet(s"$p/centroids")
       ArtifactMemo(s, p) {
         val c = Similarity.kmeansFit(t(s, dir, "embeddings"), k = 32, iters = 2)
-        c.coalesce(1).write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$p/centroids")
+        Store.writeSingle(c, s"$p/centroids")
         c.unpersist()
         read
       }(read)
@@ -759,12 +759,10 @@ object SparkEntry {
         projections = s.read.parquet(s"$p/projections"))
       ArtifactMemo(s, p) {
         val emb = t(s, dir, "embeddings")
-        Similarity.pcaPowerFit(emb, "embedding", iters = 4)
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$p/components")
-        Similarity.pcaProjectPacked(emb,
-            s.read.parquet(s"$p/components").select(col("pos"), col("pc")))
-          .write.mode(SaveMode.Overwrite)
+        Store.writeSingle(Similarity.pcaPowerFit(emb, "embedding", iters = 4),
+          s"$p/components")
+        Store.writer(Similarity.pcaProjectPacked(emb,
+            s.read.parquet(s"$p/components").select(col("pos"), col("pc"))))
           .option("compression", "zstd").parquet(s"$p/projections")
         read
       }(read)
@@ -793,21 +791,17 @@ object SparkEntry {
         codes = s.read.parquet(s"$p/codes"))
       ArtifactMemo(s, p) {
         val emb = t(s, dir, "embeddings")
-        Similarity.pcaTopComponents(emb, "embedding",
-            m = numSub * subDim, iters = 6)
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$p/rotation")
+        Store.writeSingle(Similarity.pcaTopComponents(emb, "embedding",
+            m = numSub * subDim, iters = 6), s"$p/rotation")
         val rotated = Similarity.rotateVectors(emb,
           s.read.parquet(s"$p/rotation"), allocate = Some((numSub, subDim)))
         val cb = Similarity.pqRefineCodebooks(rotated,
           Similarity.pqCodebooks(rotated, numSub, subDim, numCodes),
           numSub, subDim, iters = 2)
-        cb.coalesce(1).write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$p/codebooks")
+        Store.writeSingle(cb, s"$p/codebooks")
         cb.unpersist()
-        Similarity.pqEncode(rotated, s.read.parquet(s"$p/codebooks"),
-            numSub, subDim)
-          .write.mode(SaveMode.Overwrite)
+        Store.writer(Similarity.pqEncode(rotated, s.read.parquet(s"$p/codebooks"),
+            numSub, subDim))
           .option("compression", "zstd").parquet(s"$p/codes")
         read
       }(read)
@@ -833,13 +827,11 @@ object SparkEntry {
         buckets = s.read.parquet(s"$p/buckets"))
       ArtifactMemo(s, p) {
         val docs = t(s, dir, "documents")
-        Dedup.shingles(docs, "doc_id", "text")
-          .select(col("id"), Dedup.hash60(col("s")).as("hv"))
-          .write.mode(SaveMode.Overwrite)
+        Store.writer(Dedup.shingles(docs, "doc_id", "text")
+            .select(col("id"), Dedup.hash60(col("s")).as("hv")))
           .option("compression", "zstd").parquet(s"$p/shingle_hashes")
-        Dedup.minhashBucketsFromHashes(
-            s.read.parquet(s"$p/shingle_hashes"), 16, 2)
-          .write.mode(SaveMode.Overwrite)
+        Store.writer(Dedup.minhashBucketsFromHashes(
+            s.read.parquet(s"$p/shingle_hashes"), 16, 2))
           .option("compression", "zstd").parquet(s"$p/buckets")
         read
       }(read)
@@ -860,8 +852,7 @@ object SparkEntry {
       val p = ArtifactMemo.root(dir, "simhash")
       def read = s.read.parquet(s"$p/fingerprints")
       ArtifactMemo(s, p) {
-        Dedup.simhash(t(s, dir, "documents"), "doc_id", "text")
-          .write.mode(SaveMode.Overwrite)
+        Store.writer(Dedup.simhash(t(s, dir, "documents"), "doc_id", "text"))
           .option("compression", "zstd").parquet(s"$p/fingerprints")
         read
       }(read)
@@ -901,21 +892,17 @@ object SparkEntry {
         codes = s.read.parquet(s"$p/codes"))
       ArtifactMemo(s, p) {
         val emb = t(s, dir, "embeddings")
-        Similarity.pcaTopComponents(emb, "embedding",
-            m = m * subDim, iters = 4)
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$p/rotation")
+        Store.writeSingle(Similarity.pcaTopComponents(emb, "embedding",
+            m = m * subDim, iters = 4), s"$p/rotation")
         val rotated = Similarity.rotateVectors(emb,
           s.read.parquet(s"$p/rotation"), allocate = Some((m, subDim)))
         val cb = Similarity.pqRefineCodebooks(rotated,
           Similarity.pqCodebooks(rotated, m, subDim, numCodes),
           m, subDim, iters = 1)
-        cb.coalesce(1).write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$p/codebooks")
+        Store.writeSingle(cb, s"$p/codebooks")
         cb.unpersist()
-        Similarity.pqEncode(rotated, s.read.parquet(s"$p/codebooks"),
-            m, subDim)
-          .write.mode(SaveMode.Overwrite)
+        Store.writer(Similarity.pqEncode(rotated, s.read.parquet(s"$p/codebooks"),
+            m, subDim))
           .option("compression", "zstd").parquet(s"$p/codes")
         read
       }(read)
@@ -964,25 +951,22 @@ object SparkEntry {
       ArtifactMemo(s, p) {
         val e768 = expand768(t(s, dir, "embeddings"))
         val hw = Window.orderBy(col("__h"), col("vec_id"))
-        e768
+        Store.writeSingle(e768
           .select(col("vec_id"), col("embedding"), Dedup.hash60(
             concat(lit("c768:"), col("vec_id").cast("string"))).as("__h"))
           .orderBy(col("__h"), col("vec_id")).limit(4)
           .select((row_number().over(hw) - 1).cast("int").as("cluster"),
-            col("embedding").as("cv"))
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$p/centroids")
-        graft.sources.Store.writePartitioned(
+            col("embedding").as("cv")), s"$p/centroids")
+        Store.writePartitioned(
           Similarity.assignCells(e768, s.read.parquet(s"$p/centroids")),
           s"$p/cells", "cluster")
         val cells = s.read.parquet(s"$p/cells")
         val cb = Similarity.pqRefineCodebooks(cells,
           Similarity.pqCodebooks(cells, numSub, subDim, numCodes),
           numSub, subDim, iters = 1)
-        cb.coalesce(1).write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$p/codebooks")
+        Store.writeSingle(cb, s"$p/codebooks")
         cb.unpersist()
-        graft.sources.Store.writePartitioned(
+        Store.writePartitioned(
           Similarity.pqEncode(cells, s.read.parquet(s"$p/codebooks"),
             numSub, subDim, carry = Seq("cluster")),
           s"$p/codes", "cluster")
@@ -990,14 +974,14 @@ object SparkEntry {
         // partitioning — the [[Similarity.ivfInt8RefineSearch]] artifact.
         // At this expansion coordinates DO exceed |1| (scale up to 5/3),
         // so the saturation clamp is genuinely exercised by the oracle.
-        graft.sources.Store.writePartitioned(
+        Store.writePartitioned(
           Similarity.int8EncodeCells(cells), s"$p/int8", "cluster")
         // BINARY sibling store at d=768 (round 14): 12 packed BIGINT
         // words per row (96 bytes vs 3072 float), same cell partitioning
         // — the [[Similarity.ivfBinaryRefineSearch]] artifact. d=768
         // exercises genuinely multi-word signatures (the d=64 base
         // table packs to a single word).
-        graft.sources.Store.writePartitioned(
+        Store.writePartitioned(
           Similarity.binaryEncodeCells(cells), s"$p/bin", "cluster")
         read
       }(read)
@@ -1032,9 +1016,8 @@ object SparkEntry {
         val total = emb.count()
         val (cents2, cells2) = Similarity.splitOversizedCells(
           skewed, cents, maxCellRows = total / 4, subK = 4)
-        cents2.coalesce(1).write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd").parquet(s"$p/centroids")
-        graft.sources.Store.writePartitioned(cells2, s"$p/cells", "cluster")
+        Store.writeSingle(cents2, s"$p/centroids")
+        Store.writePartitioned(cells2, s"$p/cells", "cluster")
         read
       }(read)
     }
@@ -1070,8 +1053,7 @@ object SparkEntry {
         val success = new org.apache.hadoop.fs.Path(s"$p/landing/_SUCCESS")
         val fs = success.getFileSystem(hadoop)
         if (!fs.exists(success))
-          t(s, dir, "embeddings").write.mode(SaveMode.Overwrite)
-            .parquet(s"$p/landing")
+          Store.writer(t(s, dir, "embeddings")).parquet(s"$p/landing")
         // layout-upgrade guard: a store ingested before the radii leg
         // existed has cells but no delta dir, and a checkpointed re-run is
         // a no-op — wipe the derived stores (never the landing source) so
@@ -1889,7 +1871,8 @@ object SparkEntry {
         val emb = t(s, dir, "embeddings")
         val qv = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
         val allow = emb.filter(col("vec_id") % 3 === 0).select(col("vec_id"))
-        val probed = Similarity.probeCells(idx.centroids, qv, nprobe = 2)
+        val probed = Similarity.probe(idx.centroids, None, Similarity.singleQuery(qv),
+          None, nprobe = 2).flatMap(_._2)
         val pruned = idx.cells.filter(col("cluster").isin(probed: _*))
         Similarity.scoreAll(
             Candidates.restrictToScalable(pruned, allow, "vec_id"),

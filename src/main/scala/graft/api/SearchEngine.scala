@@ -139,15 +139,6 @@ class SearchEngine(
     GroupShaping.groupResults(scored, "video_id", "id", "score")
   }
 
-  /** One index-backed dense channel: probe the fitted centroid artifact
-    * driver-side ([[Similarity.probeCells]] — the FAISS coarse-quantizer
-    * analog), scan ONLY the probed cells' partitions of the persisted
-    * cell-partitioned corpus (literal `PartitionFilters`), apply the
-    * request's candidate set on the pruned rows, exact-rescore, top-k.
-    * The index must be built over THIS corpus's embeddings
-    * (`id`/`vecCol` schema) — [[Similarity.kmeansFit]] +
-    * [[Similarity.assignCells]] + [[graft.sources.Store.writePartitioned]]
-    * at build time. */
   /** Per-request probe depth: an explicit request value wins; otherwise
     * the index's PERSISTED recall-calibrated default (the `params`
     * artifact written by [[Similarity.buildDenseIndex]] when calibration
@@ -157,92 +148,16 @@ class SearchEngine(
   private def resolveNprobe(nprobe: Option[Int], index: Similarity.DenseIndex): Int =
     nprobe.orElse(index.defaultNprobe).getOrElse(2)
 
-  /** Driver-cached coarse probes, one per centroid ARTIFACT (r14 serving
-    * lever): [[Similarity.probeCells]] launches a Spark job per request;
-    * the cache collects each index's centroid table once and probes
-    * in-process with exact [[Similarity.probeCells]] parity
-    * (ProbeCacheSpec). Keyed by the centroid DataFrame REFERENCE — a
-    * retrain-and-swap version publish hands the facade a new DenseIndex
-    * with new DataFrames, so a stale cache cannot survive a version
-    * swap. Weak keys: dropping an index drops its cache entry. */
-  private val probeCaches =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[DataFrame, Similarity.CentroidCache])
-
-  private def probeCacheFor(index: Similarity.DenseIndex): Similarity.CentroidCache = {
-    // get-build-putIfAbsent rather than computeIfAbsent: the cache
-    // constructor runs a Spark collect, and computeIfAbsent on the
-    // synchronized map would hold the single map mutex for that whole
-    // job — concurrent FIRST requests against DIFFERENT indexes would
-    // serialize behind one collect on the serving hot path. The race on
-    // a duplicate build is benign (both caches are equal; one wins).
-    val cached = probeCaches.get(index.centroids)
-    if (cached != null) cached else {
-      val built = new Similarity.CentroidCache(index.centroids)
-      val prev = probeCaches.putIfAbsent(index.centroids, built)
-      if (prev != null) prev else built
-    }
-  }
-
-  /** Two-level serving probe (VERDICT r15 #1 — the facade leg of
-    * [[Similarity.buildCoarseHierarchy]]): the driver caches ONLY the
-    * sqrt(nlist)-row L1 group table ([[Similarity.CentroidCache]] over
-    * `gid`/`gv` — same in-process ranking, spec-pinned [[Similarity
-    * .probeCells]] parity), and the L2 centroid ranking stays a
-    * gid-partition-pruned Spark scan per request — the IMI trade: a
-    * bounded driver for one extra pruned job. Rounding and tiebreaks
-    * match [[Similarity.probeCellsTwoLevel]] exactly, so full L1 probe
-    * reproduces the flat probe bit-for-bit. */
-  private final class TwoLevelProbe(l1: DataFrame, l2: DataFrame) {
-    private val gcache = new Similarity.CentroidCache(
-      l1.select(col("gid").as("cluster"), col("gv").as("cv")))
-    def groups: Int = gcache.nlist
-    // cell-count denominator for the broadcast-fraction gate; one
-    // nlist-row count job at first use, cached for the index's lifetime
-    lazy val nlist: Int = l2.count().toInt
-    def probe(qv: Array[Float], nprobe: Int, nprobeL1: Int): Seq[Int] = {
-      val gids = gcache.probe(qv, nprobeL1)
-      val qDf = l2.sparkSession.range(1).select(lit(qv).as("qv"))
-      Similarity.probeCellsL2(l2, gids, qDf, nprobe)
-    }
-  }
-
-  private val twoLevelProbes =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[DataFrame, TwoLevelProbe])
-
-  private def twoLevelFor(l1: DataFrame, l2: DataFrame): TwoLevelProbe = {
-    val cached = twoLevelProbes.get(l1)
-    if (cached != null) cached else {
-      val built = new TwoLevelProbe(l1, l2)
-      val prev = twoLevelProbes.putIfAbsent(l1, built)
-      if (prev != null) prev else built
-    }
-  }
-
-  /** Dispatch: a hierarchy-carrying index (built past
-    * [[Similarity.HierarchyMinNlist]] cells) probes two-level at its
-    * calibrated `default_nprobe_l1` (full L1 probe — flat parity — when
-    * uncalibrated); everything else probes through the flat driver-side
-    * centroid cache. A caller overriding the L1 depth per request passes
-    * `index.copy(defaultNprobeL1 = Some(n))` — DenseIndex is the knob
-    * carrier, same as the persisted nprobe default. */
-  private def cachedProbe(
-      index: Similarity.DenseIndex, qv: Array[Float], nprobe: Int): Seq[Int] =
-    (index.l1, index.l2) match {
-      case (Some(l1), Some(l2)) =>
-        val tl = twoLevelFor(l1, l2)
-        tl.probe(qv, nprobe, index.defaultNprobeL1.getOrElse(tl.groups))
-      case _ => probeCacheFor(index).probe(qv, nprobe)
-    }
-
-  /** Coarse cell-count denominator for [[maybeBroadcastScored]]'s probe
-    * fraction, whichever probe family the index serves through. */
-  private def probeNlist(index: Similarity.DenseIndex): Int =
-    (index.l1, index.l2) match {
-      case (Some(l1), Some(l2)) => twoLevelFor(l1, l2).nlist
-      case _ => probeCacheFor(index).nlist
-    }
+  /** The index's coarse probe for one query vector: [[Similarity.probe]]
+    * ranks the driver-cached centroid table (zero jobs per request once
+    * warm) or, for a hierarchy-carrying index, the cached L1 table at the
+    * index's calibrated `default_nprobe_l1` (full L1 probe — flat parity —
+    * when uncalibrated) plus one pruned L2 job. A caller overriding the L1
+    * depth per request passes `index.copy(defaultNprobeL1 = Some(n))` —
+    * DenseIndex is the knob carrier, same as the persisted nprobe default. */
+  private def probe(index: Similarity.DenseIndex, qv: Array[Float], nprobe: Int): Seq[Int] =
+    Similarity.probe(index.centroids, index.hierarchy, Seq(0L -> qv),
+      index.defaultNprobeL1, nprobe).flatMap(_._2)
 
   /** Broadcast the probed-and-scored side only when the probe fraction
     * bounds it: scored carries ~N*nprobe/nlist (id, score) rows, which is
@@ -256,10 +171,19 @@ class SearchEngine(
       scored: DataFrame, probedCount: Int, nlist: Int): DataFrame =
     if (probedCount.toLong * 4L <= nlist.toLong) broadcast(scored) else scored
 
+  /** One index-backed dense channel: probe the fitted centroid artifact
+    * driver-side ([[probe]] — the FAISS coarse-quantizer analog), scan
+    * ONLY the probed cells' partitions of the persisted
+    * cell-partitioned corpus (literal `PartitionFilters`), apply the
+    * request's candidate set on the pruned rows, exact-rescore, top-k.
+    * The index must be built over THIS corpus's embeddings
+    * (`id`/`vecCol` schema) — [[Similarity.kmeansFit]] +
+    * [[Similarity.assignCells]] + [[graft.sources.Store.writePartitioned]]
+    * at build time. */
   private def annChannel(
       index: Similarity.DenseIndex, vecCol: String, qv: Array[Float],
       k: Int, nprobe: Int, cands: DataFrame): DataFrame = {
-    val probed = cachedProbe(index, qv, nprobe)
+    val probed = probe(index, qv, nprobe)
     // SCORE FIRST, JOIN LATE (the r15 flagship serving lever): the
     // pruned cells carry d-float vectors, so joining them against the
     // corpus-scale candidate table BEFORE scoring pushes ~(N*nprobe/
@@ -277,7 +201,8 @@ class SearchEngine(
       .withColumn("qv", lit(qv))
       .select(col("id"),
         round(VectorOps.dot(col(vecCol), col("qv")), 6).as("score"))
-    maybeBroadcastScored(scored, probed.size, probeNlist(index)).join(cands, Seq("id"))
+    val nlist = Similarity.quantizer(index.centroids, index.hierarchy).nlist
+    maybeBroadcastScored(scored, probed.size, nlist).join(cands, Seq("id"))
       .select(col("id"), col("video_id"), col("score"))
       .orderBy(col("score").desc, col("id"))
       .limit(k)
@@ -346,7 +271,7 @@ class SearchEngine(
         "— build with calibrateRecall or pass kCoarse explicitly"))
     require(kc >= k, s"coarse shortlist $kc must cover final k=$k")
     val spark = corpus.embeddings.sparkSession
-    val probed = cachedProbe(index, queryVec, resolveNprobe(nprobe, index))
+    val probed = probe(index, queryVec, resolveNprobe(nprobe, index))
     val cands = candidates(filters).select("id", "video_id")
     val qsig = broadcast(spark.range(1).select(lit(queryVec).as("qv"))
       .select(Similarity.binarySig(col("qv")).as("qsig")))
@@ -383,7 +308,7 @@ class SearchEngine(
       index: Similarity.DenseIndex, vecCol: String, qv: Array[Float],
       k: Int, kc: Int, nprobe: Int, cands: DataFrame): DataFrame = {
     val spark = corpus.embeddings.sparkSession
-    val probed = cachedProbe(index, qv, nprobe)
+    val probed = probe(index, qv, nprobe)
     val qDf = spark.range(1).select(lit(qv).as("qv"))
     val shortlist = Similarity.pqAdcScore(
       index.codes.filter(col("cluster").isin(probed: _*))
@@ -412,7 +337,7 @@ class SearchEngine(
     * floats touched for exactly `kCoarse` rows per channel. The probe
     * dispatches two-level at the index's persisted calibrated
     * (default_nprobe_l1, default_nprobe) pair when the hierarchy is
-    * present ([[cachedProbe]]), flat otherwise. `kCoarse` defaults to
+    * present ([[probe]]), flat otherwise. `kCoarse` defaults to
     * 16·k — the measured float-recall-parity multiple at the calibrated
     * pair on the 1M x d=768 / 84k-centroid store (RECALL.md r17:
     * ADC+refine at kCoarse=16k reaches the float path's 0.850@20);
@@ -500,32 +425,19 @@ class SearchEngine(
       filters: Filters = Filters(),
       nprobe: Option[Int] = None): DataFrame = {
     // the stored query vector is ONE row by contract — collect it and
-    // probe in-process through the driver-side centroid cache (same
-    // jobs-per-request lever as [[annChannel]]; parity with probeCells
-    // is spec-pinned). An unknown id keeps the old empty-result shape.
+    // serve it through [[annChannel]] (in-process probe, score first,
+    // join late). A missing id AND a stored-but-NULL vector both serve
+    // the empty shape (the pre-r16 lazy plan scored dot(clip, null) to
+    // null rows).
     val qvRows = corpus.embeddings.filter(col("id") === imgId)
       .select(col("clip")).limit(1).collect()
-    // a missing id AND a stored-but-NULL vector both serve the empty
-    // shape (the pre-r16 lazy plan scored dot(clip, null) to null rows)
     val ranked = qvRows.headOption.filter(!_.isNullAt(0)) match {
       case None =>
         corpus.keyframes
           .select(col("id"), col("video_id"), lit(0.0d).as("score")).limit(0)
       case Some(row) =>
-        val qarr = row.getSeq[Float](0).toArray
-        val probed = cachedProbe(index, qarr, resolveNprobe(nprobe, index))
-        // score-first/join-late, exactly as [[annChannel]]: the scored
-        // side is probe-bounded (broadcast only while the fraction says
-        // so), the candidate table never shuffles
-        val scored = index.cells.filter(col("cluster").isin(probed: _*))
-          .withColumn("qv", lit(qarr))
-          .select(col("id"),
-            round(VectorOps.dot(col("clip"), col("qv")), 6).as("score"))
-        maybeBroadcastScored(scored, probed.size, probeNlist(index))
-          .join(candidates(filters).select("id", "video_id"), Seq("id"))
-          .select(col("id"), col("video_id"), col("score"))
-          .orderBy(col("score").desc, col("id"))
-          .limit(k)
+        annChannel(index, "clip", row.getSeq[Float](0).toArray, k,
+          resolveNprobe(nprobe, index), candidates(filters).select("id", "video_id"))
     }
     GroupShaping.groupResults(ranked, "video_id", "id", "score")
   }

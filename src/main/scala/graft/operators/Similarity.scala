@@ -41,7 +41,7 @@ object Similarity {
       defaultKCoarseBq: Option[Int] = None,
       // two-level coarse hierarchy ([[buildCoarseHierarchy]]): present
       // when the build's nlist crossed `coarseHierarchyMinNlist` — the
-      // facade serves through [[probeCellsTwoLevel]] when these are set
+      // facade probes two-level through [[probe]] when these are set
       // (the driver then holds sqrt(nlist) L1 rows, never the full
       // centroid table), flat otherwise
       l1: Option[DataFrame] = None,
@@ -51,7 +51,10 @@ object Similarity {
       // num_sub/sub_dim) — carried so a facade serving the quantized leg
       // needs no caller-side geometry constants
       numSub: Int = 8,
-      subDim: Int = 8)
+      subDim: Int = 8) {
+    /** The `(l1, l2)` pair every `hierarchy` parameter takes. */
+    def hierarchy: Option[(DataFrame, DataFrame)] = l1.zip(l2)
+  }
 
   /** Default nlist threshold above which [[buildDenseIndex]] emits the
     * two-level coarse hierarchy: past ~64k cells the flat centroid
@@ -241,8 +244,8 @@ object Similarity {
       // threshold the flat centroid collect stops being driver-safe, so the
       // build emits the l1/l2 artifact ([[buildCoarseHierarchy]] — a
       // kmeans over the nlist centroids, sqrt(nlist)-row L1 + gid-
-      // partitioned L2) and the facade serves through
-      // [[probeCellsTwoLevel]]. Below the threshold nothing is written and
+      // partitioned L2) and the facade probes it two-level through
+      // [[probe]]. Below the threshold nothing is written and
       // serving stays flat (exact, cheaper).
       val hierArt =
         if (p.nlist < coarseHierarchyMinNlist) None
@@ -445,17 +448,6 @@ object Similarity {
     finally sc.setLocalProperty("spark.job.description", prev)
   }
 
-  /** BUILD-TIME nprobe calibration: the smallest nprobe whose measured
-    * recall@k on a deterministic query sample meets `targetRecall` —
-    * replacing the corpus-blind static default (nlist/16) with one
-    * measured against the index that will actually serve. Recall is
-    * monotone in nprobe (probing np+1 cells scans a superset of probing
-    * np — same centroid-ranking prefix), so exponential + binary search
-    * finds the minimum in O(log nlist) batch searches; each search is
-    * sample-sized, pruned serving work, and the whole calibration is a
-    * run-once build step (FAISS users do exactly this sweep by hand
-    * against `nprobe` before deploying an IVF index). Full probe is
-    * exact, so any target <= 1.0 is reachable. */
   /** The exact top-k truth sets of a calibration sample — one
     * full-corpus batch scan, shared by [[calibrateNprobe]] and
     * [[calibrateKCoarseBinary]] so a build calibrating both defaults
@@ -470,6 +462,17 @@ object Similarity {
       .collect().map(r => r.getLong(0) -> r.getLong(1))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
 
+  /** BUILD-TIME nprobe calibration: the smallest nprobe whose measured
+    * recall@k on a deterministic query sample meets `targetRecall` —
+    * replacing the corpus-blind static default (nlist/16) with one
+    * measured against the index that will actually serve. Recall is
+    * monotone in nprobe (probing np+1 cells scans a superset of probing
+    * np — same centroid-ranking prefix), so exponential + binary search
+    * finds the minimum in O(log nlist) batch searches; each search is
+    * sample-sized, pruned serving work, and the whole calibration is a
+    * run-once build step (FAISS users do exactly this sweep by hand
+    * against `nprobe` before deploying an IVF index). Full probe is
+    * exact, so any target <= 1.0 is reachable. */
   def calibrateNprobe(
       cells: DataFrame,
       centroids: DataFrame,
@@ -562,10 +565,9 @@ object Similarity {
     // the flat probe would certify a default the serving path never
     // runs. Both the reachability bound and every recall evaluation
     // below go through the SAME dispatch the serving forms use.
-    val reach = probeDispatchBatch(centroids, hierarchy, queries,
+    val reach = probe(centroids, hierarchy, batchQueries(queries),
         nprobeL1, nprobe, clusterCol)
-      .groupBy(_._1).values
-      .map(_.map(p => cellSizes.getOrElse(p._2, 0L)).sum)
+      .map(_._2.map(cellSizes.getOrElse(_, 0L)).sum)
       .foldLeft(0L)(math.max)
     val cap = math.min(math.min(corpusRows, math.max(reach, k.toLong)),
       Int.MaxValue.toLong / 2).toInt
@@ -2504,7 +2506,10 @@ object Similarity {
     * directory pruning (a semi join would still enumerate every cell's
     * files). This mirrors FAISS IVF serving exactly: the coarse quantizer
     * runs on the query (driver-scale work), only the probed inverted lists
-    * are opened. Ties break to the lower cluster id. */
+    * are opened. Ties break to the lower cluster id. Serving ranks
+    * through the driver-cached [[probe]] instead; this one-job form is the
+    * reference its cache is pinned against (ProbeCacheSpec,
+    * CoarseHierarchySpec). */
   def probeCells(
       centroids: DataFrame,
       queryDf: DataFrame,
@@ -2533,42 +2538,141 @@ object Similarity {
     * LOWER cluster id, and null-vector centroids sorting LAST (Spark's
     * NULLS LAST under a desc sort) in ascending id order — so even a
     * probe deep enough to reach degenerate rows returns the identical
-    * list. Build one per PERSISTED centroid artifact: a retrain-and-swap
-    * version publish produces a new centroid DataFrame and must produce a
-    * new cache (key caches by the DataFrame reference, as
-    * [[graft.api.SearchEngine]] does). */
-  final class CentroidCache(centroids: DataFrame, clusterCol: String = "cluster") {
+    * list; a null query scores every centroid null, which ranks them all
+    * in id order. Build one per PERSISTED centroid artifact: a
+    * retrain-and-swap version publish produces a new centroid DataFrame
+    * and must produce a new cache ([[probe]] keys its caches by the
+    * DataFrame reference). `vecCol` names the vector column, so the same
+    * class ranks a hierarchy's `(gid, gv)` level-1 table. */
+  final class CentroidCache(
+      centroids: DataFrame, clusterCol: String = "cluster", vecCol: String = "cv") {
     private val (scoredRows, nullRows): (Array[(Int, Array[Float])], Array[Int]) = {
-      val all = centroids.select(col(clusterCol).cast("int"), col("cv")).collect()
+      val all = centroids.select(col(clusterCol).cast("int"), col(vecCol)).collect()
       val (nn, nv) = all.partition(!_.isNullAt(1))
       (nn.map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).sortBy(_._1),
         nv.map(_.getInt(0)).sorted)
     }
 
-    /** Total coarse cell count — the denominator of the probe fraction
-      * the facade uses to decide whether a probed-and-scored side is
-      * small enough to broadcast (nprobe/nlist bounds the scored rows at
-      * ~N*nprobe/nlist; at full probe that is the whole corpus and a
-      * broadcast hint would bypass the 8 GB ceiling check). */
+    /** Row count of the ranked table: the cell count of a flat centroid
+      * table, the group count of a level-1 table. */
     def nlist: Int = scoredRows.length + nullRows.length
 
-    def probe(qv: Array[Float], nprobe: Int): Seq[Int] = {
-      val scored = scoredRows.map { case (id, cv) =>
-        val n = math.min(cv.length, qv.length)
-        var s = 0.0
-        var i = 0
-        while (i < n) { s += cv(i).toDouble * qv(i).toDouble; i += 1 }
-        (id, java.math.BigDecimal.valueOf(s)
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue)
+    def probe(qv: Array[Float], nprobe: Int): Seq[Int] =
+      if (qv == null) (scoredRows.map(_._1) ++ nullRows).sorted.take(nprobe).toSeq
+      else {
+        val scored = scoredRows.map { case (id, cv) =>
+          val n = math.min(cv.length, qv.length)
+          var s = 0.0
+          var i = 0
+          while (i < n) { s += cv(i).toDouble * qv(i).toDouble; i += 1 }
+          (id, java.math.BigDecimal.valueOf(s)
+            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue)
+        }
+        // (cscore desc, cluster asc); input is id-ascending and sortBy is
+        // stable, so negating the score alone reproduces the tie order
+        // (scores are finite rounded decimals — TotalOrdering is safe)
+        val ranked =
+          scored.sortBy(-_._2)(Ordering.Double.TotalOrdering).map(_._1) ++ nullRows
+        ranked.take(nprobe).toSeq
       }
-      // (cscore desc, cluster asc); input is id-ascending and sortBy is
-      // stable, so negating the score alone reproduces the tie order
-      // (scores are finite rounded decimals — TotalOrdering is safe)
-      val ranked =
-        scored.sortBy(-_._2)(Ordering.Double.TotalOrdering).map(_._1) ++ nullRows
-      ranked.take(nprobe).toSeq
+  }
+
+  /** The coarse quantizer of one index as the driver holds it: the
+    * [[CentroidCache]] of its flat centroid table, or of a hierarchy's
+    * level-1 table. `nlist` is the index's cell count — the top table's
+    * rows when flat, one count of the `l2` store at first use when not. */
+  private[graft] final class Quantizer(
+      val top: CentroidCache, val idCol: String, l2: Option[DataFrame]) {
+    lazy val nlist: Int = l2.fold(top.nlist)(_.count().toInt)
+  }
+
+  /** Every [[Quantizer]], keyed by the REFERENCE of the table it ranks
+    * (the flat centroids, or a hierarchy's `l1`). A retrain-and-swap
+    * publish hands out new DataFrames, so a stale cache cannot survive a
+    * version swap; weak keys drop a cache with its index. */
+  private val quantizers =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[DataFrame, Quantizer])
+
+  /** The cached [[Quantizer]] of an index, built on first use. Get, then
+    * build, then `putIfAbsent` rather than `computeIfAbsent`: the build
+    * runs a Spark collect, and `computeIfAbsent` on the synchronized map
+    * would hold its one mutex for that whole job, so concurrent first
+    * requests against DIFFERENT indexes would queue behind one collect. A
+    * duplicate build is benign (both caches are equal; one wins). A
+    * table probed under a second id column gets an uncached quantizer. */
+  private[graft] def quantizer(
+      centroids: DataFrame,
+      hierarchy: Option[(DataFrame, DataFrame)],
+      clusterCol: String = "cluster"): Quantizer = {
+    val (table, idCol) = hierarchy.fold((centroids, clusterCol))(h => (h._1, "gid"))
+    val cached = quantizers.get(table)
+    if (cached != null && cached.idCol == idCol) cached
+    else {
+      val built = hierarchy match {
+        case Some((l1, l2)) => new Quantizer(new CentroidCache(l1, "gid", "gv"), "gid", Some(l2))
+        case None => new Quantizer(new CentroidCache(centroids, clusterCol), clusterCol, None)
+      }
+      val prev = quantizers.putIfAbsent(table, built)
+      if (prev != null && prev.idCol == idCol) prev else built
     }
   }
+
+  /** The one coarse probe every pruned serving path, calibration and the
+    * facade run: for each `(query_id, qv)` query, its `nprobe` best cells,
+    * best first. The flat centroid table, or a hierarchy's level-1 table,
+    * is ranked IN PROCESS through the driver-cached [[Quantizer]] (zero
+    * Spark jobs once warm; exact [[probeCells]] parity, ProbeCacheSpec).
+    * With a `hierarchy` the `nprobeL1` best groups open, and only the
+    * level-2 stage is a Spark ranking of those groups' centroids
+    * ([[probeCellsL2]] for one query, [[rankCellsL2]] for a batch).
+    * `nprobeL1` defaults to full level-1 probe, which reproduces the flat
+    * probe bit-for-bit, so a caller without a calibrated pair loses no
+    * recall. A null `qv` ranks as [[probeCells]] ranks it. */
+  private[graft] def probe(
+      centroids: DataFrame,
+      hierarchy: Option[(DataFrame, DataFrame)],
+      queries: Seq[(Long, Array[Float])],
+      nprobeL1: Option[Int],
+      nprobe: Int,
+      clusterCol: String = "cluster"): Seq[(Long, Seq[Int])] = {
+    val top = quantizer(centroids, hierarchy, clusterCol).top
+    def rankTop(depth: Int) = queries.map { case (q, qv) => q -> top.probe(qv, depth) }
+    hierarchy match {
+      case None => rankTop(nprobe)
+      case Some((_, l2)) =>
+        val opened = rankTop(nprobeL1.getOrElse(top.nlist))
+        val spark = l2.sparkSession
+        import spark.implicits._
+        lazy val qDf = queries.toDF("query_id", "qv")
+        opened match {
+          case Seq() => Nil
+          case Seq((q, gids)) => Seq(q -> probeCellsL2(l2, gids, qDf, nprobe, clusterCol))
+          case _ =>
+            val ranked = rankCellsL2(l2, opened, qDf, Some(nprobe), clusterCol)
+            opened.map { case (q, _) => q -> ranked.getOrElse(q, Nil) }
+        }
+    }
+  }
+
+  /** The query of a single-query frame (`qv`) as [[probe]] takes it: no
+    * query for a zero-row frame (which serves an empty result), and a
+    * null vector kept as null. A frame of two or more rows is a batch:
+    * it is refused by name rather than ranked as one query. */
+  private[graft] def singleQuery(queryDf: DataFrame): Seq[(Long, Array[Float])] = {
+    val rows = queryDf.select(col("qv")).limit(2).collect()
+    require(rows.length <= 1,
+      "a single-query frame holds at most one qv row; serve more through the batch form")
+    rows.toSeq.map(r => 0L -> vectorAt(r, 0))
+  }
+
+  /** The `(query_id, qv)` rows of a batch frame as [[probe]] takes them. */
+  private[graft] def batchQueries(queries: DataFrame): Seq[(Long, Array[Float])] =
+    queries.select(col("query_id").cast("long"), col("qv")).collect().toSeq
+      .map(r => r.getLong(0) -> vectorAt(r, 1))
+
+  private def vectorAt(r: org.apache.spark.sql.Row, i: Int): Array[Float] =
+    if (r.isNullAt(i)) null else r.getSeq[Float](i).toArray
 
   /** TWO-LEVEL coarse quantizer BUILD (the FAISS IMI analog; VERDICT r14
     * #3): [[probeCells]]/[[CentroidCache]] collect the full nlist ~ 4*sqrt(N)
@@ -2581,7 +2685,7 @@ object Similarity {
     *   - `l2`: the centroid table tagged with its group, PARTITIONED BY
     *     gid — so the level-2 ranking is a PartitionFilters-pruned scan
     *     of ~nprobeL1/groups of the centroids, never a driver collect.
-    * Serving goes through [[probeCellsTwoLevel]]. At full level-1 probe
+    * Serving probes it through [[probe]]. At full level-1 probe
     * (nprobeL1 >= groups) the two-level probe is EXACTLY [[probeCells]]
     * (same rounding, same tiebreaks — CoarseHierarchySpec pins it); at
     * partial probe it trades centroid coverage for a bounded driver,
@@ -2617,7 +2721,7 @@ object Similarity {
   }
 
   /** IMI-style TWO-LEVEL corpus assignment (the build/maintenance twin of
-    * [[probeCellsTwoLevel]], VERDICT r16 #3): each row goes to its nearest
+    * the two-level [[probe]], VERDICT r16 #3): each row goes to its nearest
     * LEVEL-1 group ([[assignCellsBulk]] over the sqrt(nlist)-row `l1`
     * table), then to the argmax centroid WITHIN that group's `l2` members
     * — the assignment a FAISS IMI quantizer performs by construction. At
@@ -2668,101 +2772,12 @@ object Similarity {
         .otherwise(lit(0) - col("__best.negc")).as(clusterCol): _*)
   }
 
-  /** TWO-LEVEL coarse probe (serving side of [[buildCoarseHierarchy]]):
-    * rank the sqrt(nlist)-row level-1 table against the query (the only
-    * driver-scale step), open the `nprobeL1` best groups' PARTITIONS of
-    * the grouped centroid store, rank those centroids distributed, and
-    * return the `nprobe` best cell ids — the same contract as
-    * [[probeCells]] with the driver bound dropped from nlist to
-    * sqrt(nlist). Both stages use the identical rounded-dot ordering
-    * (round 6, desc, ties to the lower id, nulls last), so full level-1
-    * probe reproduces [[probeCells]] bit-for-bit. For a hot serving path
-    * wrap level 1 in a [[CentroidCache]] over `l1.select(gid as cluster,
-    * gv as cv)` — sqrt(nlist) rows stay cacheable at any realistic N. */
-  def probeCellsTwoLevel(
-      l1: DataFrame,
-      l2: DataFrame,
-      queryDf: DataFrame,
-      nprobeL1: Int,
-      nprobe: Int,
-      clusterCol: String = "cluster"): Seq[Int] = {
-    val gids = l1.crossJoin(broadcast(queryDf))
-      .select(col("gid"),
-        round(VectorOps.dot(col("gv"), col("qv")), 6).as("gscore"))
-      .orderBy(col("gscore").desc, col("gid").asc)
-      .limit(nprobeL1)
-      .collect().map(_.getInt(0)).toSeq
-    probeCellsL2(l2, gids, queryDf, nprobe, clusterCol)
-  }
-
-  /** Cached L1 group counts for the full-L1 default (ADVICE r17): with
-    * `nprobeL1` unset the dispatch probes every group (flat-parity mode),
-    * and resolving that default with `l1.count()` launched a Spark job
-    * PER SEARCH — and per micro-batch in [[graft.streaming
-    * .IncrementalIndex.serveAnnStream]]. The count is a property of the
-    * hierarchy artifact, so cache it per L1 DataFrame reference (weak
-    * keys — a retrain-and-swap hands out new DataFrames, exactly like
-    * the facade's probe caches, so a stale count cannot survive a
-    * version swap). */
-  private val l1GroupCounts =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[DataFrame, java.lang.Integer])
-
-  private[graft] def l1GroupCount(l1: DataFrame): Int = {
-    val cached = l1GroupCounts.get(l1)
-    if (cached != null) cached.intValue
-    else {
-      val n = l1.count().toInt
-      l1GroupCounts.put(l1, Int.box(n))
-      n
-    }
-  }
-
-  /** Coarse-probe DISPATCH shared by every pruned serving path
-    * (VERDICT r16 #4): with a two-level hierarchy the probe ranks the
-    * sqrt(nlist)-row L1 table and the opened groups' L2 partitions
-    * ([[probeCellsTwoLevel]]) — the flat centroid table is never
-    * materialized; without one it falls back to flat [[probeCells]].
-    * `nprobeL1` defaults to FULL level-1 probe, which reproduces the flat
-    * probe bit-for-bit (the [[probeCellsTwoLevel]] parity contract), so a
-    * caller without a calibrated pair loses no recall — only the
-    * calibrated partial probe trades recall for the sqrt driver bound. */
-  private[graft] def probeDispatch(
-      centroids: DataFrame,
-      hierarchy: Option[(DataFrame, DataFrame)],
-      queryDf: DataFrame,
-      nprobeL1: Option[Int],
-      nprobe: Int,
-      clusterCol: String): Seq[Int] =
-    hierarchy match {
-      case Some((l1, l2)) =>
-        probeCellsTwoLevel(l1, l2, queryDf,
-          nprobeL1.getOrElse(l1GroupCount(l1)), nprobe, clusterCol)
-      case None => probeCells(centroids, queryDf, nprobe, clusterCol)
-    }
-
-  /** Batch form of [[probeDispatch]] ([[probeCellsTwoLevelBatch]] /
-    * [[probeCellsBatch]]). */
-  private[graft] def probeDispatchBatch(
-      centroids: DataFrame,
-      hierarchy: Option[(DataFrame, DataFrame)],
-      queries: DataFrame,
-      nprobeL1: Option[Int],
-      nprobe: Int,
-      clusterCol: String): Seq[(Long, Int)] =
-    hierarchy match {
-      case Some((l1, l2)) =>
-        probeCellsTwoLevelBatch(l1, l2, queries,
-          nprobeL1.getOrElse(l1GroupCount(l1)), nprobe, clusterCol)
-      case None => probeCellsBatch(centroids, queries, nprobe, clusterCol)
-    }
-
-  /** The LEVEL-2 stage of the two-level probe — rank the opened groups'
-    * centroids (a gid-partition-pruned scan of the `l2` store) and return
-    * the `nprobe` best cell ids. Shared by [[probeCellsTwoLevel]] and the
-    * facade's serving cache (which ranks level 1 in-process), so the
-    * rounded-dot ordering and lower-id tiebreaks exist in exactly ONE
-    * place and the full-L1 parity contract cannot drift. */
+  /** The LEVEL-2 stage of the two-level probe for one query — rank the
+    * opened groups' centroids (a gid-partition-pruned scan of the `l2`
+    * store) and return the `nprobe` best cell ids. Level 1 is ranked in
+    * process by [[probe]]; both stages use the identical rounded-dot
+    * ordering (round 6, desc, ties to the lower id, nulls last), so full
+    * level-1 probe reproduces [[probeCells]] bit-for-bit. */
   def probeCellsL2(
       l2: DataFrame,
       gids: Seq[Int],
@@ -2777,45 +2792,34 @@ object Similarity {
       .limit(nprobe)
       .collect().map(_.getInt(0)).toSeq
 
-  /** Batch form of [[probeCellsTwoLevel]] (the [[probeCellsBatch]] analog
-    * for a hierarchy-backed index): per-query level-1 group ranking (L1 is
-    * sqrt(nlist) x batch rows — driver-scale), then ONE partition-pruned
-    * scan of the union of opened groups' centroids ranked per query.
-    * Identical rounding/tiebreaks to the single-query form, so full L1
-    * probe reproduces [[probeCellsBatch]] exactly. */
-  def probeCellsTwoLevelBatch(
-      l1: DataFrame,
+  /** The LEVEL-2 stage for a batch: ONE partition-pruned scan of the
+    * union of the opened groups' centroids, each ranked per query over
+    * that query's own opened groups, with [[probeCellsL2]]'s ordering.
+    * Per query, the `depth` best cells best first (every opened cell when
+    * `depth` is None — the full ranking whose prefixes are every nprobe's
+    * probe list). `queries` is a small `(query_id LONG, qv)` frame. */
+  private def rankCellsL2(
       l2: DataFrame,
+      opened: Seq[(Long, Seq[Int])],
       queries: DataFrame,
-      nprobeL1: Int,
-      nprobe: Int,
-      clusterCol: String = "cluster"): Seq[(Long, Int)] = {
-    val byQueryG = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("gscore").desc, col("gid").asc)
-    val qgids = l1.crossJoin(broadcast(queries))
-      .select(col("query_id"), col("gid"),
-        round(VectorOps.dot(col("gv"), col("qv")), 6).as("gscore"))
-      .withColumn("__rn", row_number().over(byQueryG))
-      .filter(col("__rn") <= nprobeL1)
-      .select(col("query_id"), col("gid"))
-      .collect().map(r => (r.getLong(0), r.getInt(1)))
-    val gidUnion = qgids.map(_._2).distinct.toSeq
+      depth: Option[Int],
+      clusterCol: String): Map[Long, Seq[Int]] = {
     val spark = l2.sparkSession
     import spark.implicits._
-    val qgDf = qgids.toSeq.toDF("query_id", "gid")
-    val byQueryC = org.apache.spark.sql.expressions.Window
+    val pairs = opened.flatMap { case (q, gids) => gids.map(q -> _) }
+    val byQuery = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("cscore").desc, col(clusterCol).asc)
-    l2.filter(col("gid").isin(gidUnion: _*))
-      .join(broadcast(qgDf), Seq("gid"))
+    val ranked = l2.filter(col("gid").isin(pairs.map(_._2).distinct: _*))
+      .join(broadcast(pairs.toDF("query_id", "gid")), Seq("gid"))
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col(clusterCol),
         round(VectorOps.dot(col("cv"), col("qv")), 6).as("cscore"))
-      .withColumn("__rn", row_number().over(byQueryC))
-      .filter(col("__rn") <= nprobe)
-      .select(col("query_id"), col(clusterCol))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+      .withColumn("__rn", row_number().over(byQuery))
+    depth.fold(ranked)(d => ranked.filter(col("__rn") <= d))
+      .select(col("query_id"), col(clusterCol), col("__rn"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
+      .groupBy(_._1).view.mapValues(_.sortBy(_._3).map(_._2).toSeq).toMap
   }
 
   /** JOINT (nprobeL1, nprobe) calibration (VERDICT r16 #7): the two
@@ -2872,23 +2876,17 @@ object Similarity {
     require(exact.nonEmpty, "calibration query sample is empty")
     val spark = cells.sparkSession
     import spark.implicits._
-    val groups = math.max(1, l1GroupCount(l1))
-    val nlist = math.max(1, l2.count().toInt)
+    // the serving probe's quantizer (the flat-table argument is unused
+    // when a hierarchy is given)
+    val quant = quantizer(l1, Some((l1, l2)), clusterCol)
+    val groups = math.max(1, quant.top.nlist)
+    val nlist = math.max(1, quant.nlist)
 
     // ---- rung-independent artifacts (one job each) -------------------
-    // full per-query L1 group ranking — every rung's opened set is a
-    // prefix of it ([[probeCellsTwoLevelBatch]]'s rounding/tiebreaks)
-    val byQueryG = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("gscore").desc, col("gid").asc)
-    val l1Ranked: Map[Long, Seq[Int]] =
-      l1.crossJoin(broadcast(queries))
-        .select(col("query_id"), col("gid"),
-          round(VectorOps.dot(col("gv"), col("qv")), 6).as("gscore"))
-        .withColumn("__rn", row_number().over(byQueryG))
-        .select(col("query_id"), col("gid"), col("__rn"))
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
-        .groupBy(_._1).view.mapValues(_.sortBy(_._3).map(_._2).toSeq).toMap
+    // full per-query L1 group ranking, in process — every rung's opened
+    // set is a prefix of it
+    val l1Ranked: Seq[(Long, Seq[Int])] =
+      batchQueries(queries).map { case (q, qv) => q -> quant.top.probe(qv, groups) }
     // per-query admission threshold: the minimum ROUNDED serving score
     // over the query's exact top-k — every row that can displace a truth
     // id from any served top-k scores at or above it
@@ -2914,25 +2912,15 @@ object Similarity {
     // ---- per-rung: one cell-ranking job + one thresholded corpus scan,
     // then the whole nprobe search in driver arithmetic
     def minNp(npL1: Int): Option[Int] = {
-      val openedPairs = l1Ranked.toSeq.flatMap { case (q, gids) =>
-        gids.take(npL1).map(g => (q, g))
-      }
+      val opened = l1Ranked.map { case (q, gids) => q -> gids.take(npL1) }
+      val openedPairs = opened.flatMap { case (q, gids) => gids.map(q -> _) }
       val qgDf = broadcast(openedPairs.toDF("query_id", "gid"))
-      // per-query ranking of the opened groups' cells (full depth — the
-      // probe list at any nprobe is its prefix); ordering matches
-      // [[probeCellsTwoLevelBatch]] exactly
-      val byQueryC = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("cscore").desc, col(clusterCol).asc)
+      // per-query ranking of the opened groups' cells at full depth (the
+      // probe list at any nprobe is its prefix) — the serving L2 stage
       val cellRank: Map[(Long, Int), Int] =
-        l2.join(qgDf, Seq("gid"))
-          .join(broadcast(queries), Seq("query_id"))
-          .select(col("query_id"), col(clusterCol),
-            round(VectorOps.dot(col("cv"), col("qv")), 6).as("cscore"))
-          .withColumn("__rn", row_number().over(byQueryC))
-          .select(col("query_id"), col(clusterCol), col("__rn"))
-          .collect()
-          .map(r => (r.getLong(0), r.getInt(1)) -> r.getInt(2)).toMap
+        rankCellsL2(l2, opened, queries, None, clusterCol).toSeq.flatMap { case (q, cells) =>
+          cells.zipWithIndex.map { case (c, i) => (q, c) -> (i + 1) }
+        }.toMap
       // decisive rows: opened-group cells, scored per opening query on
       // the serving rounding, admitted at or above the query's threshold.
       // The scan partition-prunes to the opened groups' cells (the same
@@ -2999,50 +2987,6 @@ object Similarity {
     require(feasible.nonEmpty,
       f"no (nprobeL1, nprobe) pair meets recall@$k >= $targetRecall%.3f")
     feasible.minBy(cost)
-  }
-
-  /** Batch form of [[probeCells]]: per-query `nprobe` best cells for a
-    * small `(query_id LONG, qv)` batch — (query_id, cluster) pairs plus
-    * the deduplicated cell union for the partition filter. The ranking
-    * runs on centroids x queries (k x batch rows — driver-scale). */
-  def probeCellsBatch(
-      centroids: DataFrame,
-      queries: DataFrame,
-      nprobe: Int,
-      clusterCol: String = "cluster"): Seq[(Long, Int)] = {
-    val byQuery = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cscore").desc, col(clusterCol).asc)
-    centroids.crossJoin(broadcast(queries))
-      .select(col("query_id"), col(clusterCol),
-        round(VectorOps.dot(col("cv"), col("qv")), 6).as("cscore"))
-      .withColumn("__rn", row_number().over(byQuery))
-      .filter(col("__rn") <= nprobe)
-      .select(col("query_id"), col(clusterCol))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-  }
-
-  /** Full per-query centroid ranking for ADAPTIVE batch planning: every
-    * (query, cell) pair ranked by centroid score (rank 1 = best; ties to
-    * the lower cluster id), collected driver-side and grouped per query —
-    * k_cells x batch rows, coarse-quantizer scale like
-    * [[probeCellsBatch]]. */
-  def probeCellsRankedBatch(
-      centroids: DataFrame,
-      queries: DataFrame,
-      clusterCol: String = "cluster"): Map[Long, Seq[Int]] = {
-    val byQuery = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cscore").desc, col(clusterCol).asc)
-    centroids.crossJoin(broadcast(queries))
-      .select(col("query_id"), col(clusterCol),
-        round(VectorOps.dot(col("cv"), col("qv")), 6).as("cscore"))
-      .withColumn("__rn", row_number().over(byQuery))
-      .select(col("query_id"), col(clusterCol), col("__rn"))
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
-      .groupBy(_._1).view
-      .mapValues(_.sortBy(_._3).map(_._2).toSeq).toMap
   }
 
   /** Candidate-set restriction pushed INTO an index search — the engine's
@@ -3112,8 +3056,8 @@ object Similarity {
     * and refine serving form below is one call into it. A single query is
     * a batch of one, as in FAISS's `index.search(x, k)`; the two shapes
     * differ in exactly four places:
-    *  - probe: [[probeDispatch]] vs [[probeDispatchBatch]] (flat
-    *    centroids, or the two-level `hierarchy`);
+    *  - the query side of [[probe]]: [[singleQuery]] vs [[batchQueries]]
+    *    (flat centroids, or the two-level `hierarchy`);
     *  - meeting the query: a single query reaches the probed cells' rows
     *    through a broadcast cross join; a batch joins them on the probed
     *    `(query_id, cell)` pairs and then on `query_id`, so each row is
@@ -3135,12 +3079,11 @@ object Similarity {
       plan: ServePlan): DataFrame = {
     require(nprobe > 0, s"nprobe must be positive, got $nprobe")
     require(nprobeL1.forall(_ > 0), s"nprobeL1 must be positive, got ${nprobeL1.getOrElse(0)}")
-    if (batch)
-      serveBatch(queries, probeDispatchBatch(centroids, hierarchy, queries,
-        nprobeL1, nprobe, plan.clusterCol), plan)
-    else
-      serveOne(queries, probeDispatch(centroids, hierarchy, queries,
-        nprobeL1, nprobe, plan.clusterCol), plan)
+    val probed = probe(centroids, hierarchy,
+      if (batch) batchQueries(queries) else singleQuery(queries),
+      nprobeL1, nprobe, plan.clusterCol)
+    if (batch) serveBatch(queries, probed, plan)
+    else serveOne(queries, probed.flatMap(_._2), plan)
   }
 
   /** The single-query tail of [[ivfServe]] over a probed cell list. */
@@ -3159,15 +3102,16 @@ object Similarity {
     }
   }
 
-  /** The batch tail of [[ivfServe]] over probed `(query_id, cell)` pairs;
+  /** The batch tail of [[ivfServe]] over each query's probed cells;
     * `queries` is a small `(query_id LONG, qv)` frame. */
   private def serveBatch(
-      queries: DataFrame, probed: Seq[(Long, Int)], plan: ServePlan): DataFrame = {
+      queries: DataFrame, probed: Seq[(Long, Seq[Int])], plan: ServePlan): DataFrame = {
     import plan._
     val spark = queries.sparkSession
     import spark.implicits._
-    val probedDf = broadcast(probed.toDF("query_id", clusterCol))
-    val cellUnion = probed.map(_._2).distinct
+    val pairs = probed.flatMap { case (q, cells) => cells.map(q -> _) }
+    val probedDf = broadcast(pairs.toDF("query_id", clusterCol))
+    val cellUnion = pairs.map(_._2).distinct
     def scan(c: Codec) = c.store.filter(col(clusterCol).isin(cellUnion: _*))
     def top(c: Codec, rows: DataFrame, n: Int) = topKPerQuery(
       scoreRows(c, rows, queries, Seq("query_id"), Seq("query_id", idCol), scoreName),
@@ -3196,8 +3140,8 @@ object Similarity {
   }
 
   /** IVF serving against a cell-PARTITIONED corpus table (the persisted
-    * [[assignCells]] output): probe driver-side ([[probeCells]], or the
-    * two-level [[probeCellsTwoLevel]] when a `hierarchy` is given), prune
+    * [[assignCells]] output): probe driver-side ([[probe]]: flat, or
+    * two-level when a `hierarchy` is given), prune
     * the scan to the probed cells' partitions with a literal `IN`,
     * exact-rescore only those rows. The serving-time plan touches
     * ~nprobe/k of the data and NEVER trains — centroids come from the
@@ -3452,35 +3396,32 @@ object Similarity {
         "it (buildDenseIndex statsCols) or express the filter as restrictIds")
     val counts = cellStatsCounts(cells, cellStats, admissible,
       restrictIds, excludeIds, idCol, clusterCol)
+    val query = singleQuery(queryDf)
+    // every cell (of the opened groups, with a hierarchy), best first
+    def ranked(nprobeL1: Option[Int]) =
+      probe(centroids, hierarchy, query, nprobeL1, Int.MaxValue, clusterCol).flatMap(_._2)
     val probed = hierarchy match {
-      case None =>
-        admissiblePrefix(probeCells(centroids, queryDf, Int.MaxValue, clusterCol), counts, k)
-      case Some((l1, l2)) =>
+      case None => admissiblePrefix(ranked(None), counts, k)
+      case Some(_) =>
         // TWO-LEVEL ADAPTIVE PLANNING (VERDICT r17 #3): the flat form
         // ranks ALL cells per request — at nlist ~ 1e5 that materializes
         // exactly the flat centroid scan the hierarchy exists to avoid.
-        // Instead: rank the sqrt-scale L1 groups once, then open an
-        // exponentially growing PREFIX of groups (starting at the
-        // calibrated nprobeL1 when one is supplied), rank only the
-        // opened groups' cells (a gid-pruned L2 scan — the
-        // [[probeCellsTwoLevel]] stage), and stop as soon as the opened
-        // groups hold k admissible candidates; the same minimal-prefix
-        // rule then runs over that ranking. A filter tight enough to
-        // exhaust every group degenerates to the full cell ranking,
-        // which is BIT-IDENTICAL to the flat form (the full-L1 parity
-        // contract), so the planner can never return fewer cells than
-        // the flat planner would.
-        val groups = l1GroupCount(l1)
-        val gidsRanked = probeCells(
-          l1.select(col("gid").as(clusterCol), col("gv").as("cv")),
-          queryDf, Int.MaxValue, clusterCol)
+        // Instead: open an exponentially growing PREFIX of the ranked L1
+        // groups (starting at the calibrated nprobeL1 when one is
+        // supplied), rank only the opened groups' cells (a gid-pruned L2
+        // scan), and stop as soon as the opened groups hold k admissible
+        // candidates; the same minimal-prefix rule then runs over that
+        // ranking. A filter tight enough to exhaust every group
+        // degenerates to the full cell ranking, which is BIT-IDENTICAL to
+        // the flat form (the full-L1 parity contract), so the planner can
+        // never return fewer cells than the flat planner would.
+        val groups = quantizer(centroids, hierarchy, clusterCol).top.nlist
         var g = math.min(groups, math.max(1, nprobeL1.getOrElse(1)))
         var result: Option[Seq[Int]] = None
         while (result.isEmpty) {
-          val ranked = probeCellsL2(l2, gidsRanked.take(g), queryDf,
-            Int.MaxValue, clusterCol)
-          val total = ranked.foldLeft(0L)((acc, c) => acc + counts.getOrElse(c, 0L))
-          if (total >= k || g >= groups) result = Some(admissiblePrefix(ranked, counts, k))
+          val cells = ranked(Some(g))
+          val total = cells.foldLeft(0L)((acc, c) => acc + counts.getOrElse(c, 0L))
+          if (total >= k || g >= groups) result = Some(admissiblePrefix(cells, counts, k))
           else g = math.min(groups, g * 2)
         }
         result.get
@@ -3989,10 +3930,8 @@ object Similarity {
     val counts =
       cellStatsCounts(cells, Some(cellStats), admissible, None, None,
         idCol, clusterCol)
-    val probed = probeCellsRankedBatch(centroids, queries, clusterCol)
-      .toSeq.flatMap { case (qid, ranked) =>
-        admissiblePrefix(ranked, counts, k).map(c => (qid, c))
-      }
+    val probed = probe(centroids, None, batchQueries(queries), None, Int.MaxValue, clusterCol)
+      .map { case (qid, ranked) => qid -> admissiblePrefix(ranked, counts, k) }
     serveBatch(queries, probed, plan)
   }
 

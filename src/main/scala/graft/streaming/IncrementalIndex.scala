@@ -1506,34 +1506,14 @@ object IncrementalIndex {
       k: Int,
       maxFilesPerTrigger: Int = 2,
       hierarchy: Option[(DataFrame, DataFrame)] = None,
-      nprobeL1: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(queryLandingDir).schema
-    // scratch checkpoint on a session clone: the caller's session conf
-    // (and a durable query running on it) is never touched
-    val src = ScratchCheckpoints.newSession(spark).readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(queryLandingDir)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+      nprobeL1: Option[Int] = None): DataFrame =
     // hierarchy dispatch like the facade (VERDICT r16 #4): a big-nlist
     // stream-serving job probes the sqrt-bounded l1/l2 pair per batch
     // instead of materializing the flat centroid table; full-L1 default
     // keeps bit parity with the flat probe
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val res = graft.operators.Similarity.ivfSearchBatchPruned(cells,
-          centroids, batch, nprobe, k, hierarchy = hierarchy, nprobeL1 = nprobeL1)
-          .collect()
-        buf.synchronized {
-          buf ++= res.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    import spark.implicits._
-    buf.toSeq.toDF("query_id", "vec_id", "sim")
-  }
+    serveStream(spark, queryLandingDir, maxFilesPerTrigger, "sim")(batch =>
+      graft.operators.Similarity.ivfSearchBatchPruned(cells,
+        centroids, batch, nprobe, k, hierarchy = hierarchy, nprobeL1 = nprobeL1))
 
   /** STREAMING RANGE serving — [[serveAnnStream]]'s radius sibling: each
     * micro-batch of query vectors is answered from the persisted IVF
@@ -1553,7 +1533,20 @@ object IncrementalIndex {
       centroids: DataFrame,
       radii: DataFrame,
       minScore: Double,
-      maxFilesPerTrigger: Int = 2): DataFrame = {
+      maxFilesPerTrigger: Int = 2): DataFrame =
+    serveStream(spark, queryLandingDir, maxFilesPerTrigger, "score")(batch =>
+      graft.operators.Similarity
+        .ivfRangeSearchBatchPruned(cells, centroids, radii, batch, minScore))
+
+  /** The micro-batch driver of [[serveAnnStream]] and [[serveRangeStream]]:
+    * stream the query files of `queryLandingDir`, answer each micro-batch
+    * with `serve` (a `(query_id, id, score)` frame), and accumulate every
+    * answer driver-side as `(query_id, vec_id, scoreName)`. */
+  private def serveStream(
+      spark: SparkSession,
+      queryLandingDir: String,
+      maxFilesPerTrigger: Int,
+      scoreName: String)(serve: DataFrame => DataFrame): DataFrame = {
     val schema = spark.read.parquet(queryLandingDir).schema
     // scratch checkpoint on a session clone: the caller's session conf
     // (and a durable query running on it) is never touched
@@ -1563,9 +1556,7 @@ object IncrementalIndex {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     val q = src.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val res = graft.operators.Similarity
-          .ivfRangeSearchBatchPruned(cells, centroids, radii, batch, minScore)
-          .collect()
+        val res = serve(batch).collect()
         buf.synchronized {
           buf ++= res.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         }
@@ -1575,6 +1566,6 @@ object IncrementalIndex {
       .start()
     q.awaitTermination()
     import spark.implicits._
-    buf.toSeq.toDF("query_id", "vec_id", "score")
+    buf.toSeq.toDF("query_id", "vec_id", scoreName)
   }
 }

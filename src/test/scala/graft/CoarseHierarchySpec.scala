@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Two-level coarse quantizer ([[Similarity.buildCoarseHierarchy]] /
-  * [[Similarity.probeCellsTwoLevel]] — the FAISS IMI analog that bounds
+  * the two-level [[Similarity.probe]] — the FAISS IMI analog that bounds
   * the driver at sqrt(nlist) instead of nlist):
   *
   *  - the grouped level-2 store partitions the centroid table without
@@ -54,23 +54,24 @@ class CoarseHierarchySpec extends AnyFunSuite {
       val qDf = emb.filter(col("vec_id") === q)
         .select(col("embedding").as("qv"))
       val flat = Similarity.probeCells(centArt, qDf, np)
-      val two = Similarity.probeCellsTwoLevel(l1, l2, qDf, groups, np)
+      val two = Similarity.probe(centArt, Some((l1, l2)), Similarity.singleQuery(qDf),
+        Some(groups), np).flatMap(_._2)
       assert(two === flat, s"two-level(full l1) != flat at q=$q np=$np")
     }
   }
 
   test("batch two-level probe == single-query form, per query") {
-    val (emb, _, l1, l2) = fixture()
+    val (emb, centArt, l1, l2) = fixture()
     val queries = emb.filter(col("vec_id").isin(0L, 7L, 42L))
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val batch = Similarity.probeCellsTwoLevelBatch(l1, l2, queries,
-        nprobeL1 = 2, nprobe = 4)
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val batch = Similarity.probe(centArt, Some((l1, l2)), Similarity.batchQueries(queries),
+        nprobeL1 = Some(2), nprobe = 4)
+      .toMap.view.mapValues(_.toSet).toMap
     for (q <- Seq(0L, 7L, 42L)) {
       val qDf = emb.filter(col("vec_id") === q)
         .select(col("embedding").as("qv"))
-      val single =
-        Similarity.probeCellsTwoLevel(l1, l2, qDf, nprobeL1 = 2, nprobe = 4)
+      val single = Similarity.probe(centArt, Some((l1, l2)), Similarity.singleQuery(qDf),
+        nprobeL1 = Some(2), nprobe = 4).flatMap(_._2)
       assert(batch(q) === single.toSet, s"batch != single at q=$q")
     }
   }
@@ -333,11 +334,11 @@ class CoarseHierarchySpec extends AnyFunSuite {
   }
 
   test("partial level-1 probe draws only from the probed groups") {
-    val (emb, _, l1, l2) = fixture()
+    val (emb, centArt, l1, l2) = fixture()
     val qDf = emb.filter(col("vec_id") === 3L)
       .select(col("embedding").as("qv"))
-    val got = Similarity.probeCellsTwoLevel(l1, l2, qDf, nprobeL1 = 2,
-      nprobe = 100)
+    val got = Similarity.probe(centArt, Some((l1, l2)), Similarity.singleQuery(qDf),
+      nprobeL1 = Some(2), nprobe = 100).flatMap(_._2)
     // recompute the 2 probed groups' membership directly
     val gids = l1.crossJoin(qDf)
       .select(col("gid"),

@@ -307,7 +307,8 @@ class IncrementalIndexSpec extends AnyFunSuite {
     assert(l2.count() === 16)
     val groups = l1.count().toInt
     val qDf = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    assert(Similarity.probeCellsTwoLevel(l1, l2, qDf, groups, 4) ===
+    assert(Similarity.probe(centArt, Some((l1, l2)), Similarity.singleQuery(qDf),
+        Some(groups), 4).flatMap(_._2) ===
       Similarity.probeCells(centArt, qDf, 4))
     // a flat retrain (no coarseCentroids) publishes no hierarchy
     val root2 = base.resolve("index2").toString
@@ -617,8 +618,8 @@ class IncrementalIndexSpec extends AnyFunSuite {
     val (l1v, l2v) = IncrementalIndex.currentHierarchy(spark, indexRoot).get
     val qDf = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val centFlat = cents.select(col("label").as("cluster"), col("cv"))
-    assert(Similarity.probeCellsTwoLevel(l1v, l2v, qDf,
-        l1v.count().toInt, 4) ===
+    assert(Similarity.probe(centFlat, Some((l1v, l2v)), Similarity.singleQuery(qDf),
+        Some(l1v.count().toInt), 4).flatMap(_._2) ===
       Similarity.probeCells(centFlat, qDf, 4))
 
     // the 1-bit signature store stayed in lockstep through gate + retrain

@@ -373,7 +373,7 @@ class SearchEngineSpec extends AnyFunSuite {
     val groups = l1.count().toInt
     // full L1 probe + full nprobe: the two-level facade path must equal
     // the exact corpus scan, filters and all — the dispatch (index.l1/l2
-    // present -> TwoLevelProbe) proven on results, not plan shape
+    // present -> two-level Similarity.probe) proven on results, not plan shape
     val idx = clipIndex.copy(l1 = Some(l1), l2 = Some(l2),
       defaultNprobeL1 = Some(groups), defaultNprobe = Some(4))
     val filters = Filters(partitionTag = Some(2), ignoreIds = Seq(60L))
@@ -384,7 +384,7 @@ class SearchEngineSpec extends AnyFunSuite {
     assert(ann.nonEmpty)
     assert(ann.toSeq === exact.toSeq)
     // partial L1 probe: the facade's in-process L1 cache + pruned L2
-    // rank must pick EXACTLY the operator-level probeCellsTwoLevel cells
+    // rank must pick EXACTLY the operator-level two-level probe's cells
     // — pinned by composing the expected result from the operator probe
     // through the same score/group shape annChannel serves
     val partial = idx.copy(defaultNprobeL1 = Some(1))
@@ -393,8 +393,8 @@ class SearchEngineSpec extends AnyFunSuite {
     assert(got.nonEmpty)
     val spark2 = clipIndex.cells.sparkSession
     val qDf = spark2.range(1).select(lit(q).as("qv"))
-    val probed = Similarity.probeCellsTwoLevel(l1, l2, qDf,
-      nprobeL1 = 1, nprobe = 2)
+    val probed = Similarity.probe(clipIndex.centroids, Some((l1, l2)),
+      Similarity.singleQuery(qDf), nprobeL1 = Some(1), nprobe = 2).flatMap(_._2)
     val scored = clipIndex.cells.filter(col("cluster").isin(probed: _*))
       .withColumn("qv", lit(q))
       .select(col("id"),

@@ -39,4 +39,20 @@ class SessionsSpec extends AnyFunSuite {
     finally walk.close()
     assert(builders === Set("Sessions.scala", "Smoke.scala"))
   }
+
+  test("one coarse-probe cache: only Similarity names CentroidCache or builds a WeakHashMap") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    def holdsCache(p: java.nio.file.Path): Boolean =
+      Files.readAllLines(p).asScala.map(_.trim).exists { l =>
+        !l.startsWith("*") && !l.startsWith("/*") && !l.startsWith("//") &&
+          (l.contains("CentroidCache") || l.contains("WeakHashMap"))
+      }
+    val walk = Files.walk(root)
+    val holders = try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && holdsCache(p))
+      .map(_.getFileName.toString).toSet
+    finally walk.close()
+    assert(holders === Set("Similarity.scala"))
+  }
 }

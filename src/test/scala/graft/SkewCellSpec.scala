@@ -100,9 +100,10 @@ class SkewCellSpec extends AnyFunSuite {
       .collect().map(r => r.getAs[Number]("cluster").intValue -> r.getLong(1)).toMap
     val hotQ = emb.filter(col("vec_id") % 10 < 8 && col("vec_id") < 40).limit(20)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val probed = Similarity.probeCellsBatch(idx.centroids, hotQ, nprobe = 1)
+    val probed = Similarity.probe(idx.centroids, None, Similarity.batchQueries(hotQ),
+      None, nprobe = 1).flatMap(_._2)
     assert(probed.nonEmpty)
-    val worst = probed.map(p => sizes.getOrElse(p._2, 0L)).max
+    val worst = probed.map(sizes.getOrElse(_, 0L)).max
     assert(worst < hotRows,
       s"a hot-region probe still opens the whole hot region: $worst of $hotRows")
   }

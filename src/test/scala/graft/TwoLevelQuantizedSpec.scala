@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Two-level coarse probe through the QUANTIZED serving paths (VERDICT
-  * r16 #4): [[Similarity.probeCellsTwoLevel]] at FULL level-1 probe
+  * r16 #4): the two-level [[Similarity.probe]] at FULL level-1 probe
   * reproduces the flat [[Similarity.probeCells]] bit-for-bit, so every
   * quantized/refine serving form must return IDENTICAL results when
   * dispatched through the hierarchy at nprobeL1 = groups — pq/int8/
@@ -178,8 +178,8 @@ class TwoLevelQuantizedSpec extends AnyFunSuite {
   test("partial-L1 quantized refine draws only from the probed groups' cells") {
     val (emb, cents, l1, l2, cells, cbk, codes, _, _, _) = fx
     val qv = emb.filter(col("vec_id") === 3L).select(col("embedding").as("qv"))
-    val gids = Similarity.probeCellsTwoLevel(l1, l2, qv,
-      nprobeL1 = 2, nprobe = Int.MaxValue)
+    val gids = Similarity.probe(cents, Some((l1, l2)), Similarity.singleQuery(qv),
+      nprobeL1 = Some(2), nprobe = Int.MaxValue).flatMap(_._2)
     val member = cells
       .filter(col("cluster").isin(gids: _*))
       .select("vec_id").collect().map(_.getLong(0)).toSet
