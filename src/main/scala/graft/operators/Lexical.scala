@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -369,17 +369,31 @@ object Lexical {
     writeStats(
       dfreq
         .select(log((n - col("df") + lit(0.5)) / (col("df") + lit(0.5))).as("idf_raw"))
-        .agg(avg(col("idf_raw")).as("avg_idf"))
+        .agg(exactMean(col("idf_raw")).as("avg_idf"))
         .crossJoin(dl.agg((sum(col("dl")) / count(lit(1))).as("avgdl")))
         .select(n.as("n"), col("avgdl"), col("avg_idf")))
     val byDoc = Window.partitionBy(col("id"))
     save("vectors",
       p.join(dfreq, Seq("term")) // co-located when save buckets by term
         .withColumn("w", col("tf") * smoothIdf(col("df"), n))
-        .withColumn("w", col("w") / sqrt(sum(col("w") * col("w")).over(byDoc)))
+        .withColumn("w", col("w") / l2Norm(col("w"), byDoc))
         .select(col("id"), col("term"), col("w")),
       Seq("term"))
   }
+
+  /** The per-document L2 norm of the weights `w` over `byDoc`, summed as
+    * exact DECIMAL(28,12) squares (every `w` here is tf x a smoothed idf,
+    * >= 1, so 12 decimals keep 12+ significant digits): a double sum
+    * would depend on the order the window sees a document's terms, which
+    * changes with the input's partitioning and the shuffle, and the
+    * written `w` would change in its last bits between builds. */
+  private def l2Norm(w: Column, byDoc: org.apache.spark.sql.expressions.WindowSpec): Column =
+    sqrt(sum((w * w).cast("decimal(28,12)")).over(byDoc).cast("double"))
+
+  /** `avg(x)` as an exact DECIMAL(28,12) sum over the non-null count: the
+    * same value in any summation order. */
+  private def exactMean(x: Column): Column =
+    sum(x.cast("decimal(28,12)")).cast("double") / count(x)
 
   /** Fit + persist from a postings relation — the bridge from
     * [[graft.streaming.IncrementalIndex.updatePostings]]'s maintained sink
@@ -423,7 +437,7 @@ object Lexical {
     deriveArtifacts(docs.count(),
       (name, df, keys) => Store.writeBucketed(df, table(name), buckets, keys.head),
       name => spark.table(table(name)),
-      _.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(table("stats")),
+      Store.writer(_).format("parquet").saveAsTable(table("stats")),
       postings(docs, idCol, textCol))
     readIndexTables(spark, prefix)
   }
@@ -484,36 +498,50 @@ object Lexical {
   def writeMultiIndex(
       spark: SparkSession,
       channels: Seq[(String, DataFrame, String, String)],
-      dir: String, buckets: Int = 32): MultiSparseIndex = {
-    val tagged = channels.map { case (ch, docs, idCol, textCol) =>
-      docs.select(lit(ch).as("ch"), col(idCol).as("id"), col(textCol).as("__txt"))
-    }.reduce(_ unionByName _)
-    saveClustered(
-      tagged
+      dir: String, buckets: Int = 32): MultiSparseIndex =
+    JobPhases(spark, "writeMultiIndex") { phase =>
+      import graft.sources.Store
+      // each artifact is read back once, with the schema it was written
+      // with, through Store.read: no listing or footer job per read
+      def readBack(sub: String, written: DataFrame): DataFrame =
+        Store.read(spark, s"$dir/$sub", Some(written.schema))
+      val tagged = channels.map { case (ch, docs, idCol, textCol) =>
+        docs.select(lit(ch).as("ch"), col(idCol).as("id"), col(textCol).as("__txt"))
+      }.reduce(_ unionByName _)
+      phase("tokenize + postings write")
+      val post = tagged
         .select(col("ch"), col("id"),
           explode(expr("regexp_extract_all(lower(__txt), '\\\\w+', 0)")).as("term"))
         .groupBy(col("ch"), col("id"), col("term"))
-        .agg(count(lit(1)).as("tf")),
-      s"$dir/postings", Seq("ch", "term"), buckets)
-    val p = spark.read.parquet(s"$dir/postings")
-    saveClustered(p.groupBy(col("ch"), col("term")).agg(count(lit(1)).as("df")),
-      s"$dir/docFreq", Seq("ch", "term"), buckets)
-    graft.sources.Store.writer(tagged.groupBy(col("ch")).agg(count(lit(1)).as("n"))
-      .coalesce(1)).parquet(s"$dir/stats")
-    // read once: the derivation below and the returned index share frames
-    val dfreq = spark.read.parquet(s"$dir/docFreq")
-    val stats = spark.read.parquet(s"$dir/stats")
-    val byDoc = Window.partitionBy(col("ch"), col("id"))
-    saveClustered(
-      p.join(dfreq, Seq("ch", "term"))
-        .join(broadcast(stats), Seq("ch"))
-        .withColumn("w", col("tf") * smoothIdf(col("df"), col("n")))
-        .withColumn("w", col("w") / sqrt(sum(col("w") * col("w")).over(byDoc)))
-        .select(col("ch"), col("id"), col("term"), col("w")),
-      s"$dir/vectors", Seq("ch", "term"), buckets)
-    MultiSparseIndex(
-      vectors = spark.read.parquet(s"$dir/vectors"), docFreq = dfreq, stats = stats)
-  }
+        .agg(count(lit(1)).as("tf"))
+      saveClustered(post, s"$dir/postings", Seq("ch", "term"), buckets)
+      val p = readBack("postings", post)
+      phase("docFreq write")
+      val df = p.groupBy(col("ch"), col("term")).agg(count(lit(1)).as("df"))
+      saveClustered(df, s"$dir/docFreq", Seq("ch", "term"), buckets)
+      // read once: the derivation below and the returned index share frames
+      val dfreq = readBack("docFreq", df)
+      phase("vectors write")
+      // one row per channel, collected once: its corpus size rides into
+      // the vectors plan as a literal map (a broadcast join of the 1-row
+      // table built a hashed relation of a whole memory page, 16 MB at
+      // -Xmx2g and local[4]), and the same rows are the `stats` artifact
+      val n = tagged.groupBy(col("ch")).agg(count(lit(1)).as("n"))
+      val perCh = n.collect()
+      val nByCh = perCh.map(r => r.getString(0) -> r.getLong(1)).toMap
+      val byDoc = Window.partitionBy(col("ch"), col("id"))
+      val vec = p.join(dfreq, Seq("ch", "term"))
+        .withColumn("w", col("tf") *
+          smoothIdf(col("df"), element_at(typedLit(nByCh), col("ch"))))
+        .withColumn("w", col("w") / l2Norm(col("w"), byDoc))
+        .select(col("ch"), col("id"), col("term"), col("w"))
+      saveClustered(vec, s"$dir/vectors", Seq("ch", "term"), buckets)
+      phase("stats write")
+      Store.writer(spark.createDataFrame(java.util.Arrays.asList(perCh: _*), n.schema)
+        .coalesce(1)).parquet(s"$dir/stats")
+      val stats = readBack("stats", n)
+      MultiSparseIndex(vectors = readBack("vectors", vec), docFreq = dfreq, stats = stats)
+    }
 
   def readMultiIndex(spark: SparkSession, dir: String): MultiSparseIndex =
     MultiSparseIndex(

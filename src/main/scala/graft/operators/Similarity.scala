@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorOps
+import graft.sources.Store
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -176,7 +177,7 @@ object Similarity {
       coarseHierarchyMinNlist: Int = HierarchyMinNlist,
       coarseGroups: Int = 0,
       coarseLloydIters: Int = 4): DenseIndex =
-    withJobPhases(emb.sparkSession, "buildDenseIndex") { phase =>
+    JobPhases(emb.sparkSession, "buildDenseIndex") { phase =>
       val spark = emb.sparkSession
       // every leg starts with `phase(...)`, which names its Spark jobs (job
       // description "buildDenseIndex: <leg>"), so a listener attributes the
@@ -187,10 +188,12 @@ object Similarity {
       def nRows: Long = counted.getOrElse {
         val c = emb.count(); counted = Some(c); c
       }
+      var dims: Option[Int] = None
       val p = params.getOrElse {
         val m = emb.select(count(lit(1)).as("n"), max(size(col(vecCol))).as("d")).head()
         counted = Some(m.getLong(0))
-        IvfParams.auto(m.getLong(0), if (m.isNullAt(1)) 0 else m.getInt(1))
+        dims = Some(if (m.isNullAt(1)) 0 else m.getInt(1))
+        IvfParams.auto(m.getLong(0), dims.get)
       }
       // FAISS-style BOUNDED TRAINING SAMPLE (faiss clamps k-means training
       // at ~256 points/centroid and warns below ~39/centroid): the TRAINED
@@ -214,8 +217,8 @@ object Similarity {
       require(target >= math.max(p.nlist, p.numCentroids),
         s"training sample $target smaller than the largest codebook " +
           s"(nlist=${p.nlist}, numCentroids=${p.numCentroids})")
-      val trainDf =
-        if (target >= nRows) emb
+      val (trainDf, trainRows) =
+        if (target >= nRows) (emb, nRows)
         else {
           val cut = (target.toDouble / nRows * (1L << 60)).toLong
           val sampled = emb.filter(graft.operators.Dedup.hash60(
@@ -229,17 +232,24 @@ object Similarity {
           // pass, build-time only) and fall back to the full corpus when it
           // is under the floor.
           val realized = sampled.count()
-          if (realized < math.max(p.nlist, p.numCentroids)) emb else sampled
+          if (realized < math.max(p.nlist, p.numCentroids)) (emb, nRows)
+          else (sampled, realized)
         }
+      // each persisted store is READ ONCE, with the schema it was written
+      // with, and the frame reused by every later leg and by the returned
+      // index; [[Store.read]] lists the store in process, so a read runs
+      // no Spark job (the stock reader ran a 179-task listing job per
+      // read of a 179-cell store, and a footer job per read)
+      def readBack(sub: String, written: DataFrame): DataFrame =
+        Store.read(spark, s"$outDir/$sub", Some(written.schema))
       phase("coarse kmeans fit + centroids write")
-      val cents = kmeansFit(trainDf, p.nlist, p.lloydIters, idCol, vecCol)
-      graft.sources.Store.writeSingle(cents, s"$outDir/centroids")
+      // at serve_small scale (2k x d=64) the fit runs on the driver: one
+      // collect instead of 16 Spark jobs (see kmeansFit)
+      val cents = kmeansFitSized(trainDf, p.nlist, p.lloydIters, idCol, vecCol,
+        "kmeans", 6, 8, dims.map(trainRows * _))
+      Store.writeSingle(cents, s"$outDir/centroids")
       cents.unpersist() // kmeansFit's contract: the caller owns the frame
-      // each persisted store is READ ONCE and the frame reused by every
-      // later leg and by the returned index: a read of a partitioned store
-      // lists its files (for a 179-cell store, a 179-task listing job of
-      // ~1 s at local[4]), and re-reading `cells` per leg paid that 5x
-      val centArt = spark.read.parquet(s"$outDir/centroids")
+      val centArt = readBack("centroids", cents)
       // TWO-LEVEL coarse hierarchy (VERDICT r15 #1): past the nlist
       // threshold the flat centroid collect stops being driver-safe, so the
       // build emits the l1/l2 artifact ([[buildCoarseHierarchy]] — a
@@ -276,8 +286,8 @@ object Similarity {
       // pair — ~78k files at the flagship geometry, measured 8x slower to
       // write and 24x slower for every downstream leg's scan (WriteProbe,
       // BASELINE.md r14). One hash shuffle on the cell id buys ~1 file/cell.
-      graft.sources.Store.writeClustered(assigned, s"$outDir/cells", "cluster")
-      val cellsArt = spark.read.parquet(s"$outDir/cells")
+      Store.writeClustered(assigned, s"$outDir/cells", "cluster")
+      val cellsArt = readBack("cells", assigned)
       phase("PQ codebook train (+ rotation fit)")
       // OPQ-STYLE rotation (FAISS OPQMatrix analog, Ge et al. 2013): fit the
       // full-d principal basis ONCE ([[pcaTopComponents]] — its own doc
@@ -294,10 +304,9 @@ object Similarity {
       // driver cost over the d²-row Gram — run it on a hash sample like the
       // PCA fit itself.
       val rotArt = opqRotateIters.map { it =>
-        graft.sources.Store.writeSingle(
-          pcaTopComponents(trainDf, vecCol, m = p.numSub * p.subDim, iters = it),
-          s"$outDir/rotation")
-        spark.read.parquet(s"$outDir/rotation")
+        val rot = pcaTopComponents(trainDf, vecCol, m = p.numSub * p.subDim, iters = it)
+        Store.writeSingle(rot, s"$outDir/rotation")
+        readBack("rotation", rot)
       }
       // collect the m×d component matrix ONCE; both rotate applications
       // (PQ train sample + cell-store encode source) reuse it
@@ -308,9 +317,9 @@ object Similarity {
       val cbr = pqRefineCodebooks(
         pqTrain, pqCodebooks(pqTrain, p.numSub, p.subDim, p.numCentroids, idCol, vecCol),
         p.numSub, p.subDim, iters = p.pqIters, idCol = idCol, vecCol = vecCol)
-      graft.sources.Store.writeSingle(cbr, s"$outDir/codebooks")
+      Store.writeSingle(cbr, s"$outDir/codebooks")
       cbr.unpersist() // pqRefineCodebooks' contract: caller owns the frame
-      val cbArt = spark.read.parquet(s"$outDir/codebooks")
+      val cbArt = readBack("codebooks", cbr)
       phase("full-corpus PQ encode + codes write")
       val encodeSrc = rotCoefs.fold(cellsArt)(cs =>
         rotateVectorsPrepared(cellsArt, cs, vecCol))
@@ -319,40 +328,37 @@ object Similarity {
       // rows arrive in one scan task and the dynamic-partition write emits
       // ~nlist files total — the repartition would re-shuffle the corpus
       // for a file count the upstream layout already guarantees
-      graft.sources.Store.writePartitioned(
-        pqEncode(encodeSrc, cbArt, p.numSub, p.subDim,
-          idCol, vecCol, carry = Seq("cluster")),
-        s"$outDir/codes", "cluster")
+      val codes = pqEncode(encodeSrc, cbArt, p.numSub, p.subDim,
+        idCol, vecCol, carry = Seq("cluster"))
+      Store.writePartitioned(codes, s"$outDir/codes", "cluster")
       phase("cellstats + radii")
       // per-(cell, attribute) admissible-count histogram: nlist x |attr| rows
       // (coarse-quantizer scale), written once so adaptive probe PLANNING
       // reads this instead of a per-request corpus pass
       val statsArt = if (statsCols.isEmpty) None else {
-        graft.sources.Store.writeSingle(cellStats(cellsArt, statsCols),
-          s"$outDir/cellstats")
-        Some(spark.read.parquet(s"$outDir/cellstats"))
+        val st = cellStats(cellsArt, statsCols)
+        Store.writeSingle(st, s"$outDir/cellstats")
+        Some(readBack("cellstats", st))
       }
       // per-cell radii: nlist rows, one corpus pass — the exact cell-skip
       // bound for range (radius) serving ([[ivfRangeSearchPruned]]).
       // vecCol must thread through: a build over a non-default vector
       // column ("clip") crashed here until the r13 serve-mix bench hit it
-      graft.sources.Store.writeSingle(cellRadii(cellsArt, centArt, vecCol),
-        s"$outDir/radii")
+      val radii = cellRadii(cellsArt, centArt, vecCol)
+      Store.writeSingle(radii, s"$outDir/radii")
       phase("int8 encode + write")
       // SQ8 store: the byte-per-dim serving artifact for the scalar-
       // quantized two-stage path ([[ivfInt8RefineSearch]]) — same cell
       // partitioning, 4x less scan IO than the float cells
-      graft.sources.Store.writePartitioned(
-        int8EncodeCells(cellsArt, idCol, vecCol, "cluster"),
-        s"$outDir/int8", "cluster")
+      val int8 = int8EncodeCells(cellsArt, idCol, vecCol, "cluster")
+      Store.writePartitioned(int8, s"$outDir/int8", "cluster")
       phase("binary encode + write")
       // binary signature store: 1 bit/dim packed into BIGINT words — the
       // smallest coarse-scan artifact (32x under float, 8x under SQ8),
       // served two-stage by [[ivfBinaryRefineSearch]]; same cell
       // partitioning, so the scan prunes identically
-      graft.sources.Store.writePartitioned(
-        binaryEncodeCells(cellsArt, idCol, vecCol, "cluster"),
-        s"$outDir/bin", "cluster")
+      val bin = binaryEncodeCells(cellsArt, idCol, vecCol, "cluster")
+      Store.writePartitioned(bin, s"$outDir/bin", "cluster")
       phase("recall calibration")
       // serving default: RECALL-CALIBRATED against the just-persisted
       // artifacts when a target is given (the static nlist/16 rule is
@@ -360,7 +366,7 @@ object Similarity {
       // default that silently serves bad recall), else the static rule.
       // Persisted with the geometry as the 1-row `params` artifact so the
       // committed default is part of the index, not a caller-side constant.
-      val binArt = spark.read.parquet(s"$outDir/bin")
+      val binArt = readBack("bin", bin)
       val (np, kcBq, npL1) = calibrateRecall match {
         case Some(target) =>
           val sample = emb
@@ -405,7 +411,7 @@ object Similarity {
           (p.defaultNprobe, None, hierArt.map(_._1.count().toInt))
       }
       phase("params write")
-      graft.sources.Store.writer(spark.range(1).select(
+      Store.writer(spark.range(1).select(
         lit(p.nlist).as("nlist"), lit(p.numSub).as("num_sub"),
         lit(p.subDim).as("sub_dim"), lit(p.numCentroids).as("num_centroids"),
         lit(np).as("default_nprobe"),
@@ -420,11 +426,11 @@ object Similarity {
         centroids = centArt,
         cells = cellsArt,
         codebooks = cbArt,
-        codes = spark.read.parquet(s"$outDir/codes"),
+        codes = readBack("codes", codes),
         cellStats = statsArt,
         defaultNprobe = Some(np),
-        radii = Some(spark.read.parquet(s"$outDir/radii")),
-        int8 = Some(spark.read.parquet(s"$outDir/int8")),
+        radii = Some(readBack("radii", radii)),
+        int8 = Some(readBack("int8", int8)),
         rotation = rotArt,
         binary = Some(binArt),
         defaultKCoarseBq = kcBq,
@@ -434,19 +440,6 @@ object Similarity {
         numSub = p.numSub,
         subDim = p.subDim)
     }
-
-  /** Runs `body` with a `phase` callback that names the Spark jobs started
-    * after it: `phase(leg)` sets the job description to `<what>: <leg>`,
-    * so a listener can tell which leg of a multi-job build every job
-    * belongs to. The caller's description is restored afterwards; the
-    * job group is never touched (callers and tracers own it). */
-  private def withJobPhases[A](spark: SparkSession, what: String)(
-      body: (String => Unit) => A): A = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    try body(leg => sc.setJobDescription(s"$what: $leg"))
-    finally sc.setLocalProperty("spark.job.description", prev)
-  }
 
   /** The exact top-k truth sets of a calibration sample — one
     * full-corpus batch scan, shared by [[calibrateNprobe]] and
@@ -1658,165 +1651,171 @@ object Similarity {
     val vecIdx = emb.schema.fieldIndex(vecCol)
     val outSchema = emb.schema.add(clusterCol,
       org.apache.spark.sql.types.IntegerType, nullable = true)
-    // ROW-BLOCKED kernel (AssignProbe before/after in BASELINE.md r14):
-    // process rows in blocks of 64 with the CENTROID loop outermost, so
-    // each centroid vector (streamed from a k x d matrix that misses cache
-    // when read per row — 12 MB at k=4000 x d=768) is reused across the
-    // whole row block from L1/L2, and the row block (64 x d floats,
-    // ~200 KB at d=768) stays resident. Rounding is DEFERRED: the inner
-    // loop tracks the RAW running max and buffers only candidates within
-    // `grain` of it (HALF_UP rounding is monotone, so any centroid whose
-    // ROUNDED sim ties the rounded max has raw sim within one rounding
-    // bucket of the raw max); BigDecimal runs once per surviving candidate
-    // — ~1 per row — instead of once per (row, centroid) pair (4e9
-    // allocations at the 1M x 4000 flagship, the r13 verdict's named
-    // bottleneck). Parity with the packed SQL argmax is exact and
-    // KmeansSpec-pinned: candidates arrive in ascending centroid id, the
-    // strict `>` on rounded sims keeps the first (lowest id) on ties.
     val out = emb.rdd.mapPartitions { it =>
       val cs = bc.value
-      if (cs.isEmpty) {
-        it.map(row => org.apache.spark.sql.Row.fromSeq(row.toSeq :+ null))
-      } else {
-        val k = cs.length
-        // 2x the rounding bucket width: over-inclusion only costs a spare
-        // BigDecimal; under-inclusion (pow() rounding down) would break
-        // parity, so the safety factor is deliberate
-        val grain = 2.0 * math.pow(10.0, -simRound)
-        it.grouped(64).flatMap { rowSeq =>
-          val rows = rowSeq.toArray
-          val m = rows.length
-          val vecs = new Array[Array[Float]](m)
-          var r = 0
-          while (r < m) {
-            vecs(r) =
-              if (rows(r).isNullAt(vecIdx)) null
-              else rows(r).getSeq[Float](vecIdx) match {
-                case w: scala.collection.immutable.ArraySeq.ofFloat => w.unsafeArray
-                case other => other.toArray
-              }
-            r += 1
-          }
-          val rawMax = Array.fill(m)(Double.NegativeInfinity)
-          val candN = new Array[Int](m)
-          val candId = Array.fill(m)(new Array[Int](4))
-          val candSim = Array.fill(m)(new Array[Double](4))
-          // COLUMN-MAJOR pack of the row block + dims-OUTER accumulation:
-          // a single row's dot is a strict sequential double-add chain
-          // (the VectorOps.dot parity contract forbids reassociation),
-          // which is FP-add-latency-bound — but the block's 64 chains are
-          // independent, so the dim-outer loop interleaves them to keep
-          // the FPU pipeline full while each row still adds its terms in
-          // exactly ascending-dim order. The flat(i*m + r) layout makes
-          // the inner row sweep contiguous and branch-free — AssignProbe
-          // at 1M x 4000 x d768: 212.4 s (per-(row,centroid) scalar loop +
-          // per-pair BigDecimal, r13) -> 130.6 s (row-blocked, deferred
-          // rounding) -> 110.5 s (this form); the array-of-arrays
-          // dims-outer variant measured 173.6 s (pointer-chasing 64 arrays
-          // per dim step) and blocks of 128/256 thrash L2 (129.9/131.1 s).
-          // Rows shorter
-          // than the centroid are ZERO-padded: a +-0.0 tail term never
-          // changes a finite partial sum, and the one observable case
-          // (-0.0 vs +0.0) is erased by both the rounding and the argmax
-          // comparisons — so min(v.length, cl) semantics are preserved
-          // bit-for-bit (assumes finite centroid coordinates in the pad
-          // region, as every fit here produces).
-          var dmax = 0
-          r = 0
-          while (r < m) {
-            if (vecs(r) != null && vecs(r).length > dmax) dmax = vecs(r).length
-            r += 1
-          }
-          val flat = new Array[Float](dmax * m)
-          r = 0
-          while (r < m) {
-            val v = vecs(r)
-            if (v != null) {
-              var i = 0
-              while (i < v.length) { flat(i * m + r) = v(i); i += 1 }
-            }
-            r += 1
-          }
-          val accs = new Array[Double](m)
-          var ci = 0
-          while (ci < k) {
-            val id = cs(ci)._1
-            val cv = cs(ci)._2
-            val lim = math.min(cv.length, dmax)
-            java.util.Arrays.fill(accs, 0.0)
-            var i = 0
-            while (i < lim) {
-              val c = cv(i).toDouble
-              val base = i * m
-              r = 0
-              while (r < m) { accs(r) += flat(base + r).toDouble * c; r += 1 }
-              i += 1
-            }
-            r = 0
-            while (r < m) {
-              val v = vecs(r)
-              if (v != null) {
-                val s = accs(r)
-                if (s >= rawMax(r) - grain) {
-                  if (s > rawMax(r)) rawMax(r) = s
-                  var nn = candN(r)
-                  if (nn == candId(r).length) {
-                    // compact: drop candidates that fell out of the grain
-                    val ids = candId(r); val ss = candSim(r)
-                    val lim = rawMax(r) - grain
-                    var w0 = 0; var j = 0
-                    while (j < nn) {
-                      if (ss(j) >= lim) { ids(w0) = ids(j); ss(w0) = ss(j); w0 += 1 }
-                      j += 1
-                    }
-                    nn = w0
-                    if (nn == ids.length) {
-                      candId(r) = java.util.Arrays.copyOf(ids, nn * 2)
-                      candSim(r) = java.util.Arrays.copyOf(ss, nn * 2)
-                    }
-                  }
-                  candId(r)(nn) = id
-                  candSim(r)(nn) = s
-                  candN(r) = nn + 1
-                }
-              }
-              r += 1
-            }
-            ci += 1
-          }
-          val outRows = new Array[org.apache.spark.sql.Row](m)
-          r = 0
-          while (r < m) {
-            if (vecs(r) == null)
-              outRows(r) = org.apache.spark.sql.Row.fromSeq(rows(r).toSeq :+ null)
-            else {
-              // SQL round(_, simRound): HALF_UP decimal rounding, applied
-              // only to the grain-surviving candidates (ascending id order)
-              val lim = rawMax(r) - grain
-              var bestSim = Double.NegativeInfinity
-              var bestC = Int.MaxValue
-              var found = false
-              var j = 0
-              while (j < candN(r)) {
-                if (candSim(r)(j) >= lim) {
-                  val rr = java.math.BigDecimal.valueOf(candSim(r)(j))
-                    .setScale(simRound, java.math.RoundingMode.HALF_UP)
-                    .doubleValue()
-                  if (!found || rr > bestSim) {
-                    bestSim = rr; bestC = candId(r)(j); found = true
-                  }
-                }
-                j += 1
-              }
-              outRows(r) = org.apache.spark.sql.Row.fromSeq(rows(r).toSeq :+ bestC)
-            }
-            r += 1
-          }
-          outRows.iterator
+      it.grouped(64).flatMap { rowSeq =>
+        val rows = rowSeq.toArray
+        val vecs = rows.map(row =>
+          if (row.isNullAt(vecIdx)) null
+          else row.getSeq[Float](vecIdx) match {
+            case w: scala.collection.immutable.ArraySeq.ofFloat => w.unsafeArray
+            case other => other.toArray
+          })
+        val cells = new Array[Int](rows.length)
+        assignBlock(cs, vecs, simRound, cells)
+        rows.indices.iterator.map { r =>
+          org.apache.spark.sql.Row.fromSeq(rows(r).toSeq :+
+            (if (vecs(r) == null || cs.isEmpty) null else cells(r)))
         }
       }
     }
     spark.createDataFrame(out, outSchema)
+  }
+
+  /** The [[assignCellsBulk]] block kernel: sets `out(r)` to the nearest
+    * centroid of `cs` (ascending ids, no null vectors) for each non-null
+    * `vecs(r)`; a null vector's slot, and every slot when `cs` is empty,
+    * is left as it was (the caller's NULL cell). A row's result does not
+    * depend on the other rows of its block, so the Spark kernel and the
+    * driver-side [[kmeansFit]] call it on blocks of up to 64 rows and
+    * agree bit for bit.
+    *
+    * ROW-BLOCKED (AssignProbe before/after in BASELINE.md r14): the
+    * CENTROID loop is outermost, so each centroid vector (streamed from a
+    * k x d matrix that misses cache when read per row — 12 MB at k=4000 x
+    * d=768) is reused across the whole row block from L1/L2, and the row
+    * block (64 x d floats, ~200 KB at d=768) stays resident. Rounding is
+    * DEFERRED: the inner loop tracks the RAW running max and buffers only
+    * candidates within `grain` of it (HALF_UP rounding is monotone, so any
+    * centroid whose ROUNDED sim ties the rounded max has raw sim within
+    * one rounding bucket of the raw max); BigDecimal runs once per
+    * surviving candidate — ~1 per row — instead of once per (row,
+    * centroid) pair (4e9 allocations at the 1M x 4000 flagship, the r13
+    * verdict's named bottleneck). Parity with the packed SQL argmax is
+    * exact and KmeansSpec-pinned: candidates arrive in ascending centroid
+    * id, the strict `>` on rounded sims keeps the first (lowest id) on
+    * ties. */
+  private[graft] def assignBlock(
+      cs: Array[(Int, Array[Float])],
+      vecs: Array[Array[Float]],
+      simRound: Int,
+      out: Array[Int]): Unit = {
+    if (cs.isEmpty) return
+    val k = cs.length
+    val m = vecs.length
+    // 2x the rounding bucket width: over-inclusion only costs a spare
+    // BigDecimal; under-inclusion (pow() rounding down) would break
+    // parity, so the safety factor is deliberate
+    val grain = 2.0 * math.pow(10.0, -simRound)
+    val rawMax = Array.fill(m)(Double.NegativeInfinity)
+    val candN = new Array[Int](m)
+    val candId = Array.fill(m)(new Array[Int](4))
+    val candSim = Array.fill(m)(new Array[Double](4))
+    // COLUMN-MAJOR pack of the row block + dims-OUTER accumulation: a
+    // single row's dot is a strict sequential double-add chain (the
+    // VectorOps.dot parity contract forbids reassociation), which is
+    // FP-add-latency-bound — but the block's 64 chains are independent,
+    // so the dim-outer loop interleaves them to keep the FPU pipeline full
+    // while each row still adds its terms in exactly ascending-dim order.
+    // The flat(i*m + r) layout makes the inner row sweep contiguous and
+    // branch-free — AssignProbe at 1M x 4000 x d768: 212.4 s
+    // (per-(row,centroid) scalar loop + per-pair BigDecimal, r13) ->
+    // 130.6 s (row-blocked, deferred rounding) -> 110.5 s (this form); the
+    // array-of-arrays dims-outer variant measured 173.6 s (pointer-chasing
+    // 64 arrays per dim step) and blocks of 128/256 thrash L2 (129.9/131.1
+    // s). Rows shorter than the centroid are ZERO-padded: a +-0.0 tail
+    // term never changes a finite partial sum, and the one observable case
+    // (-0.0 vs +0.0) is erased by both the rounding and the argmax
+    // comparisons — so min(v.length, cl) semantics are preserved
+    // bit-for-bit (assumes finite centroid coordinates in the pad region,
+    // as every fit here produces).
+    var dmax = 0
+    var r = 0
+    while (r < m) {
+      if (vecs(r) != null && vecs(r).length > dmax) dmax = vecs(r).length
+      r += 1
+    }
+    val flat = new Array[Float](dmax * m)
+    r = 0
+    while (r < m) {
+      val v = vecs(r)
+      if (v != null) {
+        var i = 0
+        while (i < v.length) { flat(i * m + r) = v(i); i += 1 }
+      }
+      r += 1
+    }
+    val accs = new Array[Double](m)
+    var ci = 0
+    while (ci < k) {
+      val id = cs(ci)._1
+      val cv = cs(ci)._2
+      val lim = math.min(cv.length, dmax)
+      java.util.Arrays.fill(accs, 0.0)
+      var i = 0
+      while (i < lim) {
+        val c = cv(i).toDouble
+        val base = i * m
+        r = 0
+        while (r < m) { accs(r) += flat(base + r).toDouble * c; r += 1 }
+        i += 1
+      }
+      r = 0
+      while (r < m) {
+        if (vecs(r) != null) {
+          val s = accs(r)
+          if (s >= rawMax(r) - grain) {
+            if (s > rawMax(r)) rawMax(r) = s
+            var nn = candN(r)
+            if (nn == candId(r).length) {
+              // compact: drop candidates that fell out of the grain
+              val ids = candId(r); val ss = candSim(r)
+              val lim = rawMax(r) - grain
+              var w0 = 0; var j = 0
+              while (j < nn) {
+                if (ss(j) >= lim) { ids(w0) = ids(j); ss(w0) = ss(j); w0 += 1 }
+                j += 1
+              }
+              nn = w0
+              if (nn == ids.length) {
+                candId(r) = java.util.Arrays.copyOf(ids, nn * 2)
+                candSim(r) = java.util.Arrays.copyOf(ss, nn * 2)
+              }
+            }
+            candId(r)(nn) = id
+            candSim(r)(nn) = s
+            candN(r) = nn + 1
+          }
+        }
+        r += 1
+      }
+      ci += 1
+    }
+    r = 0
+    while (r < m) {
+      if (vecs(r) != null) {
+        // SQL round(_, simRound): HALF_UP decimal rounding, applied only
+        // to the grain-surviving candidates (ascending id order)
+        val lim = rawMax(r) - grain
+        var bestSim = Double.NegativeInfinity
+        var bestC = Int.MaxValue
+        var found = false
+        var j = 0
+        while (j < candN(r)) {
+          if (candSim(r)(j) >= lim) {
+            val rr = java.math.BigDecimal.valueOf(candSim(r)(j))
+              .setScale(simRound, java.math.RoundingMode.HALF_UP)
+              .doubleValue()
+            if (!found || rr > bestSim) {
+              bestSim = rr; bestC = candId(r)(j); found = true
+            }
+          }
+          j += 1
+        }
+        out(r) = bestC
+      }
+      r += 1
+    }
   }
 
   /** Lloyd k-means over an embeddings relation (spherical: max-inner-product
@@ -1849,7 +1848,17 @@ object Similarity {
     * The RETURNED frame is still persisted (k x d floats) — the caller owns
     * its lifetime: write it to the centroid artifact (or collect it) and
     * `unpersist()` it. Training is a build-time step; serving queries read
-    * the persisted artifact and must never re-enter this method. */
+    * the persisted artifact and must never re-enter this method.
+    *
+    * DRIVER-SIZED fits (training rows x max d at most [[DriverFitFloats]])
+    * run the same loop in process ([[kmeansFitDriver]]): one job collects
+    * `(id, vector, hash)`, then the same init order, the same assignment
+    * kernel ([[assignBlock]]) and the same exact-decimal mean run on the
+    * driver, bit for bit the Spark fit's centroids (KmeansSpec pins it at
+    * k <= 64 and k > 64). FAISS trains its quantizer on one machine too.
+    * Larger fits, non-integral ids and vectors the decimal mean would null
+    * out run the Spark loop ([[kmeansFitSpark]]). The size check costs one
+    * aggregate job unless the caller already knows the size. */
   def kmeansFit(
       emb: DataFrame,
       k: Int,
@@ -1858,7 +1867,114 @@ object Similarity {
       vecCol: String = "embedding",
       salt: String = "kmeans",
       simRound: Int = 6,
-      coordRound: Int = 8): DataFrame = {
+      coordRound: Int = 8): DataFrame =
+    kmeansFitSized(emb, k, iters, idCol, vecCol, salt, simRound, coordRound, None)
+
+  /** Training rows x d at or below which [[kmeansFit]] runs on the driver:
+    * 2^22 floats (16 MB of vectors), the same class of bound as the
+    * centroid matrix [[assignCellsBulk]] collects. */
+  private val DriverFitFloats = 1L << 22
+
+  /** [[kmeansFit]] given `floats` = training rows x max vector length when
+    * the caller has counted them (the dense build has). */
+  private[graft] def kmeansFitSized(
+      emb: DataFrame, k: Int, iters: Int, idCol: String, vecCol: String,
+      salt: String, simRound: Int, coordRound: Int, floats: Option[Long]): DataFrame = {
+    import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType}
+    val typed = (emb.schema(idCol).dataType, emb.schema(vecCol).dataType) match {
+      case (IntegerType | LongType, ArrayType(FloatType, _)) => true
+      case _ => false
+    }
+    def measured: Long = floats.getOrElse {
+      val m = emb.agg(count(lit(1)), max(size(col(vecCol)))).head()
+      m.getLong(0) * (if (m.isNullAt(1)) 0 else math.max(0, m.getInt(1)))
+    }
+    (if (typed && measured <= DriverFitFloats)
+      kmeansFitDriver(emb, k, iters, idCol, vecCol, salt, simRound, coordRound)
+    else None).getOrElse(
+      kmeansFitSpark(emb, k, iters, idCol, vecCol, salt, simRound, coordRound))
+  }
+
+  /** The driver form of [[kmeansFit]]: `None` (after its one collect) when
+    * a vector holds a null, NaN, infinite or |x| >= 1e15 element, where the
+    * Spark loop's DECIMAL(28,12) cast would null the term or raise. */
+  private[graft] def kmeansFitDriver(
+      emb: DataFrame, k: Int, iters: Int, idCol: String, vecCol: String,
+      salt: String, simRound: Int, coordRound: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructField, StructType}
+    val spark = emb.sparkSession
+    val rows = emb.select(col(idCol).cast("long"), col(vecCol),
+      graft.operators.Dedup.hash60(concat(lit(salt), lit(":"), col(idCol).cast("string"))),
+      exists(col(vecCol), x => x.isNull || isnan(x) || abs(x) >= lit(1e15)))
+      .collect()
+    if (rows.exists(r => !r.isNullAt(3) && r.getBoolean(3))) return None
+    val vecs: Array[Array[Float]] =
+      rows.map(r => if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray)
+    // init: the k rows with the smallest (hash, id), ascending nulls first
+    // as ORDER BY sorts them, numbered 0..k-1 in that order
+    def key(i: Int): (Boolean, Long, Boolean, Long) = {
+      val r = rows(i)
+      (!r.isNullAt(2), if (r.isNullAt(2)) 0L else r.getLong(2),
+        !r.isNullAt(0), if (r.isNullAt(0)) 0L else r.getLong(0))
+    }
+    val init = rows.indices.sortBy(key).take(math.max(k, 0))
+    if (iters <= 0) {
+      val schema = StructType(Seq(StructField("cluster", IntegerType, nullable = false),
+        emb.schema(vecCol).copy(name = "cv")))
+      return Some(spark.createDataFrame(java.util.Arrays.asList(init.indices.map(c =>
+        org.apache.spark.sql.Row(c, rows(init(c)).get(1))): _*), schema))
+    }
+    var cents: Seq[(Option[Int], Array[Float])] =
+      init.indices.map(c => (Some(c), vecs(init(c))))
+    // the packed (k <= 64) and chunked (k > 2^16) Spark forms send every
+    // row to the lowest centroid id when no centroid has a vector; the
+    // bulk form gives it a NULL cell
+    val packedNulls = k <= 64 || k > (1 << 16)
+    val n = vecs.length
+    for (_ <- 1 to iters) {
+      val valid = cents.collect { case (Some(c), v) if v != null => (c, v) }
+        .sortBy(_._1).toArray
+      val fallback =
+        if (valid.nonEmpty || !packedNulls) None
+        else cents.flatMap(_._1).minOption
+      val cells = new Array[Int](n)
+      java.util.stream.IntStream.range(0, (n + 63) / 64).parallel().forEach { b =>
+        val lo = b * 64
+        val out = new Array[Int](math.min(n, lo + 64) - lo)
+        assignBlock(valid, vecs.slice(lo, lo + out.length), simRound, out)
+        System.arraycopy(out, 0, cells, lo, out.length)
+      }
+      def cell(r: Int): Option[Int] =
+        if (vecs(r) == null) None else if (valid.nonEmpty) Some(cells(r)) else fallback
+      // refit: per-(cell, dim) exact DECIMAL(28,12) sum / row count,
+      // rounded HALF_UP to coordRound, as float; a cell with no vector
+      // coordinate drops out like a row-less GROUP BY group
+      val groups = (0 until n).filter(r => vecs(r) != null && vecs(r).nonEmpty)
+        .groupBy(cell)
+      cents = groups.toSeq.map { case (c, members) =>
+        val d = members.map(vecs(_).length).max
+        val acc = new graft.functions.DecimalUnits.AccArray(d)
+        val cnt = new Array[Long](d)
+        members.foreach { r =>
+          val v = vecs(r)
+          var i = 0
+          while (i < v.length) { acc.addProduct(i, v(i).toDouble); cnt(i) += 1; i += 1 }
+        }
+        c -> Array.tabulate(d)(i => graft.functions.DecimalUnits.roundDouble(
+          acc.result(i).doubleValue() / cnt(i).toDouble, coordRound).toFloat)
+      }
+    }
+    val schema = StructType(Seq(StructField("cluster", IntegerType, nullable = true),
+      StructField("cv", ArrayType(FloatType, containsNull = true), nullable = false)))
+    Some(spark.createDataFrame(java.util.Arrays.asList(cents.map { case (c, v) =>
+      org.apache.spark.sql.Row(c.map(Int.box).orNull, v.toSeq)
+    }: _*), schema))
+  }
+
+  /** The Spark form of [[kmeansFit]]: the Lloyd loop as Spark jobs. */
+  private[graft] def kmeansFitSpark(
+      emb: DataFrame, k: Int, iters: Int, idCol: String, vecCol: String,
+      salt: String, simRound: Int, coordRound: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val hw = Window.orderBy(col("__h"), col(idCol))
     var cent = emb
@@ -2707,17 +2823,17 @@ object Similarity {
     val l1Fit = kmeansFit(
       centroids.select(col(clusterCol).as("__cid"), col("cv").as("__cv")),
       g, lloydIters, idCol = "__cid", vecCol = "__cv", salt = "coarse2")
-    graft.sources.Store.writeSingle(
-      l1Fit.select(col("cluster").as("gid"), col("cv").as("gv")), s"$outDir/l1")
+    val l1Rows = l1Fit.select(col("cluster").as("gid"), col("cv").as("gv"))
+    Store.writeSingle(l1Rows, s"$outDir/l1")
     l1Fit.unpersist()
-    val l1 = spark.read.parquet(s"$outDir/l1")
+    val l1 = Store.read(spark, s"$outDir/l1", Some(l1Rows.schema))
     // tag every level-2 centroid with its nearest group — the same
     // map-only broadcast argmax as the corpus assign, at nlist scale
     val tagged = assignCells(centroids,
       l1.select(col("gid"), col("gv").as("cv")),
       vecCol = "cv", clusterCol = "gid")
-    graft.sources.Store.writePartitioned(tagged, s"$outDir/l2", "gid")
-    (l1, spark.read.parquet(s"$outDir/l2"))
+    Store.writePartitioned(tagged, s"$outDir/l2", "gid")
+    (l1, Store.read(spark, s"$outDir/l2", Some(tagged.schema)))
   }
 
   /** IMI-style TWO-LEVEL corpus assignment (the build/maintenance twin of

@@ -511,9 +511,8 @@ object TextAnalysis {
       spark: org.apache.spark.sql.SparkSession,
       docs: DataFrame, idCol: String, textCol: String, labelCol: String,
       dir: String): DataFrame = {
-    nbQualityFit(docs, idCol, textCol, labelCol)
-      .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(s"$dir/nb_model")
+    graft.sources.Store.writeSingle(
+      nbQualityFit(docs, idCol, textCol, labelCol), s"$dir/nb_model")
     loadNbQuality(spark, dir)
   }
 

@@ -1,7 +1,15 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ReadShim
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Physical storage layout for the corpus tables — where the 100 TB design
   * actually lives (SURVEY §4: "partition keyframes/embeddings by collection,
@@ -15,6 +23,10 @@ import org.apache.spark.sql.functions._
   *    (embeddings x keyframes x text channels) plan with NO shuffle
   *    exchange on either side — the "co-located join" that replaces the
   *    reference's positional row alignment invariant.
+  *
+  * Every store write goes through [[writer]], and a store the engine wrote
+  * is read back through [[read]]: both reach local files through
+  * [[ForkFreeLocalFileSystem]], and a read runs no Spark job.
   */
 object Store {
 
@@ -85,11 +97,13 @@ object Store {
     * co-bucketed on both columns plans with no shuffle exchange on
     * either side, so at corpus scale the only heavy stage of banded
     * candidate generation is the map-side bucket scan (StoreSpec pins
-    * the exchange-free plan). */
+    * the exchange-free plan). Through [[writer]] like every store write;
+    * a managed table keeps the writer's options as storage properties,
+    * so its later scans open files through the same fork-free filesystem. */
   def writeBucketedMulti(
       df: DataFrame, table: String, buckets: Int, keys: String*): Unit = {
     require(keys.nonEmpty, "bucketed write needs at least one key column")
-    df.write.mode(SaveMode.Overwrite)
+    writer(df)
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .format("parquet")
@@ -97,6 +111,83 @@ object Store {
   }
 
   def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
+
+  /** `spark.read.parquet(path)` without a Spark job. For a `file:` store
+    * the leaf files are listed in process through
+    * [[ForkFreeLocalFileSystem]] (whose statuses read mode and owner
+    * through `java.nio`, not a forked `ls`) with Spark's hidden-file rule,
+    * and handed to Spark as a pre-listed `InMemoryFileIndex`, so partition
+    * inference and pruning (`cluster = 5` reads one directory) work as in
+    * the stock reader. The stock reader instead lists a store with more
+    * than 32 leaf directories through a Spark job (179 tasks, about 1 s
+    * at local[4] for an nlist=179 cell store) and infers the schema
+    * through another. `schema` is the written frame's schema, when the
+    * caller has it; without it the schema is read from one footer in
+    * process, as the stock reader reads it.
+    *
+    * Anything else goes to `spark.read.parquet` as it is, so it reads and
+    * fails as the stock reader does: another URI scheme, a glob, a path
+    * that does not exist or is a file, a streaming sink (its
+    * `_spark_metadata` log names the committed files), and a schema-less
+    * store with no data file (StoreSpec pins the failure paths). */
+  def read(spark: SparkSession, path: String, schema: Option[StructType] = None): DataFrame =
+    listLocal(spark, path) match {
+      case Some((root, files)) if schema.isDefined || files.nonEmpty =>
+        val conf = SQLConf.get
+        val userSchema = schema.orElse {
+          val reader = ParquetFileReader.open(
+            HadoopInputFile.fromStatus(files.head, spark.sparkContext.hadoopConfiguration))
+          val footer = try new Footer(files.head.getPath, reader.getFooter)
+            finally reader.close()
+          Some(ParquetFileFormat.readSchemaFromFooter(footer,
+            new ParquetToSparkSchemaConverter(conf)))
+        }.map(ReadShim.asNullable(_))
+        val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, userSchema,
+          new Listed(root, files))
+        val parts = index.partitionSchema
+        val resolver = conf.resolver
+        val data = StructType(userSchema.get.filterNot(f =>
+          parts.exists(p => resolver(p.name, f.name))))
+        spark.baseRelationToDataFrame(HadoopFsRelation(index, parts, data,
+          bucketSpec = None, new ParquetFileFormat, Map.empty)(spark))
+      case _ => schema.fold(spark.read)(spark.read.schema).parquet(path)
+    }
+
+  /** The qualified root and its visible leaf files, listed in process,
+    * when `path` is an existing local directory named without a glob. */
+  private def listLocal(spark: SparkSession, path: String): Option[(Path, Array[FileStatus])] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val scheme = Option(p.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme)
+    if (scheme != "file" || path.exists("*?[{\\".contains(_))) return None
+    val fs = new ForkFreeLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), conf)
+    val root = fs.makeQualified(p)
+    val top = try fs.getFileStatus(root) catch { case _: java.io.FileNotFoundException => null }
+    // a streaming sink's root: the stock reader reads its committed files
+    // from the `_spark_metadata` log, not from a listing
+    if (top == null || !top.isDirectory || fs.exists(new Path(root, "_spark_metadata")))
+      return None
+    val out = Array.newBuilder[FileStatus]
+    def walk(dir: Path): Unit =
+      fs.listStatus(dir).sortBy(_.getPath.getName)
+        .filterNot(s => ReadShim.hiddenName(s.getPath.getName))
+        .foreach(s => if (s.isDirectory) walk(s.getPath) else out += s)
+    walk(root)
+    Some(root -> out.result())
+  }
+
+  /** A one-root `FileStatusCache` holding a listing made before the index
+    * exists: the index's first listing is a cache hit. Invalidating it
+    * (a `refresh()`) drops the listing, so a refreshed index lists the
+    * store again as any file index does. */
+  private final class Listed(root: Path, files: Array[FileStatus]) extends FileStatusCache {
+    @volatile private var held: Option[Array[FileStatus]] = Some(files)
+    override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+      if (path == root) held else None
+    override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = held = None
+  }
 
   /** Morton (Z-order) interleave of two non-negative int columns, `bits`
     * bits each — the multi-dimensional clustering key (Delta/Iceberg

@@ -727,7 +727,7 @@ object IncrementalIndex {
       spark: SparkSession,
       cellsDir: String,
       idCol: String = "vec_id"): DataFrame = {
-    val df = spark.read.parquet(cellsDir)
+    val df = Store.read(spark, cellsDir)
     tombstoneIds(spark, cellsDir, idCol).fold(df)(ts =>
       graft.operators.Candidates.exclude(df, ts, idCol))
   }

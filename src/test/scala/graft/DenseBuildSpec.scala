@@ -52,11 +52,13 @@ class DenseBuildSpec extends AnyFunSuite {
 
   private val BuildGroup = "dense-build-spec"
 
-  /** One auto-sized build (geometry = auto(500, 64)) under a caller job
-    * group and description, with the description of every job it ran and
-    * the caller's (group, description) as the build left them. */
+  /** One auto-sized build (geometry = auto(500, 64)) and then a panel
+    * index build, under a caller job group and description, with the
+    * (description, stage names) of every job they ran in order and the
+    * caller's (group, description) as the dense build left them. */
   private lazy val autoBuild = {
     val emb = Tables(spark, TestSpark.sfDir, "embeddings")
+    val docs = Tables(spark, TestSpark.sfDir, "documents")
     val out = java.nio.file.Files.createTempDirectory("graft_densebuild").toString
     val sc = spark.sparkContext
     val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -66,7 +68,8 @@ class DenseBuildSpec extends AnyFunSuite {
         Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == BuildGroup)
           .foreach { p =>
             val d = p.getProperty("spark.job.description")
-            if (d == "marker") marker.countDown() else descs.add(d)
+            if (d == "marker") marker.countDown()
+            else descs.add(s"$d\t${e.stageInfos.map(_.name).mkString(";")}")
           }
     }
     sc.addSparkListener(listener)
@@ -75,12 +78,18 @@ class DenseBuildSpec extends AnyFunSuite {
       val idx = Similarity.buildDenseIndex(emb, out)
       val after = (sc.getLocalProperty("spark.jobGroup.id"),
         sc.getLocalProperty("spark.job.description"))
+      graft.operators.Lexical.writeMultiIndex(spark,
+        Seq(("tag", docs, "doc_id", "text")), s"$out/panel")
+      assert(sc.getLocalProperty("spark.job.description") === "caller description")
       // listener events arrive in job order: once the marker job's start
       // is seen, every build job's has been
       sc.setJobDescription("marker")
       spark.range(1).count()
       assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (emb, out, idx, descs.asScala.toSeq, after)
+      (emb, out, idx, descs.asScala.toSeq.map(_.split("\t", 2) match {
+        case Array(d, stages) => (d, stages)
+        case Array(d) => (d, "")
+      }), after)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -138,14 +147,30 @@ class DenseBuildSpec extends AnyFunSuite {
   }
 
   test("buildDenseIndex names each leg's jobs and restores the caller's description") {
-    val (_, _, _, descs, after) = autoBuild
+    val (_, _, _, jobs, after) = autoBuild
     assert(after === ((BuildGroup, "caller description")))
-    val legs = descs.filterNot(_.startsWith("Listing leaf files")) // Spark names its own
+    // every build job is named for its leg: no store read lists its files
+    // through a job of its own ("Listing leaf files")
+    val legs = jobs.map(_._1).takeWhile(!_.startsWith("writeMultiIndex: "))
     assert(legs.nonEmpty && legs.forall(_.startsWith("buildDenseIndex: ")),
       s"unnamed build jobs: ${legs.filterNot(_.startsWith("buildDenseIndex: ")).distinct}")
     for (leg <- Seq("coarse kmeans fit + centroids write", "full-corpus assign + cells write",
         "PQ codebook train (+ rotation fit)", "full-corpus PQ encode + codes write",
         "int8 encode + write", "binary encode + write"))
       assert(legs.contains(s"buildDenseIndex: $leg"), s"no job named for leg '$leg'")
+  }
+
+  test("every job of the dense and the panel build carries a leg name, AQE's jobs included") {
+    val (_, _, _, jobs, _) = autoBuild
+    val panel = jobs.filter(_._1.startsWith("writeMultiIndex: ")).map(_._1)
+    for (leg <- Seq("tokenize + postings write", "docFreq write", "stats write", "vectors write"))
+      assert(panel.contains(s"writeMultiIndex: $leg"), s"no job named for leg '$leg'")
+    val unnamed = jobs.filterNot { case (d, _) =>
+      d.startsWith("buildDenseIndex: ") || d.startsWith("writeMultiIndex: ") }
+    assert(unnamed.isEmpty, s"jobs without a leg name: $unnamed")
+    // AQE submits the stage jobs of an adaptive plan from its own threads,
+    // with the caller's local properties: they are named like the rest
+    assert(jobs.exists(_._2.contains("CompletableFuture")),
+      s"no AQE-submitted job was seen: ${jobs.map(_._2).distinct}")
   }
 }

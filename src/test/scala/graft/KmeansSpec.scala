@@ -142,4 +142,51 @@ class KmeansSpec extends AnyFunSuite {
     assert(rows.nonEmpty && rows.length <= 2)
     assert(rows.forall(!_.isNullAt(1)))
   }
+
+  test("driver kmeansFit == Spark kmeansFit bit for bit (ties, nulls, empty clusters, k <= 64 and k > 64)") {
+    def fits(emb: org.apache.spark.sql.DataFrame, k: Int, iters: Int): Unit = {
+      val spark = Similarity.kmeansFitSpark(emb, k, iters, "vec_id", "embedding", "kmeans", 6, 8)
+      val driver = Similarity.kmeansFitDriver(emb, k, iters, "vec_id", "embedding", "kmeans", 6, 8)
+      assert(driver.isDefined, s"k=$k iters=$iters fell back")
+      val what = s"k=$k iters=$iters"
+      assert(driver.get.schema === spark.schema, what)
+      // Float.toString is the shortest string that names the float exactly
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(rows(driver.get) === rows(spark), what)
+      spark.unpersist()
+    }
+    val rnd = new scala.util.Random(5)
+    def unit(d: Int) = {
+      val v = Array.fill(d)(rnd.nextFloat() - 0.5f)
+      val n = math.sqrt(v.map(x => x.toDouble * x).sum).toFloat
+      v.map(_ / n)
+    }
+    // 300 random rows (with nulls, a short vector and an empty one), plus
+    // exact duplicates whose sims tie
+    val base = (0L until 300L).map { i =>
+      i -> (if (i % 37 == 0) None else if (i == 5) Some(unit(3)) else if (i == 7)
+        Some(Array.empty[Float]) else Some(unit(8)))
+    }
+    val dup = unit(8)
+    val mixed = embDf(base ++ (300L until 320L).map(i => i -> Some(dup)))
+    for (k <- Seq(1, 5, 64, 65, 100); iters <- Seq(0, 1, 2)) fits(mixed, k, iters)
+    // four identical vectors: every row ties to the lower id, the other
+    // cluster empties out of the refit
+    fits(embDf((0L to 3L).map(i => i -> Some(Array(0.6f, 0.8f)))), 2, 2)
+    // k > N, and an empty input
+    fits(embDf(Seq(0L -> Some(Array(1f, 0f)), 1L -> Some(Array(0f, 1f)))), 70, 2)
+    fits(embDf(Seq.empty), 3, 1)
+    // every init centroid without a vector: the packed (k <= 64) form sends
+    // each row to the lowest id, the bulk form (k > 64) gives a NULL cell
+    val byHash = (0L until 200L).sortBy(i =>
+      graft.operators.Dedup.hash60Local(s"kmeans:$i"))
+    for (k <- Seq(1, 65)) {
+      val nulls = byHash.take(k).map(_ -> Option.empty[Array[Float]])
+      val live = byHash.slice(k, k + 10).map(_ -> Some(unit(4)))
+      fits(embDf(nulls ++ live), k, 2)
+    }
+    // a vector the decimal mean would null out keeps the Spark loop
+    assert(Similarity.kmeansFitDriver(embDf(Seq(0L -> Some(Array(Float.NaN, 1f)))),
+      1, 1, "vec_id", "embedding", "kmeans", 6, 8).isEmpty)
+  }
 }

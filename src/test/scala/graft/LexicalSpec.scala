@@ -74,4 +74,23 @@ class LexicalSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1)))
     assert(got.toSet === Set((1L, "a b"), (1L, "b c"))) // 1-token doc yields none
   }
+
+  test("index artifacts are bit-identical across builds of differently partitioned input") {
+    val docs = Tables(spark, TestSpark.sfDir, "documents").select(col("doc_id"), col("text"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def build(parts: Int) = {
+      val in = docs.repartition(parts, col("text"))
+      val dir = java.nio.file.Files.createTempDirectory("graft_lexrepro").toString
+      val uni = Lexical.writeIndex(spark, in, "doc_id", "text", s"$dir/uni")
+      val ng = Lexical.writeIndexNgrams(spark, in, "doc_id", "text", 1, 3, s"$dir/ng")
+      val thirds = in.filter(col("doc_id") % 3 === 0)
+      val multi = Lexical.writeMultiIndex(spark,
+        Seq(("a", in, "doc_id", "text"), ("b", thirds, "doc_id", "text")), s"$dir/multi")
+      Seq(uni.stats, uni.vectors, ng.stats, ng.vectors, multi.stats, multi.vectors).map(rows)
+    }
+    val (one, seven) = (build(1), build(7))
+    for ((name, i) <- Seq("unigram stats", "unigram vectors", "ngram stats", "ngram vectors",
+        "multi stats", "multi vectors").zipWithIndex)
+      assert(one(i) === seven(i), name)
+  }
 }

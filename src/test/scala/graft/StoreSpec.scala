@@ -8,6 +8,8 @@ import graft.sources.{ForkFreeLocalFileSystem, Store}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -104,6 +106,132 @@ class StoreSpec extends AnyFunSuite {
     }
     fs.setPermission(new Path(dir.toUri), perm("1755"))
     assert(mode(dir) === Integer.parseInt("1755", 8))
+  }
+
+  /** A 179-cell store (the 2k x d=64 build's nlist) of 2,000 rows, written
+    * as the dense build writes its cell stores, and the written schema. */
+  private def cellStore(): (String, org.apache.spark.sql.types.StructType) = {
+    val rows = spark.range(2000).select(col("id").as("vec_id"),
+      (col("id") % 179).cast("int").as("cluster"),
+      array((0 until 4).map(i => (col("id") * (i + 1) % 97).cast("float")): _*).as("v"))
+    val path = Files.createTempDirectory("graft_read").resolve("cells").toString
+    Store.writeClustered(rows, path, "cluster")
+    (path, rows.schema)
+  }
+
+  /** The jobs `body` starts, counted by a listener on this thread's group. */
+  private def jobsOf[A](body: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    val group = s"store-read-${System.nanoTime}"
+    val n = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => n.add(p.getProperty("callSite.short")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val out = body
+      sc.setJobDescription("marker")
+      spark.range(1).count() // events arrive in job order: the marker's is last
+      (out, n.asScala.toSeq.dropRight(1))
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  private def sortedRows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+
+  test("Store.read of a 179-cell store runs no job and reads as spark.read.parquet reads") {
+    val (path, schema) = cellStore()
+    val stock = spark.read.parquet(path)
+    for (given <- Seq(Some(schema), None)) {
+      val (read, jobs) = jobsOf(Store.read(spark, path, given))
+      assert(jobs.isEmpty, s"schema=$given")
+      assert(read.schema === stock.schema, s"schema=$given")
+      assert(sortedRows(read) === sortedRows(stock), s"schema=$given")
+    }
+    // a cell predicate prunes to that cell's directory, as the stock read does
+    val five = Store.read(spark, path, Some(schema)).filter(col("cluster") === 5)
+    assert(five.queryExecution.executedPlan.toString.contains("PartitionFilters: [isnotnull(cluster"))
+    val files = five.select(input_file_name()).distinct().collect().map(_.getString(0))
+    assert(files.length === 1 && files.head.contains("/cluster=5/"))
+    assert(sortedRows(five) === sortedRows(stock.filter(col("cluster") === 5)))
+  }
+
+  test("Store.read failure paths read or fail as spark.read.parquet does") {
+    def condition(body: => Any): String =
+      try { body; "no error" } catch {
+        case e: org.apache.spark.SparkThrowable => e.getCondition
+        case e: Exception => Option(e.getCause).collect {
+          case c: org.apache.spark.SparkThrowable => c.getCondition
+        }.getOrElse(e.getClass.getName)
+      }
+    val tmp = Files.createTempDirectory("graft_readfail")
+    // a missing path: the stock reader's named error, message and all
+    val missing = s"$tmp/none"
+    val stockErr = intercept[AnalysisException](spark.read.parquet(missing))
+    val err = intercept[AnalysisException](Store.read(spark, missing))
+    assert(err.getCondition === "PATH_NOT_FOUND")
+    assert(err.getMessage === stockErr.getMessage)
+    // a directory with no data file: schema-less, the stock inference error;
+    // with the written schema, an empty frame of that schema
+    val (path, schema) = cellStore()
+    val empty = Files.createDirectories(tmp.resolve("empty/cluster=3"))
+    assert(condition(Store.read(spark, empty.getParent.toString)) ===
+      condition(spark.read.parquet(empty.getParent.toString)))
+    assert(condition(Store.read(spark, empty.getParent.toString)) === "UNABLE_TO_INFER_SCHEMA")
+    val none = Store.read(spark, empty.getParent.toString, Some(schema))
+    assert(none.count() === 0 &&
+      none.schema === spark.read.schema(schema).parquet(empty.getParent.toString).schema)
+    // an empty cell directory and a cell whose parquet file was deleted
+    // (its .crc left behind) read as the stock reader reads them
+    Files.createDirectories(Paths.get(path, "cluster=999"))
+    val cell7 = Paths.get(path, "cluster=7")
+    Files.list(cell7).iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .foreach(Files.delete)
+    val stock = spark.read.parquet(path)
+    for (given <- Seq(Some(schema), None)) {
+      val read = Store.read(spark, path, given)
+      assert(read.schema === stock.schema)
+      assert(sortedRows(read) === sortedRows(stock))
+      assert(read.filter(col("cluster") === 7).count() === 0)
+    }
+    // a streaming sink's root reads its committed files from the
+    // `_spark_metadata` log (here: none), as the stock reader does
+    Files.createDirectories(Paths.get(path, "_spark_metadata"))
+    assert(Store.read(spark, path, Some(schema)).count() ===
+      spark.read.schema(schema).parquet(path).count())
+    // a file deleted after the frame was made fails its scan with the
+    // stock reader's named error
+    val (stale, _) = cellStore()
+    val (viaStore, viaStock) = (Store.read(spark, stale), spark.read.parquet(stale))
+    Files.list(Paths.get(stale, "cluster=11")).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).foreach(Files.delete)
+    val failed = condition(viaStore.collect())
+    assert(failed === condition(viaStock.collect()))
+    assert(failed.startsWith("FAILED_READ_FILE"), failed)
+  }
+
+  test("ForkFreeLocalFileSystem statuses equal the stock statuses, read without forking") {
+    val (path, _) = cellStore()
+    val conf = new Configuration()
+    val stock = new org.apache.hadoop.fs.LocalFileSystem
+    stock.initialize(java.net.URI.create("file:///"), conf)
+    val ff = new ForkFreeLocalFileSystem
+    ff.initialize(java.net.URI.create("file:///"), conf)
+    val cell = new Path(s"$path/cluster=5")
+    val file = ff.listStatus(cell).head.getPath
+    for (p <- Seq(new Path(path), cell, file)) {
+      val (a, b) = (ff.getFileStatus(p), stock.getFileStatus(p))
+      assert(a === b) // FileStatus equality is the path
+      assert((a.getLen, a.isDirectory, a.getReplication, a.getBlockSize, a.getModificationTime,
+        a.getPermission, a.getOwner, a.getGroup) === ((b.getLen, b.isDirectory,
+        b.getReplication, b.getBlockSize, b.getModificationTime, b.getPermission,
+        b.getOwner, b.getGroup)), p)
+      assert(ff.listStatus(p).map(_.getPath).toSeq === stock.listStatus(p).map(_.getPath).toSeq)
+    }
+    intercept[java.io.FileNotFoundException](ff.getFileStatus(new Path(s"$path/none")))
+    intercept[java.io.FileNotFoundException](ff.listStatus(new Path(s"$path/none")))
   }
 
   test("partitioned write prunes non-matching clusters at scan time") {

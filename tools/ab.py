@@ -20,6 +20,10 @@ the number of seeds on which the change was better, and a verdict:
                 bound, so these runs cannot tell (unless every change run
                 is better than every parent run: then `inside`)
 
+and, next to it, `gain` when the runs show a gain: the change is better on
+at least nine tenths of the pairs (a tie counts for neither side) and the
+medians differ, in the better direction, by more than the parent's q3 - q1.
+
 Each side's operation counts (attempted, failed) and correct runs close the
 report. The quartiles are `statistics.quantiles(n=4)`, as in
 perfbench/spread.py.
@@ -79,6 +83,15 @@ def main():
     report(spec, workload, seeds, recs)
 
 
+def gain(parent, change, lower):
+    """The change wins >= 9/10 of the pairs (ties count for neither side) and
+    its median beats the parent's by more than the parent's q3 - q1."""
+    wins = sum((c < p) if lower else (c > p) for p, c in zip(parent, change))
+    q = statistics.quantiles(parent, n=4)
+    diff = statistics.median(parent) - statistics.median(change)
+    return 10 * wins >= 9 * len(parent) and (diff if lower else -diff) > q[2] - q[0]
+
+
 def report(spec, workload, seeds, recs):
     print(f"\n{workload}, {len(seeds)} pairs (seeds {' '.join(map(str, seeds))})")
     print(f"{'metric':>18} {'parent q1/med/q3':>26} {'change q1/med/q3':>26}"
@@ -99,6 +112,8 @@ def report(spec, workload, seeds, recs):
             verdict = f"worse (bound {bound})"
         else:
             verdict = f"inside (bound {bound})"
+        if gain(xs["parent"], xs["change"], lower):
+            verdict += " gain"
         cols = " ".join(f"{stats[s][0][0]:>8.4g}/{stats[s][1]:<8.4g}/{stats[s][0][2]:<8.4g}"
                         for s in ("parent", "change"))
         print(f"{name:>18} {cols} {rel:>+8.1%} {wins:>3}/{len(seeds)}  {verdict}")
