@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** The §1 corpus: keyframe fact table + embedding column table + shot
   * hierarchy (FIXTURES.md §A schemas). `embeddings` may carry one or two
-  * model columns (clip / clipv2), both `ARRAY<FLOAT>`, L2-normalized. */
+  * model columns (clip / clipv2), both `ARRAY<FLOAT>`, L2-normalized;
+  * every embedding id is a keyframe id. */
 case class Corpus(
   keyframes: DataFrame, // id, collection, video_id, shot_id, ..., partition_tag
   embeddings: DataFrame, // id, clip [, clipv2]
@@ -71,33 +72,58 @@ class SearchEngine(
       s"$channel query vector has dim ${qv.length} but the corpus encodes dim $dim " +
         "— the query was encoded by a different model")
 
-  private def candidates(f: Filters): DataFrame = {
-    var kf = corpus.keyframes
-    f.partitionTag.foreach(p => kf = kf.filter(col("partition_tag") === p))
-    f.videos.foreach(vs => kf = kf.filter(col("video_id").isin(vs: _*)))
-    f.ids.foreach { ids =>
-      kf = Candidates.restrictTo(kf,
-        kf.sparkSession.createDataFrame(ids.map(Tuple1(_))).toDF("id"), "id")
+  /** The keyframes the request's id, partition and video filters keep;
+    * None when it sets none of them. */
+  private def restricted(f: Filters): Option[DataFrame] =
+    if (f.ids.isEmpty && f.partitionTag.isEmpty && f.videos.isEmpty) None
+    else {
+      var kf = corpus.keyframes
+      f.partitionTag.foreach(p => kf = kf.filter(col("partition_tag") === p))
+      f.videos.foreach(vs => kf = kf.filter(col("video_id").isin(vs: _*)))
+      f.ids.foreach { ids =>
+        kf = Candidates.restrictTo(kf,
+          kf.sparkSession.createDataFrame(ids.map(Tuple1(_))).toDF("id"), "id")
+      }
+      Some(kf)
     }
-    if (f.ignoreIds.nonEmpty) {
-      // F3: each ignored keyframe expands to its whole shot (app.py:192-203)
-      val ign = kf.sparkSession.createDataFrame(f.ignoreIds.map(Tuple1(_))).toDF("id")
+
+  /** F3: the ids of every ignored keyframe's whole shot (app.py:192-203);
+    * None when the request ignores nothing. */
+  private def ignored(f: Filters): Option[DataFrame] =
+    if (f.ignoreIds.isEmpty) None
+    else {
+      val ign = corpus.keyframes.sparkSession
+        .createDataFrame(f.ignoreIds.map(Tuple1(_))).toDF("id")
       val ignShots = corpus.keyframes.join(ign, Seq("id"))
         .select(col("video_id"), col("shot_id")).distinct()
-      val expanded = corpus.keyframes
+      Some(corpus.keyframes
         .join(broadcast(ignShots), Seq("video_id", "shot_id"))
-        .select(col("id"))
-      kf = Candidates.exclude(kf, expanded, "id")
+        .select(col("id")))
     }
-    kf
+
+  private def candidates(f: Filters): DataFrame = {
+    val kf = restricted(f).getOrElse(corpus.keyframes)
+    ignored(f).fold(kf)(Candidates.exclude(kf, _, "id"))
   }
+
+  /** At most `rows` scored `(id, score)` rows -> `video_id` attached ->
+    * A4 grouping. The rows are cut again after the `video_id` join (a
+    * top-`rows` that keeps every row): the cut hands the grouping one
+    * partition, so it and its ordering run in the final job with no
+    * shuffle of their own. */
+  private def grouped(scored: DataFrame, rows: Int): DataFrame =
+    GroupShaping.groupResults(
+      scored.withColumn("score", round(col("score"), 6))
+        .join(corpus.keyframes.select("id", "video_id"), Seq("id"))
+        .orderBy(col("score").desc, col("id"))
+        .limit(rows),
+      groupCol = "video_id", idCol = "id", scoreCol = "score")
 
   private def scoreChannel(cands: DataFrame, vecCol: String, qv: Array[Float], k: Int) =
     corpus.embeddings
-      .join(cands.select("id", "video_id"), Seq("id"))
+      .join(cands.select("id"), Seq("id"), "left_semi")
       .withColumn("qv", lit(qv))
-      .select(col("id"), col("video_id"),
-        round(VectorOps.dot(col(vecCol), col("qv")), 6).as("score"))
+      .select(col("id"), round(VectorOps.dot(col(vecCol), col("qv")), 6).as("score"))
       .orderBy(col("score").desc, col("id"))
       .limit(k)
 
@@ -109,17 +135,9 @@ class SearchEngine(
     requireDim(queryVec, clipDim, "clip")
     queryVec2.foreach(requireDim(_, clipv2Dim, "clipv2"))
     val cands = candidates(filters)
-    val ch1 = scoreChannel(cands, "clip", queryVec, k)
-    val fused = queryVec2 match {
-      case Some(q2) =>
-        Fusion.fuseByAddition(Seq(ch1.drop("video_id"),
-            scoreChannel(cands, "clipv2", q2, k).drop("video_id")))
-          .join(corpus.keyframes.select("id", "video_id"), Seq("id"))
-      case None => ch1
-    }
-    GroupShaping.groupResults(
-      fused.withColumn("score", round(col("score"), 6)),
-      groupCol = "video_id", idCol = "id", scoreCol = "score")
+    val channels = scoreChannel(cands, "clip", queryVec, k) +:
+      queryVec2.toSeq.map(scoreChannel(cands, "clipv2", _, k))
+    grouped(Fusion.fuseByAddition(channels), channels.size * k)
   }
 
   /** /imgsearch: dense search seeded by a STORED embedding (query-by-id,
@@ -129,14 +147,12 @@ class SearchEngine(
   def imageSearch(imgId: Long, k: Int, filters: Filters = Filters()): DataFrame = {
     val qv = corpus.embeddings.filter(col("id") === imgId)
       .select(col("clip").as("qv"))
-    val scored = corpus.embeddings
-      .join(candidates(filters).select("id", "video_id"), Seq("id"))
+    grouped(corpus.embeddings
+      .join(candidates(filters).select("id"), Seq("id"), "left_semi")
       .crossJoin(broadcast(qv))
-      .select(col("id"), col("video_id"),
-        round(VectorOps.dot(col("clip"), col("qv")), 6).as("score"))
+      .select(col("id"), round(VectorOps.dot(col("clip"), col("qv")), 6).as("score"))
       .orderBy(col("score").desc, col("id"))
-      .limit(k)
-    GroupShaping.groupResults(scored, "video_id", "id", "score")
+      .limit(k), k)
   }
 
   /** Per-request probe depth: an explicit request value wins; otherwise
@@ -148,65 +164,32 @@ class SearchEngine(
   private def resolveNprobe(nprobe: Option[Int], index: Similarity.DenseIndex): Int =
     nprobe.orElse(index.defaultNprobe).getOrElse(2)
 
-  /** The index's coarse probe for one query vector: [[Similarity.probe]]
-    * ranks the driver-cached centroid table (zero jobs per request once
-    * warm) or, for a hierarchy-carrying index, the cached L1 table at the
-    * index's calibrated `default_nprobe_l1` (full L1 probe — flat parity —
-    * when uncalibrated) plus one pruned L2 job. A caller overriding the L1
-    * depth per request passes `index.copy(defaultNprobeL1 = Some(n))` —
-    * DenseIndex is the knob carrier, same as the persisted nprobe default. */
-  private def probe(index: Similarity.DenseIndex, qv: Array[Float], nprobe: Int): Seq[Int] =
-    Similarity.probe(index.centroids, index.hierarchy, Seq(0L -> qv),
-      index.defaultNprobeL1, nprobe).flatMap(_._2)
-
-  /** Broadcast the probed-and-scored side only when the probe fraction
-    * bounds it: scored carries ~N*nprobe/nlist (id, score) rows, which is
-    * corpus-linear at a fixed fraction and equals the WHOLE corpus at
-    * full probe (nprobe >= nlist — the documented exact-parity mode). An
-    * unconditional hint bypasses autoBroadcastJoinThreshold and can drive
-    * the build into the 8 GB broadcast ceiling on large corpora; past a
-    * quarter of the cells we drop the hint and let AQE pick the join
-    * strategy from the measured scored size instead. */
-  private def maybeBroadcastScored(
-      scored: DataFrame, probedCount: Int, nlist: Int): DataFrame =
-    if (probedCount.toLong * 4L <= nlist.toLong) broadcast(scored) else scored
-
-  /** One index-backed dense channel: probe the fitted centroid artifact
-    * driver-side ([[probe]] — the FAISS coarse-quantizer analog), scan
-    * ONLY the probed cells' partitions of the persisted
-    * cell-partitioned corpus (literal `PartitionFilters`), apply the
-    * request's candidate set on the pruned rows, exact-rescore, top-k.
-    * The index must be built over THIS corpus's embeddings
-    * (`id`/`vecCol` schema) — [[Similarity.kmeansFit]] +
-    * [[Similarity.assignCells]] + [[graft.sources.Store.writePartitioned]]
-    * at build time. */
-  private def annChannel(
-      index: Similarity.DenseIndex, vecCol: String, qv: Array[Float],
-      k: Int, nprobe: Int, cands: DataFrame): DataFrame = {
-    val probed = probe(index, qv, nprobe)
-    // SCORE FIRST, JOIN LATE (the r15 flagship serving lever): the
-    // pruned cells carry d-float vectors, so joining them against the
-    // corpus-scale candidate table BEFORE scoring pushes ~(N*nprobe/
-    // nlist) x d floats through the join — past the broadcast threshold
-    // at 1M x d=768 (~15 MB), i.e. a corpus-wide SMJ shuffle per
-    // request (measured: the whole 4->8-thread throughput collapse in
-    // the first flagship mix run). Projecting the probed rows to
-    // (id, score) first makes the scored side request-bounded
-    // (~N*nprobe/nlist x 12 bytes — the same driver-scale class as the
-    // coarse probe) and explicitly broadcastable, so the candidate side
-    // streams map-only with no shuffle. The candidate restriction still
-    // lands BEFORE the top-k — semantics unchanged (SearchEngineSpec's
-    // full-probe-equals-exact pins it, filters and all).
-    val scored = index.cells.filter(col("cluster").isin(probed: _*))
-      .withColumn("qv", lit(qv))
-      .select(col("id"),
-        round(VectorOps.dot(col(vecCol), col("qv")), 6).as("score"))
-    val nlist = Similarity.quantizer(index.centroids, index.hierarchy).nlist
-    maybeBroadcastScored(scored, probed.size, nlist).join(cands, Seq("id"))
-      .select(col("id"), col("video_id"), col("score"))
-      .orderBy(col("score").desc, col("id"))
-      .limit(k)
+  /** One query vector as the single-row `(qv)` frame the dense core takes:
+    * a local frame, which the core reads and meets as a literal, with no
+    * Spark job. */
+  private def queryFrame(qv: Array[Float]): DataFrame = {
+    val spark = corpus.embeddings.sparkSession
+    import spark.implicits._
+    Seq(qv).toDF("qv")
   }
+
+  /** One index-backed dense channel: [[Similarity.ivfSearchPruned]] over
+    * the persisted index — the FAISS `index.search` analog — with the
+    * request's candidate set admitted inside the probed cells before the
+    * top-k cut (`faiss_processing.py:154-166`). An index-carried
+    * hierarchy probes two-level at its `default_nprobe_l1`; a caller
+    * overriding the L1 depth per request passes
+    * `index.copy(defaultNprobeL1 = Some(n))`. The index must be built over
+    * THIS corpus's embeddings (`id`/`vecCol` schema). Output `(id, score)`,
+    * score rounded at 6. */
+  private def ivfChannel(
+      index: Similarity.DenseIndex, vecCol: String, qv: Array[Float],
+      k: Int, nprobe: Option[Int], filters: Filters): DataFrame =
+    Similarity.ivfSearchPruned(index.cells, index.centroids, queryFrame(qv),
+      resolveNprobe(nprobe, index), k, idCol = "id", vecCol = vecCol,
+      restrictIds = restricted(filters).map(_.select("id")),
+      excludeIds = ignored(filters), roundTo = 6,
+      hierarchy = index.hierarchy, nprobeL1 = index.defaultNprobeL1)
 
   /** §3.1 /textsearch in INDEX-BACKED (ANN) mode: same request surface as
     * [[textSearch]] — k, per-request candidate filters, optional second
@@ -217,7 +200,8 @@ class SearchEngine(
     * `faiss_processing.py:154-166`). At full probe (nprobe >= cell count)
     * results equal [[textSearch]] exactly; at partial probe the scan
     * touches ~nprobe/cells of the corpus. `index2` serves the clipv2
-    * channel when `queryVec2` engages the dual-model fusion. */
+    * channel when `queryVec2` engages the dual-model fusion. A zero `k` or
+    * `nprobe` is refused by name. */
   def textSearchAnn(
       index: Similarity.DenseIndex,
       queryVec: Array[Float], k: Int,
@@ -229,29 +213,17 @@ class SearchEngine(
     queryVec2.foreach(requireDim(_, clipv2Dim, "clipv2"))
     require(queryVec2.isEmpty || index2.isDefined,
       "dual-model ANN needs the clipv2 channel's own fitted index (index2)")
-    val np = resolveNprobe(nprobe, index)
-    val cands = candidates(filters).select("id", "video_id")
-    val ch1 = annChannel(index, "clip", queryVec, k, np, cands)
-    val fused = queryVec2 match {
-      case Some(q2) =>
-        Fusion.fuseByAddition(Seq(ch1.drop("video_id"),
-            annChannel(index2.get, "clipv2", q2, k,
-              resolveNprobe(nprobe, index2.get), cands).drop("video_id")))
-          .join(corpus.keyframes.select("id", "video_id"), Seq("id"))
-      case None => ch1
-    }
-    GroupShaping.groupResults(
-      fused.withColumn("score", round(col("score"), 6)),
-      groupCol = "video_id", idCol = "id", scoreCol = "score")
+    val channels = ivfChannel(index, "clip", queryVec, k, nprobe, filters) +:
+      queryVec2.toSeq.map(ivfChannel(index2.get, "clipv2", _, k, nprobe, filters))
+    grouped(Fusion.fuseByAddition(channels), channels.size * k)
   }
 
-  /** §3.1 /textsearch served through the 1-BIT BINARY coarse tier (the
-    * facade form of [[Similarity.ivfBinaryRefineSearch]]): Hamming-rank
-    * the probed cells' SIGNATURE store (1 bit/dim — 32x less coarse IO
-    * than the float cells), exact-refine only the shortlist, apply the
-    * request's candidate filters BEFORE both cuts (the F1 discipline:
-    * kCoarse counts ADMISSIBLE candidates, so a tight filter cannot
-    * starve the refine), and group-shape like every facade search.
+  /** §3.1 /textsearch served through the 1-BIT BINARY coarse tier:
+    * [[Similarity.ivfBinaryRefineSearch]] Hamming-ranks the probed cells'
+    * signatures (1 bit/dim — 32x less coarse IO than the float cells) and
+    * exact-refines only the shortlist, with the request's candidate
+    * filters admitted BEFORE both cuts (the F1 discipline: kCoarse counts
+    * ADMISSIBLE candidates, so a tight filter cannot starve the refine).
     * `kCoarse` defaults to the index's CALIBRATED `default_kcoarse_bq`
     * — persisted by the build to meet its recall target at the
     * calibrated nprobe, so the default-knob request serves calibrated
@@ -269,64 +241,29 @@ class SearchEngine(
     val kc = kCoarse.orElse(index.defaultKCoarseBq).getOrElse(sys.error(
       "no kCoarse given and the index has no calibrated default_kcoarse_bq " +
         "— build with calibrateRecall or pass kCoarse explicitly"))
-    require(kc >= k, s"coarse shortlist $kc must cover final k=$k")
-    val spark = corpus.embeddings.sparkSession
-    val probed = probe(index, queryVec, resolveNprobe(nprobe, index))
-    val cands = candidates(filters).select("id", "video_id")
-    val qsig = broadcast(spark.range(1).select(lit(queryVec).as("qv"))
-      .select(Similarity.binarySig(col("qv")).as("qsig")))
-    // admissibility first (left-semi against the request's candidates),
-    // then the Hamming cut, then the exact refine of just the shortlist
-    val shortlist = bin.filter(col("cluster").isin(probed: _*))
-      .join(cands.select("id"), Seq("id"), "left_semi")
-      .crossJoin(qsig)
-      .select(col("id"),
-        Similarity.hammingSig(col("sig"), col("qsig")).as("ham"))
-      .orderBy(col("ham").asc, col("id").asc)
-      .limit(kc)
-    val scored = index.cells.filter(col("cluster").isin(probed: _*))
-      .join(broadcast(shortlist.select("id")), Seq("id"), "left_semi")
-      .withColumn("qv", lit(queryVec))
-      .select(col("id"),
-        round(VectorOps.dot(col("clip"), col("qv")), 6).as("score"))
-    val ranked = broadcast(scored).join(cands, Seq("id"))
-      .select(col("id"), col("video_id"), col("score"))
-      .orderBy(col("score").desc, col("id"))
-      .limit(k)
-    GroupShaping.groupResults(ranked, "video_id", "id", "score")
+    grouped(Similarity.ivfBinaryRefineSearch(bin, index.cells, index.centroids,
+      queryFrame(queryVec), resolveNprobe(nprobe, index), kc, k,
+      idCol = "id", vecCol = "clip", roundTo = 6,
+      restrictIds = restricted(filters).map(_.select("id")),
+      excludeIds = ignored(filters),
+      hierarchy = index.hierarchy, nprobeL1 = index.defaultNprobeL1), k)
   }
 
-  /** One PQ-served dense channel: ADC-score the probed cells' PERSISTED
-    * codes (M bytes/row — the scan-heavy stage never touches d-float
-    * vectors), shortlist `kCoarse` ADMISSIBLE candidates (the request's
-    * candidate set semi-joins the code scan BEFORE the cut — the F1
-    * discipline, so a tight filter cannot starve the refine), then fetch
-    * only the shortlist's original vectors from the same probed cell
-    * partitions and exactly re-score. OPQ basis discipline: probe raw,
-    * ADC rotated (`index.rotation`), exact refine raw. */
-  private def annPqChannel(
+  /** One PQ-served dense channel: [[Similarity.ivfPqRefineSearch]]
+    * ADC-scores the probed cells' persisted codes (M bytes/row), shortlists
+    * `kCoarse` ADMISSIBLE candidates (the request's candidate set is
+    * admitted BEFORE the cut — the F1 discipline) and exactly re-scores
+    * only the shortlist's original vectors. An OPQ index's `rotation`
+    * rotates the query for the ADC stage only. */
+  private def pqChannel(
       index: Similarity.DenseIndex, vecCol: String, qv: Array[Float],
-      k: Int, kc: Int, nprobe: Int, cands: DataFrame): DataFrame = {
-    val spark = corpus.embeddings.sparkSession
-    val probed = probe(index, qv, nprobe)
-    val qDf = spark.range(1).select(lit(qv).as("qv"))
-    val shortlist = Similarity.pqAdcScore(
-      index.codes.filter(col("cluster").isin(probed: _*))
-        .join(cands.select("id"), Seq("id"), "left_semi"),
-      index.codebooks,
-      Similarity.rotateQueries(qDf, index.rotation, index.numSub, index.subDim),
-      kc, index.numSub, index.subDim, idCol = "id")
-    val scored = index.cells.filter(col("cluster").isin(probed: _*))
-      .join(broadcast(shortlist.select("id")), Seq("id"), "left_semi")
-      .withColumn("qv", lit(qv))
-      .select(col("id"),
-        round(VectorOps.dot(col(vecCol), col("qv")), 6).as("score"))
-    // the scored side is kCoarse-bounded — request-sized by construction
-    broadcast(scored).join(cands, Seq("id"))
-      .select(col("id"), col("video_id"), col("score"))
-      .orderBy(col("score").desc, col("id"))
-      .limit(k)
-  }
+      k: Int, kCoarse: Int, nprobe: Option[Int], filters: Filters): DataFrame =
+    Similarity.ivfPqRefineSearch(index.cells, index.codes, index.codebooks,
+      index.centroids, queryFrame(qv), resolveNprobe(nprobe, index), kCoarse, k,
+      index.numSub, index.subDim, idCol = "id", vecCol = vecCol, roundTo = 6,
+      restrictIds = restricted(filters).map(_.select("id")),
+      excludeIds = ignored(filters), rotation = index.rotation,
+      hierarchy = index.hierarchy, nprobeL1 = index.defaultNprobeL1)
 
   /** §3.1 /textsearch served through the QUANTIZED store (VERDICT r17 #2
     * — the facade entry point for the 100 TB serving shape RECALL.md r17
@@ -335,15 +272,15 @@ class SearchEngine(
     * filters, optional second model channel — with the scan-heavy stage
     * reading M-byte PQ codes instead of d-float vectors and the corpus
     * floats touched for exactly `kCoarse` rows per channel. The probe
-    * dispatches two-level at the index's persisted calibrated
+    * runs two-level at the index's persisted calibrated
     * (default_nprobe_l1, default_nprobe) pair when the hierarchy is
-    * present ([[probe]]), flat otherwise. `kCoarse` defaults to
+    * present, flat otherwise. `kCoarse` defaults to
     * 16·k — the measured float-recall-parity multiple at the calibrated
     * pair on the 1M x d=768 / 84k-centroid store (RECALL.md r17:
     * ADC+refine at kCoarse=16k reaches the float path's 0.850@20);
     * indexes with a different quantization error profile pass their own.
-    * The index must carry codes with the facade id column
-    * (`id`, `cluster`, `m`, `code`) and its `numSub`/`subDim` geometry. */
+    * The index must carry a codes store keyed by the facade id column and
+    * its `numSub`/`subDim` geometry. */
   def textSearchAnnPq(
       index: Similarity.DenseIndex,
       queryVec: Array[Float], k: Int,
@@ -360,28 +297,16 @@ class SearchEngine(
       "this index carries no PQ codes store — build with buildDenseIndex " +
         "(or serve the float/binary paths)")
     val kc = kCoarse.getOrElse(16 * k)
-    require(kc >= k, s"coarse shortlist $kc must cover final k=$k")
-    val cands = candidates(filters).select("id", "video_id")
-    val ch1 = annPqChannel(index, "clip", queryVec, k, kc,
-      resolveNprobe(nprobe, index), cands)
-    val fused = queryVec2 match {
-      case Some(q2) =>
-        Fusion.fuseByAddition(Seq(ch1.drop("video_id"),
-            annPqChannel(index2.get, "clipv2", q2, k, kc,
-              resolveNprobe(nprobe, index2.get), cands).drop("video_id")))
-          .join(corpus.keyframes.select("id", "video_id"), Seq("id"))
-      case None => ch1
-    }
-    GroupShaping.groupResults(
-      fused.withColumn("score", round(col("score"), 6)),
-      groupCol = "video_id", idCol = "id", scoreCol = "score")
+    val channels = pqChannel(index, "clip", queryVec, k, kc, nprobe, filters) +:
+      queryVec2.toSeq.map(pqChannel(index2.get, "clipv2", _, k, kc, nprobe, filters))
+    grouped(Fusion.fuseByAddition(channels), channels.size * k)
   }
 
   /** Hybrid dense+sparse retrieval fused by reciprocal rank
     * ([[Fusion.fuseByRrf]], k0=60): the dense leg serves from the persisted
-    * ANN index ([[annChannel]] — probed centroids + pruned cell partitions),
-    * the keyword leg answers from the FITTED sparse index (term-pruned
-    * artifact reads via [[Lexical.bm25SearchIndexed]]), both legs honor the
+    * ANN index ([[ivfChannel]]), the keyword leg answers from the FITTED
+    * sparse index (term-pruned artifact reads via
+    * [[Lexical.bm25SearchIndexed]]), both legs honor the
     * same per-request candidate filters, and RRF merges by RANK — so BM25
     * magnitudes and cosine similarities fuse without any cross-channel
     * score calibration (the weakness of min-max addition fusion when
@@ -398,21 +323,14 @@ class SearchEngine(
       rrfK0: Int = 60): DataFrame = {
     requireDim(queryVec, clipDim, "clip")
     val spark = corpus.embeddings.sparkSession
-    val cands = candidates(filters).select("id", "video_id")
-    val chDense = annChannel(index, "clip", queryVec, k,
-        resolveNprobe(nprobe, index), cands)
-      .drop("video_id")
+    val chDense = ivfChannel(index, "clip", queryVec, k, nprobe, filters)
     val terms = raw"\w+".r.findAllIn(preprocess(keywordQuery).toLowerCase).toSeq
     val chSparse = Lexical.bm25SearchIndexed(spark, sparse, terms)
-      .join(cands.select("id"), Seq("id"))
+      .join(candidates(filters).select("id"), Seq("id"))
       .select(col("id"), round(col("score"), 6).as("score"))
       .orderBy(col("score").desc, col("id"))
       .limit(k)
-    GroupShaping.groupResults(
-      Fusion.fuseByRrf(Seq(chDense, chSparse), rrfK0)
-        .withColumn("score", round(col("score"), 6))
-        .join(corpus.keyframes.select("id", "video_id"), Seq("id")),
-      groupCol = "video_id", idCol = "id", scoreCol = "score")
+    grouped(Fusion.fuseByRrf(Seq(chDense, chSparse), rrfK0), 2 * k)
   }
 
   /** /imgsearch in INDEX-BACKED (ANN) mode: query-by-id against the
@@ -425,21 +343,16 @@ class SearchEngine(
       filters: Filters = Filters(),
       nprobe: Option[Int] = None): DataFrame = {
     // the stored query vector is ONE row by contract — collect it and
-    // serve it through [[annChannel]] (in-process probe, score first,
-    // join late). A missing id AND a stored-but-NULL vector both serve
-    // the empty shape (the pre-r16 lazy plan scored dot(clip, null) to
-    // null rows).
+    // serve it through [[ivfChannel]]. A missing id AND a stored-but-NULL
+    // vector both serve the empty shape (the pre-r16 lazy plan scored
+    // dot(clip, null) to null rows).
     val qvRows = corpus.embeddings.filter(col("id") === imgId)
       .select(col("clip")).limit(1).collect()
-    val ranked = qvRows.headOption.filter(!_.isNullAt(0)) match {
-      case None =>
-        corpus.keyframes
-          .select(col("id"), col("video_id"), lit(0.0d).as("score")).limit(0)
+    grouped(qvRows.headOption.filter(!_.isNullAt(0)) match {
+      case None => corpus.keyframes.select(col("id"), lit(0.0d).as("score")).limit(0)
       case Some(row) =>
-        annChannel(index, "clip", row.getSeq[Float](0).toArray, k,
-          resolveNprobe(nprobe, index), candidates(filters).select("id", "video_id"))
-    }
-    GroupShaping.groupResults(ranked, "video_id", "id", "score")
+        ivfChannel(index, "clip", row.getSeq[Float](0).toArray, k, nprobe, filters)
+    }, k)
   }
 
   /** §3.2 /panel: multi-channel sparse context search. `channels` maps a
@@ -468,12 +381,10 @@ class SearchEngine(
           Lexical.tfidfSearchMulti(spark,
             chans.map { case (ch, terms) => (ch, docs, "id", ch, terms) })
             .select(col("ch"), col("id"), round(col("score"), 6).as("score")))
-    val fused = fusedScores
+    grouped(fusedScores
       .withColumn("score", round(col("score"), 6))
       .orderBy(col("score").desc, col("id"))
-      .limit(k)
-      .join(corpus.keyframes.select("id", "video_id"), Seq("id"))
-    GroupShaping.groupResults(fused, "video_id", "id", "score")
+      .limit(k), k)
   }
 
   /** §3.2 /panel against a FITTED multi-channel index
@@ -498,13 +409,11 @@ class SearchEngine(
     val fusedScores =
       if (channels.sizeIs == 1) scored.drop("ch")
       else Fusion.fuseByAdditionKeyed(scored)
-    val fused = fusedScores
+    grouped(fusedScores
       .join(candidates(filters).select(col("id")), Seq("id"), "left_semi")
       .withColumn("score", round(col("score"), 6))
       .orderBy(col("score").desc, col("id"))
-      .limit(k)
-      .join(corpus.keyframes.select("id", "video_id"), Seq("id"))
-    GroupShaping.groupResults(fused, "video_id", "id", "score")
+      .limit(k), k)
   }
 
   /** §3.2 /panel from RAW query strings: each channel's query text runs

@@ -3,6 +3,9 @@ package graft.operators
 import graft.functions.VectorOps
 import graft.sources.Store
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.functions._
 
 /** Dense similarity search (the reference's J1: 1xd query vs Nxd corpus exact
@@ -630,33 +633,6 @@ object Similarity {
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
 
-  /** IVF-style cluster-pruned ANN: rank clusters by centroid similarity to
-    * the query, keep `nprobe`, search only those clusters' rows. With the
-    * corpus partitioned/bucketed by `clusterCol` this is partition pruning —
-    * the relational analog of FAISS IVF `nprobe` (SURVEY §4.2): the scan
-    * touches nprobe/k of the data.
-    *
-    * `centroids` must have (`clusterCol`, `cv ARRAY<FLOAT>`); tiny, broadcast.
-    */
-  def ivfSearch(
-      emb: DataFrame,
-      centroids: DataFrame,
-      queryDf: DataFrame,
-      nprobe: Int,
-      k: Int,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      clusterCol: String = "label"): DataFrame = {
-    val probed = centroids.crossJoin(broadcast(queryDf))
-      .select(col(clusterCol),
-        round(VectorOps.dot(col("cv"), col("qv")), 6).as("cscore"))
-      .orderBy(col("cscore").desc, col(clusterCol).asc)
-      .limit(nprobe)
-      .select(col(clusterCol))
-    knnExact(emb.join(broadcast(probed), Seq(clusterCol), "left_semi"),
-      queryDf, k, idCol, vecCol)
-  }
-
   /** Batch kNN join: for EVERY corpus row, the top-k most similar rows of a
     * small broadcast `seeds` relation (`seed_id`, `sv`) — the k-means assign
     * step / IVF cell assignment / label-propagation primitive. The seed set
@@ -711,44 +687,6 @@ object Similarity {
       .agg(topk)
       .flatMap { case (qid, top) => top.map(e => (qid, e.id, e.score)) }
       .toDF("query_id", idName, scoreName)
-  }
-
-  /** Batch IVF serving: [[ivfSearch]] for EVERY query of a broadcast
-    * `(query_id, qv)` batch in ONE corpus pass. Per-query cluster ranking
-    * happens on the (tiny) centroids x queries product; the corpus then
-    * inner-joins the probed `(cluster, query_id)` pairs — each corpus row
-    * is scored once per query PROBING ITS CLUSTER, so scored volume is
-    * bounded by `nprobe/n_clusters` of corpus x queries; per-query top-k
-    * runs through the bounded [[graft.functions.TopKAggregator]] like
-    * [[knnBatch]]. With cluster-partitioned storage the cluster join
-    * becomes partition pruning to the union of probed cells. */
-  def ivfSearchBatch(
-      emb: DataFrame,
-      centroids: DataFrame,
-      queries: DataFrame,
-      nprobe: Int,
-      k: Int,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      clusterCol: String = "label"): DataFrame = {
-    val byQuery = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cscore").desc, col(clusterCol).asc)
-    // centroids x queries is n_clusters x batch rows — tiny; the ranking
-    // window runs on that, never on corpus-sized data
-    val probed = centroids.crossJoin(broadcast(queries))
-      .select(col("query_id"), col(clusterCol),
-        round(VectorOps.dot(col("cv"), col("qv")), 6).as("cscore"))
-      .withColumn("__rn", row_number().over(byQuery))
-      .filter(col("__rn") <= nprobe)
-      .select(col("query_id"), col(clusterCol))
-    topKPerQuery(
-      emb
-        .join(broadcast(probed), Seq(clusterCol))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col(idCol),
-          round(VectorOps.dot(col(vecCol), col("qv")), 4).as("sim")),
-      k, idCol, "sim")
   }
 
   /** Batch kNN serving: top-k corpus rows for EACH query of a small
@@ -1229,25 +1167,11 @@ object Similarity {
     spark.createDataFrame(out, outSchema)
   }
 
-  /** PQ ADC (asymmetric distance computation) search: the query stays exact;
-    * each subspace contributes `dot(q_m, codebook[m][code])` from a
-    * broadcast M x K lookup table, summed per row (decimal-exact, engine-
-    * portable) — approximate inner-product top-k over codes alone, never
-    * touching the original vectors at query time. Composes with
-    * [[ivfSearch]] cluster pruning for the full IVF-PQ scale path. */
-  def pqSearch(
-      emb: DataFrame, queryDf: DataFrame, k: Int,
-      numSub: Int = 8, subDim: Int = 8, numCentroids: Int = 16,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cb = pqCodebooks(emb, numSub, subDim, numCentroids, idCol, vecCol)
-    pqAdcScore(pqEncode(emb, cb, numSub, subDim, idCol, vecCol),
-      cb, queryDf, k, numSub, subDim, idCol)
-  }
-
   /** ADC scoring over precomputed codes: build the M x K query lookup table
     * (broadcast), sum each row's M table entries (decimal-exact), top-k.
-    * Separated from [[pqSearch]] so cluster pruning can restrict WHICH rows
-    * are scored while codebooks stay a whole-corpus build artifact.
+    * It scores whatever codes it is handed, so cluster pruning can restrict
+    * WHICH rows are scored while codebooks stay a whole-corpus build
+    * artifact ([[pqEncode]] writes the codes).
     *
     * `queryDf` is either a single query (`qv` only — top-k returned as
     * `(idCol, score)`) or a batch carrying a LongType `query_id` column —
@@ -1821,9 +1745,10 @@ object Similarity {
   /** Lloyd k-means over an embeddings relation (spherical: max-inner-product
     * assignment). This is the `index.train()` step FAISS IVF/PQ presupposes
     * and the reference never runs — it stays flat-exact (reference
-    * `create_bin.ipynb` cell 3) — but the engine's own [[ivfSearch]] /
-    * [[ivfSearchBatch]] / IVF-cell-partitioned storage lean on centroids
-    * existing; this produces them from unlabeled embeddings.
+    * `create_bin.ipynb` cell 3) — but the engine's IVF serving core
+    * ([[ivfSearchPruned]] and its siblings) and its cell-partitioned
+    * storage lean on centroids existing; this produces them from
+    * unlabeled embeddings.
     *
     * Deterministic end-to-end, hence oracle-checkable:
     *  - init = the k corpus rows with the smallest engine-portable
@@ -1843,7 +1768,7 @@ object Similarity {
     * whole upstream as a separate job). An empty cluster drops out of the
     * refit exactly as a row-less group vanishes from a GROUP BY; callers
     * needing exactly k cells re-seed or lower k. Output: (`cluster` int,
-    * `cv ARRAY<FLOAT>`), the shape [[ivfSearch]]/[[pqAdcScore]] consume.
+    * `cv ARRAY<FLOAT>`), the shape [[assignCells]] and [[probe]] consume.
     *
     * The RETURNED frame is still persisted (k x d floats) — the caller owns
     * its lifetime: write it to the centroid artifact (or collect it) and
@@ -3175,7 +3100,8 @@ object Similarity {
     *  - the query side of [[probe]]: [[singleQuery]] vs [[batchQueries]]
     *    (flat centroids, or the two-level `hierarchy`);
     *  - meeting the query: a single query reaches the probed cells' rows
-    *    through a broadcast cross join; a batch joins them on the probed
+    *    as literal columns when it is a local frame, through a broadcast
+    *    cross join otherwise ([[scoreRows]]); a batch joins them on the probed
     *    `(query_id, cell)` pairs and then on `query_id`, so each row is
     *    scored only for the queries probing its cell;
     *  - shortlist hand-off: a left-semi join on the id vs a join on the
@@ -3241,19 +3167,36 @@ object Similarity {
     }
   }
 
-  /** Scores `rows` with codec `c` against the broadcast query side, joined
-    * on `on` plus the codec's lookup keys (a cross join when there are
-    * none); the output is the `by` columns and the score as `name`. */
+  /** Scores `rows` with codec `c` against the query side, broadcast and
+    * joined on `on` plus the codec's lookup keys. With no keys, a query
+    * side that is one driver-local row (a single query given as a local
+    * frame) is inlined as literal columns, which saves the broadcast job;
+    * any other side is met through a broadcast cross join. The output is
+    * the `by` columns and the score as `name`. */
   private def scoreRows(
       c: Codec, rows: DataFrame, queries: DataFrame,
       on: Seq[String], by: Seq[String], name: String): DataFrame = {
-    val side = broadcast(c.query(queries))
+    val side = c.query(queries)
     val keys = on ++ c.lookup
-    val met = if (keys.isEmpty) rows.crossJoin(side) else rows.join(side, keys)
+    val met =
+      if (keys.nonEmpty) rows.join(broadcast(side), keys)
+      else localRow(side).fold(rows.crossJoin(broadcast(side)))(rows.withColumns)
     if (c.lookup.isEmpty) met.select(by.map(col) :+ c.score.as(name): _*)
     else met.groupBy(by.map(col): _*)
       .agg(round(sum(c.score.cast("decimal(18,12)")).cast("double"), 6).as(name))
   }
+
+  /** The columns of a frame whose optimized plan is a one-row local
+    * relation, as literals; None for any other frame. */
+  private def localRow(df: DataFrame): Option[Map[String, Column]] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation if l.data.sizeIs == 1 =>
+        val row = l.data.head.copy()
+        Some(l.output.zipWithIndex.map { case (a, i) =>
+          a.name -> ColumnShim.column(Literal(row.get(i, a.dataType), a.dataType))
+        }.toMap)
+      case _ => None
+    }
 
   /** IVF serving against a cell-PARTITIONED corpus table (the persisted
     * [[assignCells]] output): probe driver-side ([[probe]]: flat, or
@@ -3318,18 +3261,10 @@ object Similarity {
       .filter(col("score") >= minScore)
       .orderBy(col("score").desc, col(idCol).asc)
 
-  /** Cell-pruned range search with an EXACT skip guarantee: for any row x
-    * in cell c, Cauchy-Schwarz gives
-    * `dot(q, x) = dot(q, mu_c) + dot(q, x - mu_c) <= dot(q, mu_c) +
-    * ||q|| * r_c` — no normalization assumption, no triangle-inequality
-    * detour through L2. Cells whose upper bound falls below
-    * `minScore - slack` cannot contain a hit and are skipped; the
-    * survivors are scanned with the usual literal `PartitionFilters`
-    * pruning and exact-rescored. The bound needs only the centroid table
-    * and the [[cellRadii]] artifact — a driver-scale pass, zero corpus
-    * bytes in planning. `slack` absorbs the reported-score rounding
-    * (round-half-up can lift a score by 0.5 * 10^-roundTo) plus float
-    * accumulation error, so pruned == flat [[rangeSearch]] exactly. */
+  /** Cell-pruned range search for one query: [[ivfRangeSearchBatchPruned]]
+    * run on a batch of one (`query_id` 0, dropped from the output), so the
+    * skip bound is written once. Output `(idCol, score)`, score desc, id
+    * asc; a zero-row or null-vector query returns no rows. */
   def ivfRangeSearchPruned(
       cells: DataFrame,
       centroids: DataFrame,
@@ -3339,31 +3274,26 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       clusterCol: String = "cluster",
-      roundTo: Int = 4): DataFrame = {
-    val slack = 0.5 * math.pow(10, -roundTo) + 1e-6
-    val probed = centroids
-      .join(broadcast(radii.select(col(clusterCol), col("radius"))), Seq(clusterCol))
-      .crossJoin(broadcast(queryDf))
-      .select(col(clusterCol),
-        (VectorOps.dot(col("cv"), col("qv")) +
-          sqrt(VectorOps.dot(col("qv"), col("qv"))) * col("radius")).as("ub"))
-      .filter(col("ub") >= minScore - slack)
-      .collect().map(_.getAs[Number](0).intValue).toSeq
-    val pruned =
-      if (probed.isEmpty) cells.filter(lit(false))
-      else cells.filter(col(clusterCol).isin(probed: _*))
-    rangeSearch(pruned, queryDf, minScore, idCol, vecCol, roundTo)
-  }
+      roundTo: Int = 4): DataFrame =
+    ivfRangeSearchBatchPruned(cells, centroids, radii,
+      queryDf.select(lit(0L).as("query_id"), col("qv")), minScore,
+      idCol, vecCol, clusterCol, roundTo)
+      .drop("query_id")
 
-  /** Batch form of exact range search: each query of a small
-    * `(query_id LONG, qv)` batch keeps its OWN admissible cell set under
-    * the [[ivfRangeSearchPruned]] Cauchy-Schwarz bound, and the whole
-    * batch runs as ONE scan of the union of surviving partitions (literal
-    * `PartitionFilters`), each row scored only against the queries whose
-    * bound admits its cell — a (query, cell) pair pruned here provably
-    * scores below `minScore`, so per-pair results equal the flat
-    * per-query [[rangeSearch]]. Planning is |queries| x nlist driver-side
-    * work over the centroid + radii artifacts, zero corpus bytes. */
+  /** Cell-pruned range search with an EXACT skip guarantee: for any row x
+    * in cell c, Cauchy-Schwarz gives
+    * `dot(q, x) = dot(q, mu_c) + dot(q, x - mu_c) <= dot(q, mu_c) +
+    * ||q|| * r_c` — no normalization assumption, no triangle-inequality
+    * detour through L2. Each query of a small `(query_id LONG, qv)` batch
+    * skips the cells whose upper bound falls below `minScore - slack`:
+    * they cannot contain a hit. The bound needs only the centroid table
+    * and the [[cellRadii]] artifact — |queries| x nlist driver-side work,
+    * zero corpus bytes in planning. `slack` absorbs the reported-score
+    * rounding (round-half-up can lift a score by 0.5 * 10^-roundTo) plus
+    * float accumulation error. The whole batch then runs as ONE scan of
+    * the union of surviving partitions (literal `PartitionFilters`), each
+    * row scored only against the queries whose bound admits its cell, so
+    * per-query results equal the flat [[rangeSearch]] exactly. */
   def ivfRangeSearchBatchPruned(
       cells: DataFrame,
       centroids: DataFrame,
@@ -3945,7 +3875,10 @@ object Similarity {
     * sign-Hamming rank is the Goemans-Williamson angle estimate (the
     * SimHash collision bound), so recall concentrates fast in kCoarse;
     * [[graft.SparkEntry]]'s `eval_bq_recall` measures it against the
-    * exact top-k rather than assuming it. */
+    * exact top-k rather than assuming it. `restrictIds`/`excludeIds`
+    * filter the Hamming stage's pruned signature scan
+    * ([[applyCandidateFilters]]), so `kCoarse` counts only admissible
+    * rows, as in [[ivfPqRefineSearch]]. */
   def ivfBinaryRefineSearch(
       binStore: DataFrame,
       cells: DataFrame,
@@ -3958,11 +3891,14 @@ object Similarity {
       vecCol: String = "embedding",
       clusterCol: String = "cluster",
       roundTo: Int = 4,
+      restrictIds: Option[DataFrame] = None,
+      excludeIds: Option[DataFrame] = None,
       hierarchy: Option[(DataFrame, DataFrame)] = None,
       nprobeL1: Option[Int] = None): DataFrame =
     ivfServe(queryDf, batch = false, centroids, hierarchy, nprobeL1, nprobe,
       ServePlan(Some((binaryCodec(binStore), kCoarse)),
-        exactCodec(cells, vecCol, roundTo), k, idCol, clusterCol))
+        exactCodec(cells, vecCol, roundTo), k, idCol, clusterCol,
+        applyCandidateFilters(_, idCol, restrictIds, excludeIds)))
 
   /** Batch form of [[ivfBinaryRefineSearch]]. */
   def ivfBinaryRefineSearchBatch(

@@ -86,9 +86,9 @@ object IncrementalIndex {
     * [[graft.operators.Similarity.assignCellsBulk]] primitive-loop kernel
     * past 64 cells — identical argmax, parity-pinned), and written
     * cell-PARTITIONED (plus the
-    * per-batch `batch_id=` idempotence partition), so an [[graft.operators.
-    * Similarity.ivfSearch]]-style probe over the accumulated store prunes
-    * to the probed cells' directories. The dense analog of
+    * per-batch `batch_id=` idempotence partition), so a
+    * [[graft.operators.Similarity.ivfSearchPruned]] probe over the
+    * accumulated store prunes to the probed cells' directories. The dense analog of
     * [[updatePostings]]: the reference re-runs its CLIP notebook over new
     * videos and re-merges `.npy` files; here arrival-to-searchable is one
     * checkpointed micro-batch.

@@ -106,20 +106,22 @@ class FusedPathParitySpec extends AnyFunSuite {
     assert(rows(fast) === rows(slow))
   }
 
-  test("ivfSearchBatch at full probe == exact knnBatch") {
+  test("ivfSearchBatchPruned at full probe == exact knnBatch") {
     val emb = Tables(spark, TestSpark.sfDir, "embeddings")
     val queries = emb.filter(col("vec_id").isin(0, 7))
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val cents = graft.operators.Similarity.centroids(emb)
+      .withColumnRenamed("label", "cluster")
+    val cells = graft.operators.Similarity.assignCells(emb, cents)
     val nClusters = cents.count().toInt
     val full = graft.operators.Similarity
-      .ivfSearchBatch(emb, cents, queries, nprobe = nClusters, k = 8)
+      .ivfSearchBatchPruned(cells, cents, queries, nprobe = nClusters, k = 8)
     val exact = graft.operators.Similarity.knnBatch(emb, queries, k = 8)
     assert(rows(full) === rows(exact))
     // and a partial probe returns a subset of the exact result's rows per
     // query (pruning can only remove candidates, never invent them)
     val part = graft.operators.Similarity
-      .ivfSearchBatch(emb, cents, queries, nprobe = 2, k = 8)
+      .ivfSearchBatchPruned(cells, cents, queries, nprobe = 2, k = 8)
     val exactAll = rows(graft.operators.Similarity.knnBatch(emb, queries, k = nClusters * 1000))
     assert(rows(part).subsetOf(exactAll))
   }
@@ -252,7 +254,7 @@ class FusedPathParitySpec extends AnyFunSuite {
       assert(codes((id, m)) === rank, s"seed $id (rank $rank) subspace $m")
     val anchor = seeds(3)
     val qv = emb.filter(col("vec_id") === anchor).select(col("embedding").as("qv"))
-    val top = Similarity.pqSearch(emb, qv, k = 5).collect()
+    val top = Similarity.pqAdcScore(Similarity.pqEncode(emb, cb, 8, 8), cb, qv, k = 5).collect()
     assert(top.head.getLong(0) === anchor) // exact reconstruction -> top score
   }
 
@@ -316,8 +318,9 @@ class FusedPathParitySpec extends AnyFunSuite {
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select("vec_id").collect().map(_.getLong(0)).toSet
     val exact = ids(Similarity.knnExact(emb, qv, 20))
-    val cents = Similarity.centroids(emb)
-    def ivf(np: Int) = ids(Similarity.ivfSearch(emb, cents, qv, np, 20))
+    val cents = Similarity.centroids(emb).withColumnRenamed("label", "cluster")
+    val cells = Similarity.assignCells(emb, cents)
+    def ivf(np: Int) = ids(Similarity.ivfSearchPruned(cells, cents, qv, np, 20))
     def recall(approx: Set[Long]) = approx.intersect(exact).size / 20.0
     // recall grows monotonically with nprobe and reaches EXACT at full probe
     val r = Seq(1, 2, 4, 10).map(np => np -> recall(ivf(np)))

@@ -332,6 +332,62 @@ class SearchEngineSpec extends AnyFunSuite {
     }
   }
 
+  /** The clip index with both quantized tiers: PQ codes plus the binary
+    * signature store, its calibrated kCoarse at corpus size. */
+  private lazy val quantizedIndex = withPq(clipIndex, "clip").copy(
+    binary = Some(graft.operators.Similarity.binaryEncodeCells(clipIndex.cells,
+      idCol = "id", vecCol = "clip")),
+    defaultKCoarseBq = Some(kfs.size))
+
+  test("ANN endpoints refuse a zero nprobe or k by name") {
+    val q = vec(kfs(3))
+    val calls: Seq[(String, (Option[Int], Int) => Any)] = Seq(
+      "textSearchAnn" -> ((np, k) => engine.textSearchAnn(quantizedIndex, q, k, nprobe = np)),
+      "imageSearchAnn" -> ((np, k) => engine.imageSearchAnn(quantizedIndex, 3L, k, nprobe = np)),
+      "textSearchAnnBinary" ->
+        ((np, k) => engine.textSearchAnnBinary(quantizedIndex, q, k, nprobe = np)),
+      "textSearchAnnPq" -> ((np, k) => engine.textSearchAnnPq(quantizedIndex, q, k, nprobe = np)))
+    for ((name, call) <- calls) {
+      val np0 = intercept[IllegalArgumentException](call(Some(0), 5))
+      assert(np0.getMessage.contains("nprobe must be positive"), s"$name: ${np0.getMessage}")
+      val k0 = intercept[IllegalArgumentException](call(Some(4), 0))
+      assert(k0.getMessage.contains("k must be positive"), s"$name: ${k0.getMessage}")
+    }
+  }
+
+  test("binary and PQ facades at kCoarse = k under a tight filter serve every admissible probed row up to k") {
+    import graft.operators.Similarity
+    val q = vec(kfs(3))
+    val k = 5
+    val nprobe = 3
+    val qDf = spark.range(1).select(lit(q).as("qv"))
+    val probed = Similarity.probe(clipIndex.centroids, None, Similarity.singleQuery(qDf),
+      None, nprobe).flatMap(_._2)
+    assert(probed.size === nprobe)
+    val cellOf = clipIndex.cells.select("id", "cluster").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    // admit rows of ONE probed cell only (the query's own best cell and the
+    // other probed cell are fully excluded) plus rows the probe never reaches
+    val keptCell = probed.tail.maxBy(c => cellOf.count(_._2 == c))
+    val kept = cellOf.collect { case (id, c) if c == keptCell => id }.toSeq.sorted
+    assert(kept.size > k, s"cell $keptCell holds ${kept.size} rows")
+    val unprobed = cellOf.collect { case (id, c) if !probed.contains(c) => id }.toSeq
+    for (allow <- Seq(kept.take(3), kept)) {
+      val filters = Filters(ids = Some(allow ++ unprobed))
+      val want = math.min(k, allow.size)
+      val binIds = engine.textSearchAnnBinary(quantizedIndex, q, k, filters,
+          nprobe = Some(nprobe), kCoarse = Some(k))
+        .collect().flatMap(_.getSeq[Long](2)).toSeq
+      val pqIds = engine.textSearchAnnPq(quantizedIndex, q, k, filters,
+          nprobe = Some(nprobe), kCoarse = Some(k))
+        .collect().flatMap(_.getSeq[Long](2)).toSeq
+      for ((path, ids) <- Seq("binary" -> binIds, "PQ" -> pqIds)) {
+        assert(ids.size === want, s"$path served ${ids.size} rows, want $want of ${allow.size}")
+        assert(ids.forall(allow.contains), s"$path served a row outside the admissible probed rows: $ids")
+      }
+    }
+  }
+
   test("dual-model textSearchAnnPq fuses two quantized channels") {
     val q = vec(kfs(3))
     val idx1 = withPq(clipIndex, "clip").copy(defaultNprobe = Some(4))

@@ -55,4 +55,14 @@ class SessionsSpec extends AnyFunSuite {
     finally walk.close()
     assert(holders === Set("Similarity.scala"))
   }
+
+  test("one dense serving path: SearchEngine names no cell column and runs no probe of its own") {
+    val src = Paths.get("src/main/scala/graft/api/SearchEngine.scala")
+    assert(Files.isRegularFile(src), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    val code = Files.readAllLines(src).asScala.map(_.trim).filterNot(l =>
+      l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+    val layout = code.filter(l => l.contains("\"cluster\"") ||
+      l.contains("Similarity.probe(") || l.contains("Similarity.quantizer("))
+    assert(layout.isEmpty, s"the facade reaches into the dense index layout:\n${layout.mkString("\n")}")
+  }
 }
